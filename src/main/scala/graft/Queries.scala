@@ -23,27 +23,45 @@ object Queries {
 
   case class QueryDef(build: (SparkSession, String) => DataFrame, oracle: Option[String])
 
-  /** Input-table schemas, inferred ONCE per (dir, table) and reused —
+  /** Input-table schemas, inferred ONCE per table version and reused —
     * the role a catalog/metastore plays in production (guide §6:
     * manifest metadata over re-derivation). Every `spark.read.parquet`
     * call otherwise launches a footer schema-inference job (~30 ms),
     * and the board's 197 queries pay it per table read per round —
-    * ~10 s of pure fixed cost at sf0.1. The test tables are immutable
-    * within a process; the cached schema IS the inferred one (first
-    * read still infers). Results are unchanged by construction. */
+    * ~10 s of pure fixed cost at sf0.1. An entry holds the table's
+    * (modification time, length) next to its schema, so a table
+    * rewritten in-process is inferred again instead of being read with
+    * a stale schema (which would null-fill its renamed or retyped
+    * columns). Checking costs one file-status call, or one listing for a
+    * directory table. */
   private val tableSchemaCache =
     new java.util.concurrent.ConcurrentHashMap[String,
-      org.apache.spark.sql.types.StructType]()
+      ((Long, Long), org.apache.spark.sql.types.StructType)]()
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
+    val version = tableVersion(spark, path)
     val cached = tableSchemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
+    if (cached != null && version.contains(cached._1))
+      spark.read.schema(cached._2).parquet(path)
     else {
       val df = spark.read.parquet(path)
-      tableSchemaCache.put(path, df.schema)
+      version.foreach(v => tableSchemaCache.put(path, (v, df.schema)))
       df
     }
+  }
+
+  /** (modification time, length) of a table file; for a directory the
+    * newest modification time and the summed length over it and its
+    * entries. None when the path is missing: the read reports that. */
+  private def tableVersion(spark: SparkSession, path: String): Option[(Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      val all = if (st.isDirectory) st +: fs.listStatus(p).toSeq else Seq(st)
+      Some((all.map(_.getModificationTime).max, all.map(_.getLen).sum))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 
   /** Deterministic conversation derivation shared by the SFT family's

@@ -195,6 +195,38 @@ object ColumnMapping {
         (if (keepMeta) Seq(col("_metadata")) else Nil): _*)
   }
 
+  /** Read `files` of the Delta table at `tablePath` under the log's
+    * declared schema plus `passthrough` columns — the one table-file read
+    * of the batch reader ([[DeltaWriter]]) and the streaming source
+    * ([[graft.sources.DeltaSource]]). Mapped tables resolve physical names
+    * ([[readMapped]]; `keepMeta` keeps `_metadata` through its projection,
+    * where raw reads keep it as a hidden scan column anyway). Other tables
+    * read with the declared schema, never a footer-inferred one: Spark
+    * then launches no schema-inference job, and files written before a
+    * `mergeSchema` append null-fill the newer columns, where inference
+    * reads one file's footer and may drop them. Paths with a `col=value`
+    * dir segment read with `basePath`, so hive partition columns
+    * re-materialize, typed by the declared schema. A table with no
+    * metaData action yet infers from the footers. */
+  def readFiles(spark: SparkSession, log: DeltaLogReader, tablePath: String,
+      files: Seq[String], passthrough: Seq[StructField] = Nil,
+      keepMeta: Boolean = false): DataFrame = {
+    val declared = log.tableSchemaString(tablePath)
+      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    val basePath =
+      if (files.exists(_.split('/').dropRight(1).exists(_.contains('=')))) Some(tablePath)
+      else None
+    declared match {
+      case Some(s) if isMapped(s) =>
+        readMapped(spark, files, s, basePath, passthrough, keepMeta,
+          byFieldId = isIdMode(log.tableConfigurationJson(tablePath)))
+      case _ =>
+        val reader = basePath.foldLeft(spark.read)((r, b) => r.option("basePath", b))
+        declared.map(s => StructType(s.fields ++ passthrough))
+          .foldLeft(reader)((r, s) => r.schema(s)).parquet(files: _*)
+    }
+  }
+
   /** Change-file (cdc) rows for a mapped table: the table's columns
     * relabel to physical names; protocol metadata columns in `keep`
     * (`_change_type`) stay verbatim; anything else is dropped — a cdc

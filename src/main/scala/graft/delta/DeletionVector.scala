@@ -409,8 +409,9 @@ case class DvProbeExpr(
 
   override def prettyName: String =
     if (oldMeta.isEmpty) "dv_deleted" else "dv_cdf_delta"
-  override def toString: String =
-    s"$prettyName(${pathExpr}, ${idxExpr}, files=${meta.value.size})"
+  // never dereferences the broadcast: AQE stringifies the plan on every
+  // stage update, and a destroyed broadcast must not break that
+  override def toString: String = s"$prettyName(${pathExpr}, ${idxExpr})"
   override def sql: String = s"$prettyName(${pathExpr.sql}, ${idxExpr.sql})"
 }
 

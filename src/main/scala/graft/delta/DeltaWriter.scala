@@ -144,25 +144,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   private[graft] def scanAddsWithRowMeta(tablePath: String,
       adds: Seq[DeltaAction.AddFile]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-    val files = adds.map(a => log.resolvePath(tablePath, a.path))
-    val partitioned = files.exists(_.split('/').dropRight(1).exists(_.contains('=')))
-    val raw = declared.filter(ColumnMapping.isMapped) match {
-      // the mapped projection keeps _metadata explicitly so provenance
-      // survives to the row-meta columns below
-      case Some(s) => ColumnMapping.readMapped(spark, files, s,
-        basePath = if (partitioned) Some(tablePath) else None, keepMeta = true,
-        byFieldId = ColumnMapping.isIdMode(log.tableConfigurationJson(tablePath)))
-      case None =>
-        if (partitioned)
-          declared.foldLeft(spark.read.option("basePath", tablePath))(
-            (r, s) => r.schema(s)).parquet(files: _*)
-        else declared match {
-          case Some(s) => spark.read.schema(s).parquet(files: _*)
-          case None => spark.read.parquet(files: _*)
-        }
-    }
+    // the mapped projection keeps _metadata explicitly so provenance
+    // survives to the row-meta columns below
+    val raw = ColumnMapping.readFiles(spark, log, tablePath,
+      adds.map(a => log.resolvePath(tablePath, a.path)), keepMeta = true)
     val dvByPath: Map[String, DvDescriptor] = adds
       .flatMap(a => a.deletionVector.map(d =>
         DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
@@ -387,48 +372,20 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val dvByPath: Map[String, DvDescriptor] = adds
       .flatMap(a => a.deletionVector.map(d =>
         DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
-    declared.filter(ColumnMapping.isMapped).foreach { s =>
-      val anyPartitioned =
-        files.exists(_.split('/').dropRight(1).exists(_.contains('=')))
-      // DV filtering needs row provenance, which the mapped projection
-      // would drop — keep the _metadata struct through it, filter, then
-      // drop the helper column
-      val mappedDf = ColumnMapping.readMapped(spark, files, s,
-        basePath = if (anyPartitioned) Some(tablePath) else None,
-        keepMeta = dvByPath.nonEmpty,
-        byFieldId = ColumnMapping.isIdMode(log.tableConfigurationJson(tablePath)))
-      return if (dvByPath.isEmpty) mappedDf
-        else dvFilter(tablePath, dvByPath, mappedDf).drop("_metadata")
-    }
-    // hive-layout tables: partition columns live in the directory names,
-    // not the data files — read with basePath so Spark re-materializes
-    // them, then align to the declared schema's column order/types
-    // ('=' appears in a path segment only as a partition dir)
-    val partitioned = files.exists(_.split('/').dropRight(1).exists(_.contains('=')))
-    if (partitioned) {
-      import org.apache.spark.sql.functions.{col, lit}
-      // give the reader the declared schema: partition columns still
-      // re-materialize from the hive dirs, and Spark skips the footer
-      // schema-inference job (whose job count scales with file count)
-      val reader = declared.foldLeft(
-        spark.read.option("basePath", tablePath))((r, s) => r.schema(s))
-      val raw = dvFilter(tablePath, dvByPath, reader.parquet(files: _*))
-      declared match {
-        case Some(s) => raw.select(s.fields.toSeq.map(f =>
-          (if (raw.columns.contains(f.name)) col(f.name).cast(f.dataType)
-           else lit(null).cast(f.dataType)).as(f.name)): _*)
-        case None => raw
-      }
-    } else {
-      val raw = declared match {
-        // read with the declared schema so files written before a schema
-        // merge null-fill the newer columns
-        case Some(s) => spark.read.schema(s).parquet(files: _*)
-        case None => spark.read.parquet(files: _*)
-      }
-      // _metadata is a hidden column: filtering on it leaves the visible
-      // schema untouched
-      dvFilter(tablePath, dvByPath, raw)
+    // DV filtering needs row provenance, which the mapped projection
+    // would drop — keep the _metadata struct through it, filter, then
+    // drop the helper column
+    val scan = ColumnMapping.readFiles(spark, log, tablePath, files,
+      keepMeta = dvByPath.nonEmpty)
+    val read =
+      if (dvByPath.isEmpty) scan else dvFilter(tablePath, dvByPath, scan).drop("_metadata")
+    // a raw hive-layout read puts the partition columns last ('=' appears
+    // in a path segment only as a partition dir): align to declared order
+    declared match {
+      case Some(s) if !ColumnMapping.isMapped(s) &&
+          files.exists(_.split('/').dropRight(1).exists(_.contains('='))) =>
+        read.select(s.fields.toSeq.map(f => org.apache.spark.sql.functions.col(f.name)): _*)
+      case _ => read
     }
   }
 

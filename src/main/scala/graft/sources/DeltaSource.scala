@@ -3,7 +3,8 @@ package graft.sources
 import com.fasterxml.jackson.databind.JsonNode
 import graft.Cdc
 import graft.core._
-import graft.delta.{DeltaAction, DeltaLogReader, DeltaStats, DvDescriptor, DvScan}
+import graft.delta.{ColumnMapping, DeltaAction, DeltaLogReader, DeltaStats, DvDescriptor, DvScan}
+import graft.functions.BatchConst
 import graft.util.Jsons
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -478,8 +479,8 @@ class DeltaSource(
     if (batch.files.isEmpty) spark.emptyDataFrame
     else {
       val hasDvs = checkpoint.dvFilesOf(batch.offset).nonEmpty
-      applyDvs(spark, batch,
-        readDataFiles(spark, batch.paths, keepMeta = hasDvs))
+      applyDvs(spark, batch, ColumnMapping.readFiles(spark, checkpoint.log, tablePath,
+        batch.paths, keepMeta = hasDvs))
     }
   }
 
@@ -487,7 +488,7 @@ class DeltaSource(
     * DV-bearing add streams its SURVIVING rows — descriptors broadcast,
     * bitmaps lazy-load on executors ([[graft.delta.DvScan]]). delta-spark
     * streams DV tables the same way. Mapped tables keep `_metadata`
-    * through their projection (readDataFiles keepMeta) so the filter can
+    * through their projection (`readFiles` keepMeta) so the filter can
     * resolve provenance; the helper column is dropped afterwards. */
   private def applyDvs(spark: SparkSession, batch: BatchInfo,
       df: DataFrame): DataFrame = {
@@ -498,34 +499,6 @@ class DeltaSource(
         checkpoint.log.resolvePath(tablePath, p)) -> d }.toMap
     graft.delta.DvScan.filterDeleted(spark, tablePath, byPath, df, conf)
       .drop("_metadata")
-  }
-
-  /** Hive-partitioned tables keep their partition columns: a path with a
-    * `col=value` dir segment reads with `basePath` so Spark re-materializes
-    * them (plain file reads would silently drop those columns from every
-    * streamed batch). Column-mapped tables resolve physical `col-<uuid>`
-    * names to logical ones ([[graft.delta.ColumnMapping]] — a raw read
-    * would stream wrong column names); schema lookup is memo-amortized. */
-  private def readDataFiles(spark: SparkSession, paths: Seq[String],
-      passthrough: Seq[org.apache.spark.sql.types.StructField] = Nil,
-      keepMeta: Boolean = false): DataFrame = {
-    val partitioned = paths.exists(_.split('/').dropRight(1).exists(_.contains('=')))
-    val mapped = checkpoint.log.tableSchemaString(tablePath)
-      .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .filter(graft.delta.ColumnMapping.isMapped)
-    mapped match {
-      case Some(s) => graft.delta.ColumnMapping.readMapped(spark, paths, s,
-        basePath = if (partitioned) Some(tablePath) else None,
-        passthrough = passthrough, keepMeta = keepMeta,
-        byFieldId = graft.delta.ColumnMapping.isIdMode(
-          checkpoint.log.tableConfigurationJson(tablePath)))
-      case None =>
-        // raw reads surface every file column, passthrough included, and
-        // _metadata stays resolvable as a hidden scan column
-        if (partitioned) spark.read.option("basePath", tablePath).parquet(paths: _*)
-        else spark.read.parquet(paths: _*)
-    }
   }
 
   /** CDF read: cdc files already carry `_change_type`; insert-fallback adds
@@ -549,10 +522,10 @@ class DeltaSource(
       // through or every change row loses its type; DV-filtered kinds keep
       // `_metadata` through the mapped projection for row provenance
       val scan =
-        if (kind == "cdc") readDataFiles(spark, paths, passthrough = Seq(
-          org.apache.spark.sql.types.StructField(Cdc.ChangeTypeCol,
+        if (kind == "cdc") ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths,
+          passthrough = Seq(org.apache.spark.sql.types.StructField(Cdc.ChangeTypeCol,
             org.apache.spark.sql.types.StringType)))
-        else readDataFiles(spark, paths, keepMeta = true)
+        else ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths, keepMeta = true)
       val base = (kind match {
         case "cdc" => scan // cdc files never carry DVs
         case "dv_delete" | "dv_delete_full" =>
@@ -572,9 +545,11 @@ class DeltaSource(
           base.withColumn(Cdc.ChangeTypeCol, lit("delete"))
         case _ => base.withColumn(Cdc.ChangeTypeCol, lit("insert"))
       }
+      // bound by reference, not as literals: a literal's value lands in
+      // the generated source, so every batch would recompile its stages
       withType
-        .withColumn(Cdc.CommitVersionCol, lit(version))
-        .withColumn(Cdc.CommitTimestampCol, lit(new java.sql.Timestamp(ts)))
+        .withColumn(Cdc.CommitVersionCol, BatchConst.long(version))
+        .withColumn(Cdc.CommitTimestampCol, BatchConst.timestampMs(ts))
     }
     frames.reduce(_.unionByName(_, allowMissingColumns = true))
   }

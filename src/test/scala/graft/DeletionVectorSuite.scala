@@ -557,4 +557,14 @@ class DeletionVectorSuite extends SparkSpec {
         s"re-served file must stream survivors only, got $ids2")
     }
   }
+
+  test("DvProbeExpr.toString never touches its broadcast") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val bc = spark.sparkContext.broadcast(Map.empty[String, (String, DvDescriptor)])
+    val e = graft.delta.DvProbeExpr(Literal("f"), Literal(0L), bc, None, "t",
+      new graft.util.SerializableConf(conf))
+    bc.destroy()
+    intercept[org.apache.spark.SparkException](bc.value)
+    assert(e.toString === "dv_deleted(f, 0)")
+  }
 }

@@ -492,4 +492,18 @@ class PlanSuite extends SparkSpec {
     assert(hashExchanges === 0, s"per-document features must not shuffle:\n$plan")
     assert(hasCodegen(plan))
   }
+
+  test("the input-table schema cache re-infers a table rewritten in-process") {
+    withTmpDir { dir =>
+      import spark.implicits._
+      Seq((1L, "a")).toDF("k", "s").write.parquet(s"$dir/tbl.parquet")
+      assert(Queries.t(spark, dir, "tbl").columns.toSeq === Seq("k", "s"))
+      // same path, new schema: a stale cached schema would read the new
+      // file's columns as all-null k and s
+      Seq((2, 3.5)).toDF("n", "x").write.mode("overwrite").parquet(s"$dir/tbl.parquet")
+      val df = Queries.t(spark, dir, "tbl")
+      assert(df.columns.toSeq === Seq("n", "x"))
+      assert(df.collect().map(r => (r.getInt(0), r.getDouble(1))).toSeq === Seq((2, 3.5)))
+    }
+  }
 }
