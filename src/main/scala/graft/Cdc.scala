@@ -104,8 +104,7 @@ object Cdc {
         }
       case CdcMode.Merge =>
         val latest = dedupeLatest(prepared, keys)
-        val deletes = latest.filter(col(changeCol) === "delete").select(keys.map(col): _*)
-        val upserts = stripMeta(latest.filter(col(changeCol) =!= "delete"))
+        val upserts = upsertsOf(latest, changeCol)
         existing match {
           case None => upserts
           case Some(e) =>
@@ -117,6 +116,22 @@ object Cdc {
         }
     }
   }
+
+  /** The latest change per key of a Merge batch (preimages, and deletes
+    * when `dropDeletes`, dropped first) — one row per key, meta columns
+    * kept: what [[applyCdc]] merges, and, as it is, the set of keys the
+    * batch touches. */
+  def latestChanges(changes: DataFrame, keys: Seq[String],
+      changeCol: String = ChangeTypeCol, dropDeletes: Boolean = false): DataFrame = {
+    require(keys.nonEmpty, "keys must be non-empty")
+    missingCols(changes, keys :+ changeCol)
+    dedupeLatest(prepareChanges(changes, changeCol, CdcMode.Merge, dropDeletes), keys)
+  }
+
+  /** The post-state rows of a [[latestChanges]] frame: its non-delete
+    * changes with the CDC meta columns stripped. */
+  def upsertsOf(latest: DataFrame, changeCol: String = ChangeTypeCol): DataFrame =
+    stripMeta(latest.filter(col(changeCol) =!= "delete"))
 
   private def missingCols(df: DataFrame, required: Seq[String]): Unit = {
     val missing = required.filterNot(df.columns.contains)

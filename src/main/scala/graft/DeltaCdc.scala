@@ -1,13 +1,11 @@
 package graft
 
+import graft.core.StageMetadata
 import graft.delta.{DeltaAction, DeltaStats, DeltaWriteMode, DeltaWriter}
-import graft.util.Jsons
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 import org.apache.spark.storage.StorageLevel
-
-import scala.util.control.NonFatal
 
 /** Outcome of a CDC merge into a Delta table
   * (the reference returns `{rows_in, rows_out, action, change_types}` —
@@ -17,6 +15,12 @@ case class MergeResult(
     rowsOut: Long,
     action: String,
     changeTypes: Map[String, Long])
+
+/** One partition's share of the change-batch profile: rows per change
+  * type (a NULL type counts under a null key), and per numeric merge key
+  * the partition's (min, max). */
+private[graft] case class BatchProfile(counts: Seq[(String, Long)],
+    mins: Seq[Option[Double]], maxs: Seq[Option[Double]])
 
 /** How a Merge materializes its changes.
   *  - `Auto`: deletion-vector merge whenever eligible (every candidate
@@ -51,12 +55,28 @@ object MergeStrategy {
   * the vacuum horizon would have to absorb. Files without usable stats and
   * non-numeric-keyed tables degrade conservatively to the full rewrite.
   *
-  * Job structure (matters at scale): the change stream is persisted so its
-  * upstream plan — often a window or join — executes once, not once per
-  * metric; `rows_out` rides the write job via `observe()` plus the
-  * untouched files' `numRecords` stats (no second scan of anything).
+  * Job structure (matters at scale): the merge is planned once.
+  *  - The change stream is persisted so its upstream plan — often a
+  *    window or join — executes once, and ONE map-side pass over it (the
+  *    job that fills the cache) yields both the per-type counters and the
+  *    per-key bounds the file pruning needs.
+  *  - The log is replayed once into a [[graft.delta.DeltaSnapshot]]:
+  *    pruning, the DV fold, the parts write and the commit all read it,
+  *    and the commit conflict-checks against its version.
+  *  - In the deletion-vector shape the payload (and CDF) parts write runs
+  *    at the same time as the bitmap fold, and the one atomic commit
+  *    follows both. The fold broadcasts the touched keys straight off the
+  *    persisted batch (no window or distinct of its own). A 300-row batch
+  *    into a multi-file table takes 3 query executions and 6 jobs: the
+  *    profile pass, the payload's window and write, and the fold's key
+  *    broadcast, map and result.
+  *  - `rows_out` rides the write job via `observe()` plus the untouched
+  *    files' `numRecords` stats (no second scan of anything).
   * Rewrite safety needs no pre-materialization: old files are only
   * dereferenced in the log commit, never deleted before the new parts land.
+  * Each merge records its decision (`merge_strategy`, touched/untouched
+  * file counts, `merge_read_version`) in [[graft.core.StageMetadata]], so
+  * the pipeline's write-stage event explains it.
   */
 object DeltaCdc {
   /** `txn`: an optional SetTransaction (appId, batchVersion) stamped onto
@@ -80,15 +100,23 @@ object DeltaCdc {
     val normalized = Cdc.normalizeChangeTypes(changes, changeCol, changeTypeMap)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // one pass for the per-type counters; also populates the cache the
-      // merge below reads, so the (possibly expensive) change-stream plan
-      // runs exactly once
-      val changeTypes = normalized.groupBy(changeCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val numericKeys = keys.filter(k =>
+        normalized.schema.fields.exists(f =>
+          f.name == k && f.dataType.isInstanceOf[NumericType]))
+      // one pass for the per-type counters and the key bounds; it also
+      // populates the cache the merge below reads, so the (possibly
+      // expensive) change-stream plan runs exactly once. A merge into an
+      // existing table replays the log into its one snapshot meanwhile.
+      val mergeInto = mode == CdcMode.Merge && writer.tableExists(tablePath)
+      val ((changeTypes, bounds), snap) =
+        if (mergeInto) DeltaWriter.concurrently(spark)(
+          profile(normalized, changeCol, numericKeys))(writer.snapshot(tablePath))
+        else (profile(normalized, changeCol, numericKeys), None)
       val rowsIn = changeTypes.values.sum
 
       val cdf = if (emitCdf) Some(normalized) else None
       val outObs = Observation()
+      def rowsOut = outObs.get("rows_out").asInstanceOf[Long]
 
       mode match {
         case CdcMode.AppendOnly =>
@@ -97,33 +125,31 @@ object DeltaCdc {
             .observe(outObs, count(lit(1)).as("rows_out"))
           writer.write(payload, tablePath, DeltaWriteMode.Append,
             mergeSchema = true, cdfChanges = cdf, txn = txn)
-          val rowsOut = outObs.get("rows_out").asInstanceOf[Long]
+          StageMetadata.put("merge_strategy", "append")
           MergeResult(rowsIn, rowsOut, "append", changeTypes)
-        case CdcMode.Merge if !writer.tableExists(tablePath) =>
+        case CdcMode.Merge if !mergeInto =>
           val merged = Cdc.applyCdc(normalized, None, keys, CdcMode.Merge,
             changeCol, Map.empty, dropDeletes)
             .observe(outObs, count(lit(1)).as("rows_out"))
           writer.write(merged, tablePath, DeltaWriteMode.Overwrite,
             mergeSchema = true, cdfChanges = cdf, txn = txn)
-          MergeResult(rowsIn, outObs.get("rows_out").asInstanceOf[Long],
-            "merge", changeTypes)
+          StageMetadata.put("merge_strategy", "create")
+          MergeResult(rowsIn, rowsOut, "merge", changeTypes)
 
         case CdcMode.Merge =>
-          // one captured version covers both the planning read and the
-          // commit's conflict check: anything landing after it is detected
-          // at commit time, not silently overwritten
-          val readVersion = writer.latestVersion(tablePath)
-          val adds = readVersion.map(writer.activeAddsAt(tablePath, _))
-            .getOrElse(Seq.empty)
+          // one snapshot covers the planning read, the parts write and the
+          // commit's conflict check: anything landing after its version is
+          // detected at commit time, not silently overwritten
+          val adds = snap.map(_.adds).getOrElse(Seq.empty)
           // stats key on PHYSICAL names for column-mapped tables — prune
           // with translated key names or the bounds match nothing and the
           // merge degrades to a full rewrite
-          val statKeys = writer.tableSchema(tablePath)
+          val statKeys = snap.flatMap(_.schema)
             .filter(graft.delta.ColumnMapping.isMapped)
             .map(graft.delta.ColumnMapping.physicalNames)
             .getOrElse(Map.empty[String, String])
           val (touched, untouched) =
-            partitionByKeyBounds(normalized, keys, adds, statKeys)
+            partitionByKeyBounds(bounds, adds, statKeys)
           val carried = untouched.map(numRecordsOf(_).getOrElse(0L)).sum
 
           // DV eligibility: every candidate file's logical row count is
@@ -146,26 +172,33 @@ object DeltaCdc {
                   "MergeStrategy.Auto or Rewrite")
               touched.nonEmpty
           }
+          StageMetadata.put("merge_strategy",
+            if (useDv) "deletion_vectors" else "rewrite")
+          StageMetadata.put("merge_touched_files", touched.size.toString)
+          StageMetadata.put("merge_untouched_files", untouched.size.toString)
+          snap.foreach(s => StageMetadata.put("merge_read_version", s.version.toString))
 
           if (useDv) {
             // mark the old versions of every touched key deleted (per-file
             // bitmaps; the change-key set broadcasts) and append only the
             // changed keys' post-state: data volume is O(change batch),
-            // surviving rows of touched files are never read or rewritten
-            val touchedKeys = Cdc.dedupeLatest(
-              Cdc.prepareChanges(normalized, changeCol, CdcMode.Merge, dropDeletes),
-              keys).select(keys.map(col): _*).distinct()
-            val marked = writer.scanAddsWithRowMeta(tablePath, touched)
-              .join(broadcast(touchedKeys), keys, "left_semi")
+            // surviving rows of touched files are never read or rewritten.
+            // The touched keys are the keys of the changes that survive
+            // `prepareChanges` — exactly the keys of the latest-per-key
+            // frame — so the broadcast reads them straight off the
+            // persisted batch, with no window or distinct of its own (the
+            // semi join ignores repeats). Each frame is built on the
+            // concurrent half that runs it.
+            def marked = writer.scanAddsWithRowMeta(tablePath, touched)
+              .join(broadcast(Cdc.prepareChanges(normalized, changeCol,
+                CdcMode.Merge, dropDeletes).select(keys.map(col): _*)), keys, "left_semi")
               .select(col(writer.RowMetaFile), col(writer.RowMetaIndex))
-            val payload = Cdc.applyCdc(normalized, None, keys, CdcMode.Merge,
-              changeCol, Map.empty, dropDeletes)
+            def payload = Cdc.upsertsOf(
+              Cdc.latestChanges(normalized, keys, changeCol, dropDeletes), changeCol)
               .observe(outObs, count(lit(1)).as("rows_out"))
-            val deleted = writer.dvMerge(tablePath, touched, marked, payload,
-              cdf, txn, readVersion.get)
-            val appended = outObs.get("rows_out").asInstanceOf[Long]
+            val deleted = writer.dvMerge(snap.get, touched, marked, payload, cdf, txn)
             val touchedLogical = touched.flatMap(numRecordsOf).sum
-            MergeResult(rowsIn, carried + touchedLogical - deleted + appended,
+            MergeResult(rowsIn, carried + touchedLogical - deleted + rowsOut,
               "merge", changeTypes)
           } else {
             // rewrite shape: only files that can contain a matched key are
@@ -177,14 +210,53 @@ object DeltaCdc {
             val merged = Cdc.applyCdc(normalized, existing, keys, CdcMode.Merge,
               changeCol, Map.empty, dropDeletes)
               .observe(outObs, count(lit(1)).as("rows_out"))
-            writer.replaceFiles(merged, tablePath, touched.map(_.path),
-              mergeSchema = true, cdfChanges = cdf, txn = txn,
-              readVersion = readVersion)
-            val written = outObs.get("rows_out").asInstanceOf[Long]
-            MergeResult(rowsIn, written + carried, "merge", changeTypes)
+            writer.replaceFilesAt(merged, tablePath, snap, touched.map(_.path),
+              mergeSchema = true, cdfChanges = cdf, txn = txn)
+            MergeResult(rowsIn, rowsOut + carried, "merge", changeTypes)
           }
       }
     } finally normalized.unpersist(blocking = false)
+  }
+
+  // derived once: a product encoder is built by Scala reflection
+  private lazy val profileEncoder = org.apache.spark.sql.Encoders.product[BatchProfile]
+
+  /** ONE pass over the (persisted) change batch: each change type's row
+    * count, and each numeric merge key's batch-wide (min, max) as doubles.
+    * Every partition folds its rows into one small [[BatchProfile]] and
+    * the driver merges them — no exchange, so the pass that populates the
+    * batch's cache is the only job (a grouped aggregate over a cached
+    * frame runs three). */
+  private def profile(changes: DataFrame, changeCol: String,
+      numericKeys: Seq[String])
+      : (Map[String, Long], Map[String, (Option[Double], Option[Double])]) = {
+    val n = numericKeys.size
+    val parts = changes
+      .select(col(changeCol).cast("string") +: numericKeys.map(k => col(k).cast("double")): _*)
+      .mapPartitions { rows =>
+        val counts = scala.collection.mutable.HashMap.empty[String, Long]
+        val lo = Array.fill[Option[Double]](n)(None)
+        val hi = Array.fill[Option[Double]](n)(None)
+        rows.foreach { r =>
+          val t = r.getString(0)
+          counts(t) = counts.getOrElse(t, 0L) + 1
+          var i = 0
+          while (i < n) {
+            if (!r.isNullAt(i + 1)) {
+              val v = r.getDouble(i + 1)
+              if (lo(i).forall(v < _)) lo(i) = Some(v)
+              if (hi(i).forall(v > _)) hi(i) = Some(v)
+            }
+            i += 1
+          }
+        }
+        Iterator(BatchProfile(counts.toSeq, lo.toSeq, hi.toSeq))
+      }(profileEncoder).collect()
+    val counts = parts.flatMap(_.counts).groupMapReduce(_._1)(_._2)(_ + _)
+    val bounds = numericKeys.zipWithIndex.map { case (k, i) =>
+      k -> (parts.flatMap(_.mins(i)).minOption, parts.flatMap(_.maxs(i)).maxOption)
+    }.toMap
+    (counts, bounds)
   }
 
   /** Split the table's active files into (touched, untouched) by the change
@@ -196,23 +268,13 @@ object DeltaCdc {
     * bounds, files without stats or without `numRecords` count as touched,
     * and no-numeric-keys-at-all degrades to touching everything (the
     * reference's full rewrite). */
-  private def partitionByKeyBounds(changes: DataFrame, keys: Seq[String],
+  private def partitionByKeyBounds(
+      bounds: Map[String, (Option[Double], Option[Double])],
       adds: Seq[DeltaAction.AddFile],
-      statKeys: Map[String, String] = Map.empty)
+      statKeys: Map[String, String])
       : (Seq[DeltaAction.AddFile], Seq[DeltaAction.AddFile]) = {
-    val numericKeys = keys.filter(k =>
-      changes.schema.fields.exists(f =>
-        f.name == k && f.dataType.isInstanceOf[NumericType]))
-    if (numericKeys.isEmpty || adds.isEmpty) return (adds, Seq.empty)
-    // one scalar row off the already-persisted change stream
-    val aggs = numericKeys.flatMap(k =>
-      Seq(min(col(k)).cast("double"), max(col(k)).cast("double")))
-    val row = changes.agg(aggs.head, aggs.tail: _*).head()
-    val ranges = numericKeys.zipWithIndex.map { case (k, i) =>
-      statKeys.getOrElse(k, k) ->
-        (Option(row.get(2 * i)).map(_.asInstanceOf[Double]),
-         Option(row.get(2 * i + 1)).map(_.asInstanceOf[Double]))
-    }.toMap
+    if (bounds.isEmpty || adds.isEmpty) return (adds, Seq.empty)
+    val ranges = bounds.map { case (k, b) => statKeys.getOrElse(k, k) -> b }
     val (kept, _) = DeltaStats.prune(adds, ranges)
     val keptPaths = kept.map(_.path).toSet
     val (skippable, uncounted) = adds.filterNot(a => keptPaths(a.path))
@@ -223,13 +285,10 @@ object DeltaCdc {
     (kept ++ uncounted, skippable)
   }
 
+  // stats count PHYSICAL rows; a deletion vector hides `cardinality` of
+  // them, so the carried logical row count subtracts it
   private def numRecordsOf(a: DeltaAction.AddFile): Option[Long] =
-    a.stats.flatMap { s =>
-      try Jsons.optLong(Jsons.parse(s), "numRecords")
-      catch { case NonFatal(_) => None }
-      // stats count PHYSICAL rows; a deletion vector hides `cardinality`
-      // of them, so the carried logical row count subtracts it
-    }.map(n => n - a.deletionVector.map(_.cardinality).getOrElse(0L))
+    DeltaWriter.physRows(a).map(n => n - a.deletionVector.map(_.cardinality).getOrElse(0L))
 
   /** Merge one CDC change batch into an SCD Type-2 dimension persisted as
     * a Delta table — [[Cdc.scd2Merge]] with the table itself as both the

@@ -113,12 +113,14 @@ class CheckpointWriter(conf: Configuration, actionsPerPart: Int = 100000) {
       else {
         // whole actions (not the path->size fold) so per-file stats survive
         // the checkpoint and skipping keeps working on pruned-log tables
-        val state = DeltaStats.activeAdds(log, tablePath, version)
-        val meta = log.resolveMeta(tablePath)
+        // one replay for the adds, metaData, protocol and layout
+        val snap = log.snapshot(tablePath, version)
+        val state = snap.adds
+        val meta = snap.meta
         // the spec's checkpoint metaData carries partitionColumns; without
         // it, a reader replaying an EMPTY partitioned table from this
         // checkpoint (post-expiry, all adds removed) loses the layout
-        val partCols = log.partitionColumnsAt(tablePath, version)
+        val partCols = snap.partitionColumns
         val txns = log.txnState(tablePath, version)
         // domainMetadata preservation (the writer feature's obligation):
         // the newest action per domain — tombstones included — must ride
@@ -132,7 +134,7 @@ class CheckpointWriter(conf: Configuration, actionsPerPart: Int = 100000) {
         // deleted rows. Resolve from the log; a foreign protocol-less log
         // falls back to what the snapshot itself requires (DV adds
         // present -> 3/7 + deletionVectors, else the base 1/2).
-        val protocol = log.resolveProtocol(tablePath, version).getOrElse {
+        val protocol = snap.protocol.getOrElse {
           if (state.exists(_.deletionVector.isDefined))
             DeltaAction.Protocol(3, Seq("deletionVectors"), 7, Seq("deletionVectors"))
           else DeltaAction.Protocol(1, Seq.empty, 2, Seq.empty)

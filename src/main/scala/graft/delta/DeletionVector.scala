@@ -291,11 +291,10 @@ object DeletionVector {
     try {
       folds.foreach { fold =>
         val norm = normUri(fold.path)
-        val unioned = oldDvs.get(norm) match {
-          case Some(old) => union(loadBytes(tablePath, old, conf), fold.dv)
-          case None => fold.dv
+        val (unioned, card) = oldDvs.get(norm) match {
+          case Some(old) => unionCounted(loadBytes(tablePath, old, conf), fold.dv)
+          case None => (fold.dv, cardinalityOf(fold.dv))
         }
-        val card = cardinalityOf(unioned)
         if (physRows.get(norm).contains(card)) {
           // every physical row now deleted: plain remove, no vector
           results += DvWriteResult(fold.path, fold.n, card, None, None, None)
@@ -326,21 +325,34 @@ object DeletionVector {
 
   /** Union of two serialized arrays — a second DELETE on an already-DV'd
     * file widens the existing bitmap instead of chaining vectors. */
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = unionCounted(a, b)._1
+
+  /** [[union]] plus the union's cardinality, counted before it is
+    * serialized instead of by deserializing the result again. */
+  def unionCounted(a: Array[Byte], b: Array[Byte]): (Array[Byte], Long) = {
     val x = deserialize(a); val y = deserialize(b)
     val n = math.max(x.length, y.length)
-    serialize(Array.tabulate(n) { i =>
+    val u = Array.tabulate(n) { i =>
       val rb = new RoaringBitmap()
       if (i < x.length) rb.or(x(i))
       if (i < y.length) rb.or(y(i))
       rb
-    })
+    }
+    val card = u.map(_.getLongCardinality).sum
+    (serialize(u), card)
   }
 
   /** Total deleted-row count of a serialized array. */
   def cardinalityOf(bytes: Array[Byte]): Long =
     deserialize(bytes).map(_.getLongCardinality).sum
 }
+
+/** What a DV scan broadcasts: each data file's vector descriptor keyed by
+  * normalized path (with the vector's bitmap-cache key), plus the Hadoop
+  * conf executors load vectors with — one broadcast per scan, so no task
+  * deserializes a `Configuration` of its own. */
+case class DvScanMeta(vectors: Map[String, (String, DvDescriptor)],
+    conf: graft.util.SerializableConf)
 
 /** Codegen'd DV membership probe — the expression form of the scan
   * filter (previously a scalar ScalaUDF, the one UDF left in a query
@@ -350,16 +362,22 @@ object DeletionVector {
   * per-executor-cache shape; result is bit-identical to the UDF
   * formulation (both sides wrap the same probe body).
   *
-  * `oldMeta` None = the [[DvScan.filterDeleted]] probe ("row deleted in
-  * the current vector?"); Some = the [[DvScan.filterToDeltas]] CDF
+  * `oldVectors` None = the [[DvScan.filterDeleted]] probe ("row deleted
+  * in the current vector?"); Some = the [[DvScan.filterToDeltas]] CDF
   * reconstruction ("in new, not in old", with a missing new vector
-  * meaning the whole file was removed and every survivor is a delta). */
+  * meaning the whole file was removed and every survivor is a delta).
+  *
+  * Scans deliver rows file by file, so the probe resolves a file's
+  * vectors once per run of same-file rows: a per-instance memo of the
+  * last path (compared byte-wise) skips the path normalization and map
+  * lookups on every other row. The memo is thread-confined — each task
+  * deserializes its own copy of the expression. */
 case class DvProbeExpr(
     pathExpr: org.apache.spark.sql.catalyst.expressions.Expression,
     idxExpr: org.apache.spark.sql.catalyst.expressions.Expression,
-    meta: org.apache.spark.broadcast.Broadcast[Map[String, (String, DvDescriptor)]],
-    oldMeta: Option[org.apache.spark.broadcast.Broadcast[Map[String, (String, DvDescriptor)]]],
-    tablePath: String, conf: graft.util.SerializableConf)
+    meta: org.apache.spark.broadcast.Broadcast[DvScanMeta],
+    oldVectors: Option[org.apache.spark.broadcast.Broadcast[Map[String, (String, DvDescriptor)]]],
+    tablePath: String)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   import org.apache.spark.sql.catalyst.InternalRow
   import org.apache.spark.sql.catalyst.expressions.Expression
@@ -371,31 +389,51 @@ case class DvProbeExpr(
   override def right: Expression = idxExpr
   override def dataType: DataType = BooleanType
 
-  private def hit(
-      m: Map[String, (String, DvDescriptor)], key: String, idx: Long): Boolean =
-    m.get(key).exists { case (cacheKey, d) =>
-      DeletionVector.contains(DeletionVector.cachedBitmaps(cacheKey,
-        () => DeletionVector.loadBytes(tablePath, d, conf.value)), idx) }
+  @transient private var lastPath: UTF8String = _
+  // the last file's new vector: absent from the map, or its bitmaps
+  @transient private var lastInNew: Boolean = false
+  @transient private var lastNewBits: Array[RoaringBitmap] = _
+  // the last file's old vector entry (null = none), loaded on first need
+  @transient private var lastOld: (String, DvDescriptor) = _
+  @transient private var lastOldBits: Array[RoaringBitmap] = _
+
+  private def bitmaps(e: (String, DvDescriptor)): Array[RoaringBitmap] =
+    DeletionVector.cachedBitmaps(e._1,
+      () => DeletionVector.loadBytes(tablePath, e._2, meta.value.conf.value))
+
+  private def resolve(path: UTF8String): Unit =
+    if (lastPath == null || !lastPath.equals(path)) {
+      val key = DeletionVector.normUri(path.toString)
+      val entry = meta.value.vectors.get(key)
+      lastInNew = entry.isDefined
+      lastNewBits = entry.map(bitmaps).orNull
+      lastOld = oldVectors.flatMap(_.value.get(key)).orNull
+      lastOldBits = null
+      lastPath = path.clone()
+    }
+
+  private def inOld(idx: Long): Boolean = lastOld != null && {
+    if (lastOldBits == null) lastOldBits = bitmaps(lastOld)
+    DeletionVector.contains(lastOldBits, idx)
+  }
 
   /** filterDeleted probe: is (file, idx) marked deleted? */
-  def probe(path: UTF8String, idx: Long): Boolean =
-    hit(meta.value, DeletionVector.normUri(path.toString), idx)
+  def probe(path: UTF8String, idx: Long): Boolean = {
+    resolve(path)
+    lastInNew && DeletionVector.contains(lastNewBits, idx)
+  }
 
   /** filterToDeltas probe: deleted by the NEW vector (or whole file
     * removed) and not already deleted by the OLD one. */
   def probeDelta(path: UTF8String, idx: Long): Boolean = {
-    val key = DeletionVector.normUri(path.toString)
-    val inNew = meta.value.get(key) match {
-      case None => true
-      case _ => hit(meta.value, key, idx)
-    }
-    inNew && !hit(oldMeta.get.value, key, idx)
+    resolve(path)
+    (!lastInNew || DeletionVector.contains(lastNewBits, idx)) && !inOld(idx)
   }
 
-  private def method: String = if (oldMeta.isEmpty) "probe" else "probeDelta"
+  private def method: String = if (oldVectors.isEmpty) "probe" else "probeDelta"
 
   override def nullSafeEval(path: Any, idx: Any): Any =
-    if (oldMeta.isEmpty) probe(path.asInstanceOf[UTF8String], idx.asInstanceOf[Long])
+    if (oldVectors.isEmpty) probe(path.asInstanceOf[UTF8String], idx.asInstanceOf[Long])
     else probeDelta(path.asInstanceOf[UTF8String], idx.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -408,7 +446,7 @@ case class DvProbeExpr(
     copy(pathExpr = newLeft, idxExpr = newRight)
 
   override def prettyName: String =
-    if (oldMeta.isEmpty) "dv_deleted" else "dv_cdf_delta"
+    if (oldVectors.isEmpty) "dv_deleted" else "dv_cdf_delta"
   // never dereferences the broadcast: AQE stringifies the plan on every
   // stage update, and a destroyed broadcast must not break that
   override def toString: String = s"$prettyName(${pathExpr}, ${idxExpr})"
@@ -444,7 +482,6 @@ object DvScan {
       dvByPath: Map[String, DvDescriptor], df: DataFrame,
       conf: Configuration): DataFrame = {
     if (dvByPath.isEmpty) return df
-    import org.apache.spark.sql.functions.{col, not}
     val declared = dvByPath.valuesIterator.map(_.sizeInBytes).sum
     val cap = maxScanBytes(spark)
     if (declared > cap)
@@ -453,23 +490,11 @@ object DvScan {
         s"across ${dvByPath.size} files, over the ${cap}-byte budget " +
         "(graft.delta.maxDvScanBytes); run purgeDeletionVectors to fold " +
         "the vectors into a rewrite, or raise the budget")
-    // cache key = the VECTOR's identity, not the data file's: a file
-    // re-added with a widened DV (second delete) must not hit the previous
-    // vector's cached bitmaps
-    val meta: Map[String, (String, DvDescriptor)] = dvByPath.map { case (p, d) =>
-      p -> (s"${d.pathOrInlineDv}@${d.offset.getOrElse(0L)}", d) }
-    val bc = spark.sparkContext.broadcast(meta)
-    val serConf = new graft.util.SerializableConf(conf)
+    val bc = spark.sparkContext.broadcast(
+      DvScanMeta(cacheKeyed(dvByPath), new graft.util.SerializableConf(conf)))
     // codegen'd probe expression, not a ScalaUDF — same broadcast +
     // lazy-load body, minus the UDF's encoder boundary per row
-    val deleted = org.apache.spark.sql.graftbridge.Bridge.column(
-      DvProbeExpr(
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          col("_metadata.file_path")),
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          col("_metadata.row_index")),
-        bc, None, tablePath, serConf))
-    df.filter(not(deleted))
+    df.filter(org.apache.spark.sql.functions.not(probeColumn(bc, None, tablePath)))
   }
 
   /** Keep only the rows a DV update DELETED — the Change-Data-Feed
@@ -481,7 +506,6 @@ object DvScan {
   def filterToDeltas(spark: SparkSession, tablePath: String,
       newByPath: Map[String, DvDescriptor], oldByPath: Map[String, DvDescriptor],
       df: DataFrame, conf: Configuration): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val declared = (newByPath.valuesIterator ++ oldByPath.valuesIterator)
       .map(_.sizeInBytes).sum
     val cap = maxScanBytes(spark)
@@ -491,20 +515,25 @@ object DvScan {
         s"deletion vectors, over the ${cap}-byte budget " +
         "(graft.delta.maxDvScanBytes); raise the budget or read the " +
         "changes from a cdc-emitting writer")
-    def meta(m: Map[String, DvDescriptor]): Map[String, (String, DvDescriptor)] =
-      m.map { case (p, d) =>
-        p -> (s"${d.pathOrInlineDv}@${d.offset.getOrElse(0L)}", d) }
-    val bcNew = spark.sparkContext.broadcast(meta(newByPath))
-    val bcOld = spark.sparkContext.broadcast(meta(oldByPath))
-    val serConf = new graft.util.SerializableConf(conf)
-    val isDelta = org.apache.spark.sql.graftbridge.Bridge.column(
-      DvProbeExpr(
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          col("_metadata.file_path")),
-        org.apache.spark.sql.graftbridge.Bridge.expression(
-          col("_metadata.row_index")),
-        bcNew, Some(bcOld), tablePath, serConf))
-    df.filter(isDelta)
+    val bcNew = spark.sparkContext.broadcast(
+      DvScanMeta(cacheKeyed(newByPath), new graft.util.SerializableConf(conf)))
+    val bcOld = spark.sparkContext.broadcast(cacheKeyed(oldByPath))
+    df.filter(probeColumn(bcNew, Some(bcOld), tablePath))
+  }
+
+  // cache key = the VECTOR's identity, not the data file's: a file
+  // re-added with a widened DV (second delete) must not hit the previous
+  // vector's cached bitmaps
+  private def cacheKeyed(m: Map[String, DvDescriptor]): Map[String, (String, DvDescriptor)] =
+    m.map { case (p, d) => p -> (s"${d.pathOrInlineDv}@${d.offset.getOrElse(0L)}", d) }
+
+  private def probeColumn(meta: org.apache.spark.broadcast.Broadcast[DvScanMeta],
+      oldVectors: Option[org.apache.spark.broadcast.Broadcast[Map[String, (String, DvDescriptor)]]],
+      tablePath: String): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.Bridge
+    Bridge.column(DvProbeExpr(Bridge.expression(col("_metadata.file_path")),
+      Bridge.expression(col("_metadata.row_index")), meta, oldVectors, tablePath))
   }
 }
 

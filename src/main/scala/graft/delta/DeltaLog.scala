@@ -90,6 +90,29 @@ case class CheckpointInstance(version: Long, parts: Option[Int])
 case class TableMeta(id: String, schemaString: Option[String], atVersion: Long,
     configurationJson: Option[String] = None)
 
+/** The table as of `version`, from ONE replay of its log
+  * ([[DeltaLogReader.snapshot]]): the active adds (stats, partition
+  * values and deletion vectors kept, sorted by path), the newest metaData
+  * and protocol, and the metaData's LOGICAL `partitionColumns`. A write
+  * plans from one snapshot and commits against its version, so every
+  * question it asks of the table (files, schema, layout, properties)
+  * costs no further log read. */
+case class DeltaSnapshot(tablePath: String, version: Long,
+    adds: Seq[DeltaAction.AddFile], meta: Option[TableMeta],
+    protocol: Option[DeltaAction.Protocol], partitionColumns: Seq[String]) {
+  lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+    meta.flatMap(_.schemaString).map(s => org.apache.spark.sql.types.DataType
+      .fromJson(s).asInstanceOf[org.apache.spark.sql.types.StructType])
+  def configurationJson: Option[String] = meta.flatMap(_.configurationJson)
+}
+
+object DeltaLogReader {
+  /** Log files (JSON commits and checkpoint parts) parsed by every reader
+    * since JVM start — test instrumentation for "a write replays its log
+    * once", where the writer's own reader is out of reach. */
+  val filesRead = new java.util.concurrent.atomic.AtomicLong(0L)
+}
+
 /** Reader for a Delta table's `_delta_log`: version listing, JSON-lines
   * action parsing, parquet-checkpoint interop, and snapshot-state
   * reconstruction with an optional snapshot cache.
@@ -173,6 +196,7 @@ class DeltaLogReader(conf: Configuration) {
   /** Parse one commit file (JSON lines, one action per line). */
   def readCommit(tablePath: String, version: Long): DeltaCommit = {
     commitReadCount += 1
+    DeltaLogReader.filesRead.incrementAndGet()
     val p = commitPath(tablePath, version)
     val fs = Fs.fs(p, conf)
     val reader = new BufferedReader(
@@ -473,6 +497,7 @@ class DeltaLogReader(conf: Configuration) {
   def readCheckpointActions(tablePath: String, cp: CheckpointInstance): Seq[DeltaAction] = {
     val out = Seq.newBuilder[DeltaAction]
     checkpointFiles(tablePath, cp).foreach { file =>
+      DeltaLogReader.filesRead.incrementAndGet()
       val reader = ParquetReader.builder(new GroupReadSupport(), file)
         .withConf(conf).build()
       try {
@@ -725,16 +750,55 @@ class DeltaLogReader(conf: Configuration) {
     * `version` — the protocol's record of the hive layout, needed when a
     * table has NO active add files left to infer it from (a fully
     * deleted partitioned table must not silently de-partition on its
-    * next write or ALTER). JSON commits first, newest checkpoint
-    * at-or-below as the fallback base (expiry keeps a checkpoint). */
+    * next write or ALTER). */
   def partitionColumnsAt(tablePath: String, version: Long): Seq[String] =
-    listVersions(tablePath).filter(_ <= version).reverseIterator
-      .map(v => readCommit(tablePath, v).actions.collectFirst { case m: MetaData => m })
-      .collectFirst { case Some(m) => m.partitionColumns }
-      .orElse(checkpointAtOrBelow(tablePath, version).flatMap(cp =>
-        readCheckpointActions(tablePath, cp)
-          .collectFirst { case m: MetaData => m.partitionColumns }))
-      .getOrElse(Seq.empty)
+    snapshot(tablePath, version).partitionColumns
+
+  /** Replay the log once up to `version`: the newest checkpoint at or
+    * below it, then every JSON commit above the checkpoint (removes before
+    * adds within a commit, so a deletion-vector re-add of the same path
+    * survives). Throws [[PlanningError]] when the log is pruned below the
+    * replay start with no covering checkpoint. The replay also seeds the
+    * metaData and protocol memos, so the commit's write-protocol gate and
+    * metadata lookups read nothing more while the table stays at
+    * `version`. */
+  def snapshot(tablePath: String, version: Long): DeltaSnapshot = {
+    val ckpt = checkpointAtOrBelow(tablePath, version)
+    val replayStart = ckpt.map(_.version + 1).getOrElse(0L)
+    val replay = listVersions(tablePath).filter(v => v >= replayStart && v <= version)
+    replay.headOption.foreach { h =>
+      if (h != replayStart)
+        throw new PlanningError(
+          s"delta log at $tablePath is pruned below $h with no covering checkpoint")
+    }
+    val adds = scala.collection.mutable.HashMap.empty[String, AddFile]
+    var meta: Option[TableMeta] = None
+    var protocol: Option[Protocol] = None
+    var partCols = Seq.empty[String]
+    def fold(v: Long, actions: Seq[DeltaAction]): Unit = {
+      actions.foreach {
+        case r: RemoveFile => adds.remove(r.path)
+        case m: MetaData =>
+          meta = Some(TableMeta(m.id, m.schemaString.orElse(meta.flatMap(_.schemaString)),
+            v, m.configurationJson.orElse(meta.flatMap(_.configurationJson))))
+          partCols = m.partitionColumns
+        case p: Protocol => protocol = Some(p)
+        case _ =>
+      }
+      actions.foreach { case a: AddFile => adds(a.path) = a; case _ => }
+    }
+    // a checkpoint's remove rows are tombstones of older versions, never
+    // of its own adds
+    ckpt.foreach(c => fold(c.version,
+      readCheckpointActions(tablePath, c).filterNot(_.isInstanceOf[RemoveFile])))
+    replay.foreach(v => fold(v, readCommit(tablePath, v).actions))
+    if (metaMemo.get(tablePath).forall(_.atVersion <= version))
+      meta.foreach(m => metaMemo.put(tablePath, m.copy(atVersion = version)))
+    if (protocolMemo.get(tablePath).forall(_._1 <= version))
+      protocolMemo.put(tablePath, (version, protocol))
+    DeltaSnapshot(tablePath, version, adds.values.toSeq.sortBy(_.path), meta,
+      protocol, partCols)
+  }
 
   /** Active file set (path -> size) at `version`.
     *

@@ -1,7 +1,6 @@
 package graft.delta
 
 import com.fasterxml.jackson.databind.JsonNode
-import graft.core.PlanningError
 import graft.util.Jsons
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -120,35 +119,11 @@ object DeltaStats {
     } finally reader.close()
   } catch { case NonFatal(_) => None }
 
-  /** Active add actions (stats preserved) at `version`: newest parquet
-    * checkpoint at-or-below as base, JSON commits replayed on top. The
-    * same pruned/gap guarantees as `snapshotState` (which this parallels —
-    * that path folds to a cached path->size map and serves streaming
-    * planning; this one keeps whole actions for stats consumers). */
+  /** Active add actions (stats preserved) at `version` — the adds of
+    * [[DeltaLogReader.snapshot]]. */
   def activeAdds(log: DeltaLogReader, tablePath: String, version: Long)
-      : Seq[DeltaAction.AddFile] = {
-    import DeltaAction._
-    val jsonVersions = log.listVersions(tablePath).filter(_ <= version)
-    val ckpt = log.checkpointAtOrBelow(tablePath, version)
-    val base: Map[String, AddFile] = ckpt match {
-      case Some(c) => log.readCheckpointActions(tablePath, c)
-        .collect { case a: AddFile => a.path -> a }.toMap
-      case None => Map.empty
-    }
-    val replayStart = ckpt.map(_.version + 1).getOrElse(0L)
-    val replay = jsonVersions.filter(_ >= replayStart)
-    replay.headOption.foreach { h =>
-      if (h != replayStart)
-        throw new PlanningError(
-          s"delta log at $tablePath is pruned below $h with no covering checkpoint")
-    }
-    val state = replay.foldLeft(base) { (acc, v) =>
-      val commit = log.readCommit(tablePath, v)
-      val afterRemoves = commit.removes.foldLeft(acc)((m, r) => m - r.path)
-      commit.adds.foldLeft(afterRemoves)((m, a) => m + (a.path -> a))
-    }
-    state.values.toSeq.sortBy(_.path)
-  }
+      : Seq[DeltaAction.AddFile] =
+    log.snapshot(tablePath, version).adds
 
   /** Exact partition-value pruning for EQUALITY predicates — the string
     * case `prune`'s numeric intervals can't express (a `lang=en` dir on a

@@ -23,6 +23,12 @@ private[delta] case class WrittenPart(path: String, size: Long,
     stats: Option[String], partitionValues: Map[String, String],
     deletionVector: Option[DvDescriptor] = None)
 
+/** What the distributed DV writer tasks read from their one broadcast:
+  * the Hadoop conf plus the touched files' old vectors and physical row
+  * counts, keyed by normalized path. */
+private[delta] case class DvFoldMeta(conf: graft.util.SerializableConf,
+    oldDvs: Map[String, DvDescriptor], physRows: Map[String, Long])
+
 /** Minimal Delta-table writer: parquet part files + an atomic
   * `_delta_log/N.json` commit of commitInfo/metaData/add/remove actions,
   * with optional `cdc` actions for Change-Data-Feed emission.
@@ -125,14 +131,15 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * Returns the number of rows deleted (0 = no commit was made). */
   def deleteWhere(tablePath: String, condition: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.col
-    val readVersion = log.latestVersion(tablePath)
+    val snap = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val adds = DeltaStats.activeAdds(log, tablePath, readVersion)
-    if (adds.isEmpty) return 0L
-    val marked = scanAddsWithRowMeta(tablePath, adds).filter(condition)
+    if (snap.adds.isEmpty) return 0L
+    val marked = scanAddsWithRowMeta(tablePath, snap.adds).filter(condition)
       .select(col(RowMetaFile), col(RowMetaIndex))
-    dvDeleteCommit(tablePath, adds, marked, Seq.empty, Seq.empty, None,
-      readVersion, "DELETE")._2
+    val folded = dvFold(snap, snap.adds, marked)
+    if (folded.isEmpty) return 0L
+    dvCommit(snap, snap.adds, folded, Seq.empty, Seq.empty, None, "DELETE")
+    folded.map(_.freshCount).sum
   }
 
   private[graft] val RowMetaFile = "__file_path"
@@ -158,55 +165,43 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       .drop("_metadata")
   }
 
-  /** The shared DV-delete commit: fold `marked` ([[RowMetaFile]],
+  /** The DV delete's data half: fold `marked` ([[RowMetaFile]],
     * [[RowMetaIndex]]) into one bitmap per file ([[DvRowAgg]] — map-side
     * partial aggregation, the exchange carries bitmaps, never row lists),
     * then hand the folded bitmaps to a bounded set of WRITER TASKS
     * ([[DeletionVector.writeDvPartition]]) that union with existing
     * vectors, drop files whose every physical row is now deleted, and
-    * write the `.bin` frames executor-side — the driver collects only
-    * `(path, descriptor)` rows and commits the re-adds together with
-    * `extraParts` (a DV merge's appended payload) and `cdcParts` in ONE
-    * atomic commit. No bitmap byte ever materializes on the driver
-    * ([[DeletionVector.driverBitmapBytes]] pins this): a delete touching
-    * millions of files holds millions of descriptors driver-side — the
-    * same O(#files) metadata any delta commit holds — not billions of
-    * deleted-row bits. Returns (version, deletedRows); no-op (-1, 0) when
-    * nothing matched and nothing is appended. */
-  private[graft] def dvDeleteCommit(tablePath: String,
-      candidates: Seq[DeltaAction.AddFile], marked: DataFrame,
-      extraParts: Seq[WrittenPart], cdcParts: Seq[(String, Long)],
-      txn: Option[(String, Long)], readVersion: Long,
-      operation: String,
-      schemaOverride: Option[StructType] = None,
-      mintedMaxColumnId: Option[Long] = None): (Long, Long) = {
+    * write the `.bin` frames executor-side — the driver collects only one
+    * [[DvWriteResult]] per touched file. No bitmap byte ever materializes
+    * on the driver ([[DeletionVector.driverBitmapBytes]] pins this): a
+    * delete touching millions of files holds millions of descriptors
+    * driver-side — the same O(#files) metadata any delta commit holds —
+    * not billions of deleted-row bits. The writer tasks read the old
+    * descriptors, row counts and Hadoop conf from ONE broadcast
+    * (destroyed after the collect) instead of deserializing them per
+    * task. Nothing is committed here: see [[dvCommit]]. */
+  private[graft] def dvFold(snap: DeltaSnapshot,
+      candidates: Seq[DeltaAction.AddFile], marked: DataFrame): Seq[DvWriteResult] = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.functions.{col, count, lit, udaf}
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    val tablePath = snap.tablePath
     val dvAgg = udaf(new DvRowAgg(), Encoders.scalaLong)
-    val byNorm = candidates.map(a =>
-      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> a).toMap
+    def byNorm[T](f: DeltaAction.AddFile => Option[T]): Map[String, T] =
+      candidates.flatMap(a => f(a).map(
+        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> _)).toMap
     // metadata the writer tasks need, keyed by normalized file path —
     // descriptors and row counts only, O(#files) small
-    val oldDvs: Map[String, DvDescriptor] = candidates.flatMap(a =>
-      a.deletionVector.map(d =>
-        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
-    def physRows(a: DeltaAction.AddFile): Option[Long] = a.stats.flatMap { s =>
-      try Jsons.optLong(Jsons.parse(s), "numRecords")
-      catch { case scala.util.control.NonFatal(_) => None }
-    }
-    val phys: Map[String, Long] = candidates.flatMap(a => physRows(a).map(n =>
-      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> n)).toMap
+    val taskMeta = spark.sparkContext.broadcast(DvFoldMeta(
+      new graft.util.SerializableConf(conf), byNorm(_.deletionVector),
+      byNorm(DeltaWriter.physRows)))
     // ~64 files' vectors per .bin keeps test-scale commits at one packed
     // file (the pre-r7 shape) while a wide delete fans out to all cores
     val numTasks = math.max(1, math.min((candidates.size + 63) / 64,
       spark.sparkContext.defaultParallelism))
-    val serConf = new graft.util.SerializableConf(conf)
     val folded = marked.groupBy(RowMetaFile)
       .agg(dvAgg(col(RowMetaIndex)).as("dv"), count(lit(1)).as("n"))
       .select(col(RowMetaFile).as("path"), col("dv"), col("n"))
-      .as(Encoders.product[DvFileFold])
+      .as(DeltaWriter.foldEncoder)
     // single-writer commits (≤64 touched files, the common case) MERGE the
     // aggregation's output into one task with coalesce — no second
     // exchange; any file-to-task assignment is correct since each row is
@@ -216,37 +211,43 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val routed =
       if (numTasks == 1) folded.coalesce(1)
       else folded.repartition(numTasks)
-    val results: Seq[DvWriteResult] = routed
-      .mapPartitions(folds => DeletionVector.writeDvPartition(
-        tablePath, serConf.value, oldDvs, phys)(folds))(
-        Encoders.product[DvWriteResult])
+    try routed
+      .mapPartitions { folds =>
+        val m = taskMeta.value
+        DeletionVector.writeDvPartition(tablePath, m.conf.value, m.oldDvs,
+          m.physRows)(folds)
+      }(DeltaWriter.resultEncoder)
       .collect().toSeq
-    if (results.isEmpty && extraParts.isEmpty && cdcParts.isEmpty) return (-1L, 0L)
+    finally taskMeta.destroy()
+  }
 
+  /** The DV delete's commit half: re-add every folded file with its new
+    * vector (or plain-remove it when every physical row is now deleted)
+    * together with `extraParts` (a DV merge's appended payload) and
+    * `cdcParts` in ONE atomic commit against `snap`'s version. */
+  private[graft] def dvCommit(snap: DeltaSnapshot,
+      candidates: Seq[DeltaAction.AddFile], results: Seq[DvWriteResult],
+      extraParts: Seq[WrittenPart], cdcParts: Seq[(String, Long)],
+      txn: Option[(String, Long)], operation: String,
+      schemaOverride: Option[StructType] = None,
+      mintedMaxColumnId: Option[Long] = None): Long = {
+    val tablePath = snap.tablePath
+    val byNorm = candidates.map(a =>
+      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> a).toMap
     def addOf(path: String): DeltaAction.AddFile =
       byNorm.getOrElse(DeletionVector.normUri(path),
         throw new GraftError(s"matched file $path not in snapshot"))
-    val deleted = results.map(_.freshCount).sum
     val reAdds = results.filter(_.ref.isDefined).map { r =>
       val a = addOf(r.path)
       WrittenPart(a.path, a.size, a.stats, a.partitionValues,
         Some(DvDescriptor("u", r.ref.get, r.offset, r.sizeInBytes.get,
           r.cardinality)))
     }
-    // path-derived partition columns are physical on a mapped table;
-    // metaData partitionColumns stay logical
-    val partColsLogical = {
-      val physToLogical = declared.filter(ColumnMapping.isMapped)
-        .map(s => ColumnMapping.physicalNames(s).map(_.swap))
-        .getOrElse(Map.empty[String, String])
-      partitionColumnsOf(tablePath).map(p => physToLogical.getOrElse(p, p))
-    }
-    val version = commit(tablePath, operation,
-      schemaOverride.orElse(declared).getOrElse(StructType(Nil)),
+    commit(tablePath, operation,
+      schemaOverride.orElse(snap.schema).getOrElse(StructType(Nil)),
       results.map(r => addOf(r.path).path), reAdds ++ extraParts, cdcParts,
-      partColsLogical, txn, readVersion = Some(readVersion),
+      logicalPartitionColumns(snap), txn, base = Some(snap),
       mintedMaxColumnId = mintedMaxColumnId)
-    (version, deleted)
   }
 
   /** DV-based MERGE primitive: in ONE atomic commit, bitmap-delete every
@@ -258,52 +259,65 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * same commit: the metaData action grows the new nullable columns, and
     * old rows null-fill them at READ (Delta semantics make this free —
     * scans apply the declared schema, absent columns read NULL — so
-    * widening costs no rewrite either). Returns deleted-row count. */
-  private[graft] def dvMerge(tablePath: String, candidates: Seq[DeltaAction.AddFile],
-      marked: DataFrame, payload: DataFrame, cdfChanges: Option[DataFrame],
-      txn: Option[(String, Long)], readVersion: Long): Long = {
+    * widening costs no rewrite either).
+    *
+    * The payload (and CDF) parts write and the bitmap fold share no data,
+    * so they run at the same time ([[DeltaWriter.concurrently]]), each
+    * building its frame (`payload`, `marked`) on its own thread; the
+    * commit waits for both, and a failure in either cancels the other and
+    * commits nothing. Returns the deleted-row count. */
+  private[graft] def dvMerge(snap: DeltaSnapshot, candidates: Seq[DeltaAction.AddFile],
+      marked: => DataFrame, payload: => DataFrame, cdfChanges: Option[DataFrame],
+      txn: Option[(String, Long)]): Long = {
     import org.apache.spark.sql.functions.{col, lit}
-    val root = new Path(tablePath)
+    val root = new Path(snap.tablePath)
     val fs = Fs.fs(root, conf)
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .getOrElse(payload.schema)
-    val mapped = ColumnMapping.isMapped(declared)
-    val newCols = payload.schema.fields
-      .filterNot(f => declared.fieldNames.contains(f.name))
-    // widening on a mapped table mints physical names + bumps maxColumnId
-    // in the same commit, like writeImpl's mergeSchema append
-    val minted: Option[(Array[StructField], Long)] =
-      if (mapped && newCols.nonEmpty)
-        Some(mintMappedColumns(tablePath, declared, newCols))
-      else None
-    val outSchema = StructType(declared.fields ++
-      minted.map(_._1).getOrElse(newCols.map(_.copy(nullable = true))))
-    val aligned = payload.select(outSchema.fields.toSeq.map(f =>
-      (if (payload.columns.contains(f.name)) col(f.name).cast(f.dataType)
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
-    // appended payload files carry physical names on a mapped table; the
-    // hive layout (path-derived partCols) is already physical there
-    val toWrite =
-      if (mapped) ColumnMapping.toPhysical(aligned, outSchema) else aligned
-    val effectiveParts = partitionColumnsOf(tablePath)
-    val parts =
-      if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
-      else writePartitionedParts(toWrite, root, effectiveParts)
-    val cdcParts = cdfChanges.map { ch =>
-      val cdcDir = new Path(root, "_change_data")
-      fs.mkdirs(cdcDir)
-      val out =
-        if (mapped) ColumnMapping.cdcToPhysical(ch, outSchema,
-          keep = Seq(graft.Cdc.ChangeTypeCol))
-        else ch
-      writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
-        (s"_change_data/${p.path}", p.size))
-    }.getOrElse(Seq.empty)
-    dvDeleteCommit(tablePath, candidates, marked, parts, cdcParts, txn,
-      readVersion, "MERGE",
-      schemaOverride = if (newCols.isEmpty) None else Some(outSchema),
-      mintedMaxColumnId = minted.map(_._2))._2
+    /** Writes the payload (and CDF) parts; returns them with the widened
+      * schema and minted column id the commit must carry, if any. */
+    def writePayload(): (Seq[WrittenPart], Seq[(String, Long)], Option[StructType], Option[Long]) = {
+      val changed = payload
+      val declared = snap.schema.getOrElse(changed.schema)
+      val mapped = ColumnMapping.isMapped(declared)
+      val newCols = changed.schema.fields
+        .filterNot(f => declared.fieldNames.contains(f.name))
+      // widening on a mapped table mints physical names + bumps maxColumnId
+      // in the same commit, like writeImpl's mergeSchema append
+      val minted: Option[(Array[StructField], Long)] =
+        if (mapped && newCols.nonEmpty)
+          Some(mintMappedColumns(snap.configurationJson, declared, newCols))
+        else None
+      val outSchema = StructType(declared.fields ++
+        minted.map(_._1).getOrElse(newCols.map(_.copy(nullable = true))))
+      val aligned = changed.select(outSchema.fields.toSeq.map(f =>
+        (if (changed.columns.contains(f.name)) col(f.name).cast(f.dataType)
+         else lit(null).cast(f.dataType)).as(f.name)): _*)
+      // appended payload files carry physical names on a mapped table; the
+      // hive layout (path-derived partCols) is already physical there
+      val toWrite =
+        if (mapped) ColumnMapping.toPhysical(aligned, outSchema) else aligned
+      val effectiveParts = partitionColumnsOf(snap)
+      val parts =
+        if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
+        else writePartitionedParts(toWrite, root, effectiveParts)
+      val cdcParts = cdfChanges.map { ch =>
+        val cdcDir = new Path(root, "_change_data")
+        fs.mkdirs(cdcDir)
+        val out =
+          if (mapped) ColumnMapping.cdcToPhysical(ch, outSchema,
+            keep = Seq(graft.Cdc.ChangeTypeCol))
+          else ch
+        writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
+          (s"_change_data/${p.path}", p.size))
+      }.getOrElse(Seq.empty)
+      (parts, cdcParts, if (newCols.isEmpty) None else Some(outSchema), minted.map(_._2))
+    }
+    val ((parts, cdcParts, schemaOverride, mintedMaxColumnId), folded) =
+      DeltaWriter.concurrently(spark)(writePayload())(dvFold(snap, candidates, marked))
+    // nothing matched and nothing to append: no commit
+    if (folded.nonEmpty || parts.nonEmpty || cdcParts.nonEmpty)
+      dvCommit(snap, candidates, folded, parts, cdcParts, txn, "MERGE",
+        schemaOverride, mintedMaxColumnId)
+    folded.map(_.freshCount).sum
   }
 
   /** Translate skipping-range keys to the PHYSICAL column names for
@@ -404,6 +418,11 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     log.tableSchemaString(tablePath)
       .map(s => DataType.fromJson(s).asInstanceOf[StructType])
 
+  /** The table at its latest version from one log replay (None = no
+    * commit yet) — what a write plans from and commits against. */
+  def snapshot(tablePath: String): Option[DeltaSnapshot] =
+    log.latestVersion(tablePath).map(log.snapshot(tablePath, _))
+
   /** Partition columns of an existing table, in layout order (derived
     * from an active add's path — the authoritative record of the hive
     * layout actually on disk; PHYSICAL names on mapped tables). A table
@@ -413,16 +432,27 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * silently DE-PARTITION the table (and dropColumn's partition-column
     * guard could never fire). Empty for unpartitioned tables. */
   def partitionColumnsOf(tablePath: String): Seq[String] =
-    log.latestVersion(tablePath).map { v =>
-      DeltaStats.activeAdds(log, tablePath, v).headOption
-        .map(_.path.split('/').dropRight(1).filter(_.contains('='))
-          .map(seg => seg.take(seg.indexOf('='))).toSeq)
-        .getOrElse {
-          val toPhys = tableSchema(tablePath).map(ColumnMapping.physicalNames)
-            .getOrElse(Map.empty[String, String])
-          log.partitionColumnsAt(tablePath, v).map(p => toPhys.getOrElse(p, p))
-        }
-    }.getOrElse(Seq.empty)
+    snapshot(tablePath).map(partitionColumnsOf).getOrElse(Seq.empty)
+
+  private[graft] def partitionColumnsOf(snap: DeltaSnapshot): Seq[String] =
+    snap.adds.headOption
+      .map(_.path.split('/').dropRight(1).filter(_.contains('='))
+        .map(seg => seg.take(seg.indexOf('='))).toSeq)
+      .getOrElse {
+        val toPhys = snap.schema.map(ColumnMapping.physicalNames)
+          .getOrElse(Map.empty[String, String])
+        snap.partitionColumns.map(p => toPhys.getOrElse(p, p))
+      }
+
+  /** [[partitionColumnsOf]] in the LOGICAL name domain the metaData
+    * action's `partitionColumns` speaks (path-derived names are physical
+    * on a mapped table). */
+  private def logicalPartitionColumns(snap: DeltaSnapshot): Seq[String] = {
+    val physToLogical = snap.schema.filter(ColumnMapping.isMapped)
+      .map(s => ColumnMapping.physicalNames(s).map(_.swap))
+      .getOrElse(Map.empty[String, String])
+    partitionColumnsOf(snap).map(p => physToLogical.getOrElse(p, p))
+  }
 
   /** Latest committed version (None = not a delta table). Capture this
     * BEFORE planning a merge/overwrite from the snapshot and pass it to
@@ -433,15 +463,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   /** Active add actions (stats + partitionValues preserved) at the latest
     * version — the driver-side file inventory merge planning prunes over. */
   def activeAdds(tablePath: String): Seq[DeltaAction.AddFile] =
-    log.latestVersion(tablePath)
-      .map(v => DeltaStats.activeAdds(log, tablePath, v))
-      .getOrElse(Seq.empty)
-
-  /** Active add actions at a SPECIFIC version — pair with [[latestVersion]]
-    * so merge planning and its commit-time conflict check share one
-    * snapshot version. */
-  def activeAddsAt(tablePath: String, version: Long): Seq[DeltaAction.AddFile] =
-    DeltaStats.activeAdds(log, tablePath, version)
+    snapshot(tablePath).map(_.adds).getOrElse(Seq.empty)
 
   /** Scan only the given add files of the table (declared schema applies —
     * missing columns null-fill, hive partition values re-materialize,
@@ -454,15 +476,24 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * single commit removes exactly `removePaths` and adds the new parts;
     * every OTHER active add action simply survives (a delta snapshot is a
     * fold of adds minus removes, so not removing a file IS carrying it
-    * forward — no rewrite, no re-add). The table keeps its partitioning. */
+    * forward — no rewrite, no re-add). The table keeps its partitioning.
+    * `readVersion` is the version the remove set was planned from. */
   def replaceFiles(df: DataFrame, tablePath: String, removePaths: Seq[String],
       mergeSchema: Boolean = false,
       cdfChanges: Option[DataFrame] = None,
       txn: Option[(String, Long)] = None,
       readVersion: Option[Long] = None): Long =
+    replaceFilesAt(df, tablePath, readVersion.map(log.snapshot(tablePath, _)),
+      removePaths, mergeSchema, cdfChanges, txn)
+
+  /** [[replaceFiles]] planned from (and conflict-checked against) `base`. */
+  private[graft] def replaceFilesAt(df: DataFrame, tablePath: String,
+      base: Option[DeltaSnapshot], removePaths: Seq[String],
+      mergeSchema: Boolean, cdfChanges: Option[DataFrame],
+      txn: Option[(String, Long)]): Long =
     writeImpl(df, tablePath, DeltaWriteMode.Append, mergeSchema, cdfChanges,
       Seq.empty, explicitRemoves = Some(removePaths), operation = "MERGE",
-      txn = txn, plannedReadVersion = readVersion)
+      txn = txn, base = base)
 
   /** Write `df` to the table; returns the committed version. `partitionBy`
     * lays data out hive-style (`col=value` dirs directly under the table
@@ -509,9 +540,9 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * Ids continue from delta.columnMapping.maxColumnId, falling back to
     * the highest existing field id (nested fields included) when a
     * foreign table never recorded the property. */
-  private def mintMappedColumns(tablePath: String, es: StructType,
+  private def mintMappedColumns(configurationJson: Option[String], es: StructType,
       newCols: Array[StructField]): (Array[StructField], Long) = {
-    val maxId = log.tableConfigurationJson(tablePath)
+    val maxId = configurationJson
       .map(Jsons.parse)
       .flatMap(n => Jsons.optStr(n, "delta.columnMapping.maxColumnId"))
       .map(_.toLong)
@@ -883,17 +914,17 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       explicitRemoves: Option[Seq[String]],
       operation: String,
       txn: Option[(String, Long)] = None,
-      plannedReadVersion: Option[Long] = None): Long = {
+      base: Option[DeltaSnapshot] = None): Long = {
     val root = new Path(tablePath)
     val fs = Fs.fs(root, conf)
     fs.mkdirs(root)
-    // the snapshot version every read below (schema, partitioning, and —
-    // for Overwrite — the remove set) is consistent with; the commit
-    // conflict-checks anything that lands after it (callers that planned
-    // even earlier, e.g. a MERGE's touched-file pruning, pass their own)
-    val readVersion = plannedReadVersion.orElse(log.latestVersion(tablePath))
-    val existingSchema = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    // the ONE snapshot every read below (schema, partitioning, properties
+    // and — for Overwrite — the remove set) comes from; the commit
+    // conflict-checks anything that lands after its version (callers that
+    // planned even earlier, e.g. a MERGE's touched-file pruning, pass their
+    // own)
+    val snap = base.orElse(snapshot(tablePath))
+    val existingSchema = snap.flatMap(_.schema)
     // column-mapped tables: data files carry the PHYSICAL col-<uuid>
     // names at every nesting level (delta-spark's mode=name write shape);
     // the metaData schema keeps the logical names + mapping metadata.
@@ -911,8 +942,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     // metaData partitionColumns speak logical names
     val physToLogical: Map[String, String] = mappedSchema
       .map(es => ColumnMapping.physicalNames(es).map(_.swap)).getOrElse(Map.empty)
-    val existingParts = partitionColumnsOf(tablePath)
-      .map(p => physToLogical.getOrElse(p, p))
+    val existingParts = snap.map(logicalPartitionColumns).getOrElse(Seq.empty)
     // accept either name domain from callers (maintenance paths hand back
     // path-derived physical names); all checks below run on logical
     val partitionByLogical = partitionBy.map(p => physToLogical.getOrElse(p, p))
@@ -944,7 +974,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val minted: Option[(Array[StructField], Long)] = mappedSchema.flatMap { es =>
       val newCols = df.schema.fields.filterNot(f => es.fieldNames.contains(f.name))
       if (newCols.isEmpty || mode != DeltaWriteMode.Append || !mergeSchema) None
-      else Some(mintMappedColumns(tablePath, es, newCols))
+      else Some(mintMappedColumns(snap.flatMap(_.configurationJson), es, newCols))
     }
     val outSchema = existingSchema match {
       case Some(es) if mappedSchema.isDefined =>
@@ -960,7 +990,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         StructType(es.fields ++ newCols.map(_.copy(nullable = true)))
       case _ => df.schema
     }
-    val tableConfig = log.tableConfigurationJson(tablePath)
+    val tableConfig = snap.flatMap(_.configurationJson)
     if (mode == DeltaWriteMode.Overwrite && DeltaWriter.isAppendOnly(tableConfig))
       throw new GraftError(
         s"delta table $tablePath is append-only (delta.appendOnly=true); " +
@@ -1014,14 +1044,11 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     }.getOrElse(Seq.empty)
 
     val removed: Seq[String] = explicitRemoves.getOrElse(mode match {
-      case DeltaWriteMode.Overwrite =>
-        readVersion
-          .map(v => log.snapshotState(tablePath, v).map(_._1))
-          .getOrElse(Seq.empty)
+      case DeltaWriteMode.Overwrite => snap.map(_.adds.map(_.path)).getOrElse(Seq.empty)
       case _ => Seq.empty
     })
     commit(tablePath, operation, outSchema, removed, parts, cdcParts,
-      effectiveParts, txn, readVersion, mintedMaxColumnId = minted.map(_._2))
+      effectiveParts, txn, base = snap, mintedMaxColumnId = minted.map(_._2))
   }
 
   /** Write df's parquet parts RENAME-FREE into a fresh uniquely-named data
@@ -1102,15 +1129,25 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       removed: Seq[String], adds: Seq[WrittenPart], cdcs: Seq[(String, Long)],
       partitionCols: Seq[String], txn: Option[(String, Long)] = None,
       readVersion: Option[Long] = None,
-      mintedMaxColumnId: Option[Long] = None): Long = {
-    val tid = log.tableId(tablePath).getOrElse(UUID.randomUUID().toString)
-    val firstVersion = log.latestVersion(tablePath).map(_ + 1).getOrElse(0L)
+      mintedMaxColumnId: Option[Long] = None,
+      base: Option[DeltaSnapshot] = None): Long = {
+    // a commit planned from a snapshot takes the table id, properties and
+    // conflict baseline from it; the log is read again only for commits
+    // that landed after the snapshot
+    val rv = base.map(_.version).orElse(readVersion)
+    val tid = base.map(_.meta.map(_.id).filter(_.nonEmpty))
+      .getOrElse(log.tableId(tablePath)).getOrElse(UUID.randomUUID().toString)
+    val firstVersion = base.map(_.version + 1)
+      .getOrElse(log.latestVersion(tablePath).map(_ + 1).getOrElse(0L))
+    def configAt(version: Long): Option[String] = base match {
+      case Some(b) if b.version + 1 == version => b.configurationJson
+      case _ => log.tableConfigurationJson(tablePath)
+    }
     // delta.appendOnly: every remove reaching THIS funnel is a
     // dataChange=true remove (delete/overwrite/merge/restore) — exactly
     // what the feature forbids. OPTIMIZE/PURGE rewrites commit through
     // their own dataChange=false body and stay legal, as the spec allows.
-    if (removed.nonEmpty && DeltaWriter.isAppendOnly(
-        log.tableConfigurationJson(tablePath)))
+    if (removed.nonEmpty && DeltaWriter.isAppendOnly(configAt(firstVersion)))
       throw new GraftError(
         s"delta table $tablePath is append-only (delta.appendOnly=true); " +
         s"$operation would remove ${removed.size} data file(s) — the " +
@@ -1169,7 +1206,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       // foreign table's configuration (delta.enableChangeDataFeed,
       // delta.columnMapping.mode, delta.appendOnly, ...) and corrupt its
       // semantics for real delta readers
-      val cfgNode = log.tableConfigurationJson(tablePath).map(Jsons.parse)
+      val cfgNode = configAt(version).map(Jsons.parse)
         .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
         .getOrElse(Jsons.obj())
       mintedMaxColumnId.foreach { mid =>
@@ -1219,10 +1256,11 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
     // the metaData state our re-emission was planned from — evaluated
     // only when intervening commits actually need conflict-checking
-    lazy val metaBaseline = readVersion.flatMap(v => log.metaAt(tablePath, v))
+    lazy val metaBaseline = base.map(_.meta)
+      .getOrElse(rv.flatMap(v => log.metaAt(tablePath, v)))
     commitWithRetry(tablePath, content,
       DeltaWriter.conflictReason(operation, removed, txn, _, metaBaseline),
-      readVersion)
+      rv)
   }
 
   /** Optimistic concurrency: attempt the commit at latest+1; when another
@@ -1525,6 +1563,59 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
 object DeltaWriter {
   private[delta] val MaxCommitAttempts = 10
+
+  // derived once: a product encoder is built by Scala reflection
+  private lazy val foldEncoder = org.apache.spark.sql.Encoders.product[DvFileFold]
+  private lazy val resultEncoder = org.apache.spark.sql.Encoders.product[DvWriteResult]
+
+  /** PHYSICAL row count of an add from its stats (None without stats). */
+  private[graft] def physRows(a: DeltaAction.AddFile): Option[Long] =
+    a.stats.flatMap { s =>
+      try Jsons.optLong(Jsons.parse(s), "numRecords")
+      catch { case scala.util.control.NonFatal(_) => None }
+    }
+
+  /** Daemon threads for the second half of [[concurrently]]; idle threads
+    * expire, so a process that never merges keeps none. */
+  private lazy val halfPool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-delta-half")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Run `a` and `b` at the same time, each on a pool thread that carries
+    * the caller's Spark local properties and active session
+    * (`SQLExecution.withThreadLocalCaptured`, the mechanism Spark's own
+    * broadcast and subquery execution use). Each half's jobs carry a job
+    * tag of their own; once one half fails, the other's jobs are cancelled
+    * (again on every poll, so a job it starts after the first cancel is
+    * caught too) until it returns, and the FIRST failure is rethrown — so
+    * a failed pair leaves no job running, and the caller commits nothing. */
+  private[graft] def concurrently[A, B](spark: SparkSession)(a: => A)(b: => B): (A, B) = {
+    import java.util.concurrent.{CompletableFuture, TimeUnit}
+    val sc = spark.sparkContext
+    val id = UUID.randomUUID().toString.take(8)
+    val (tagA, tagB) = (s"graft-half-$id-a", s"graft-half-$id-b")
+    val firstFailure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    def half[T](tag: String)(body: => T): CompletableFuture[T] =
+      org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], halfPool) {
+        sc.addJobTag(tag)
+        try body
+        catch { case e: Throwable => firstFailure.compareAndSet(null, e); throw e }
+        finally sc.removeJobTag(tag)
+      }
+    val fa = half(tagA)(a)
+    val fb = half(tagB)(b)
+    while (!fa.isDone || !fb.isDone) {
+      if (fa.isCompletedExceptionally) sc.cancelJobsWithTag(tagB)
+      if (fb.isCompletedExceptionally) sc.cancelJobsWithTag(tagA)
+      try (if (fa.isDone) fb else fa).get(50, TimeUnit.MILLISECONDS)
+      catch { case _: Exception => }
+    }
+    Option(firstFailure.get).foreach(e => throw e)
+    (fa.join(), fb.join())
+  }
 
   /** `delta.appendOnly=true` in the table configuration — the appendOnly
     * writer feature's switch (the legacy writer-2 table property and the

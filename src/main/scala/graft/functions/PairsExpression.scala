@@ -84,6 +84,20 @@ object PairsKernel {
     new GenericArrayData(out.result())
   }
 
+  /** C(n, 2), the pair count of an n-member bucket, as an array size:
+    * computed in Long (n * (n - 1) overflows Int from n = 46,342), and a
+    * bucket whose pairs exceed the JVM's array range fails with a
+    * [[graft.core.GraftError]] naming its size instead of allocating a
+    * wrong-size array. */
+  def pairCount(n: Int): Int = {
+    val pairs = n.toLong * (n - 1) / 2
+    if (pairs > Int.MaxValue - 8)
+      throw new graft.core.GraftError(
+        s"a bucket of $n members has $pairs pairs, past the JVM array range " +
+        s"(${Int.MaxValue - 8}); cap the bucket size")
+    pairs.toInt
+  }
+
   /** All (i < j) pairs from a bucket's `array<long>` membership —
     * `array<struct<a, b>>`, the [[Dedup.candidatePairs]] shape. A null
     * element pairs through as a null field, exactly as the HOF built
@@ -99,7 +113,7 @@ object PairsKernel {
       if (items.isNullAt(i)) idNull(i) = true else ids(i) = items.getLong(i)
       i += 1
     }
-    val out = new Array[Any](n * (n - 1) / 2)
+    val out = new Array[Any](pairCount(n))
     var k = 0
     i = 0
     while (i < n) {

@@ -82,9 +82,11 @@ class FileSource(
   def readBatch(spark: SparkSession, batch: BatchInfo): DataFrame = {
     val paths = batch.paths
     if (paths.isEmpty) return spark.emptyDataFrame
+    val fmt = FormatInference.normalize(format)
     var reader = spark.read.options(readerOptions)
-    schema.foreach(s => reader = reader.schema(s))
-    FormatInference.normalize(format) match {
+    schema.orElse(if (fmt == "parquet") parquetFooterSchema(spark, paths) else None)
+      .foreach(s => reader = reader.schema(s))
+    fmt match {
       case "parquet" => reader.parquet(paths: _*)
       case "csv" => reader.option("header", readerOptions.getOrElse("header", "true")).csv(paths: _*)
       case "ndjson" => reader.json(paths: _*)
@@ -97,6 +99,40 @@ class FileSource(
         throw new UnsupportedFormatError(
           s"format '$other' is not supported on this classpath (no ${other} reader jar)")
     }
+  }
+
+  /** Reader options under which Spark's parquet inference reads more than
+    * the first file's footer, or a different file set. */
+  private val inferenceOptions = Set("mergeSchema", "basePath", "pathGlobFilter",
+    "recursiveFileLookup", "modifiedBefore", "modifiedAfter")
+
+  /** The schema Spark's parquet inference would give `paths`, read on the
+    * DRIVER from the one footer that inference reads (the first data
+    * file; without `mergeSchema` the others are assumed to agree) and
+    * converted by Spark's own `ParquetFileFormat.readSchemaFromFooter`
+    * under the session's conf — so a batch launches no schema-inference
+    * job. None (the read infers as before) whenever inference would do
+    * more: merging schemas, a summary or hidden first file, or an option
+    * that changes the file set or adds partition columns; also when the
+    * footer cannot be read, so Spark reports the error. */
+  private def parquetFooterSchema(spark: SparkSession,
+      paths: Seq[String]): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val first = new Path(paths.head)
+    val mergeSchema = spark.conf.getOption("spark.sql.parquet.mergeSchema")
+      .exists(_.toBoolean)
+    if (mergeSchema || readerOptions.keySet.exists(inferenceOptions) ||
+        first.getName.startsWith("_") || first.getName.startsWith("."))
+      return None
+    try {
+      val hconf = spark.sessionState.newHadoopConfWithOptions(readerOptions)
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(first, hconf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      Some(ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(first, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    } catch { case scala.util.control.NonFatal(_) => None }
   }
 
   /** Post-commit cleanup of consumed files (reference `sources/file.py:106-148`). */

@@ -155,4 +155,144 @@ class BatchInvarianceSuite extends SparkSpec {
       assert(rows === Seq((1L, "a", None), (2L, "b", Some(5.0))))
     }
   }
+
+  test("a parquet FileSource batch takes its schema from one footer, without a job") {
+    withTmpDir { tmp =>
+      val in = s"$tmp/landing"
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(in))
+      def land(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        df.coalesce(1).write.parquet(s"$tmp/stage-$name")
+        val part = new java.io.File(s"$tmp/stage-$name").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(in, s"$name.parquet"))
+      }
+      val base = spark.range(3).select(col("id"), (col("id") * 1.5).as("x"),
+        col("id").cast("int").as("i"), col("id").cast("string").as("s"),
+        col("id").cast("decimal(12,3)").as("d"),
+        to_date(lit("2024-02-29")).as("day"),
+        timestamp_seconds(col("id") + 1700000000L).as("ts"),
+        array(col("id"), lit(7L)).as("arr"),
+        struct(col("id").as("a"), lit("b").as("b")).as("st"),
+        map(lit("k"), col("id")).as("m"))
+      land(base, "b0")
+      // the next batch adds a column
+      land(base.withColumn("note", concat(lit("n"), col("id").cast("string"))), "b1")
+      val src = new FileSource(in, new FileStreamCheckpoint(s"$tmp/cp", conf), "parquet",
+        FileSourceOptions(pattern = "*.parquet", maxFilesPerTrigger = Some(1)))
+      for (name <- Seq("b0", "b1")) {
+        val b = src.planBatch().get
+        var df: org.apache.spark.sql.DataFrame = null
+        assert(countJobs { df = src.readBatch(spark, b) } === 0, s"batch $name")
+        assert(df.schema === spark.read.parquet(b.paths: _*).schema, s"batch $name")
+        assert(df.collect().toSeq === spark.read.parquet(b.paths: _*).collect().toSeq)
+        src.commitBatch(b, Map.empty)
+      }
+      assert(src.planBatch().isEmpty)
+      // a two-file batch: inference reads the first file only, and so do we
+      val src2 = new FileSource(in, new FileStreamCheckpoint(s"$tmp/cp2", conf), "parquet",
+        FileSourceOptions(pattern = "*.parquet"))
+      val b2 = src2.planBatch().get
+      assert(b2.paths.size === 2)
+      assert(src2.readBatch(spark, b2).schema === spark.read.parquet(b2.paths: _*).schema)
+    }
+  }
+
+  /** A 4-file table of even ids 0..3998 plus two small commits (ids from
+    * 10000), and a 300-row change batch over ids below 2000: 150 updates,
+    * 30 deletes, 120 inserts of odd ids — so key-bound pruning leaves the
+    * upper files untouched. */
+  private def mergeFixture(t: String, batchDir: String): org.apache.spark.sql.DataFrame = {
+    def rows(ids: org.apache.spark.sql.DataFrame) =
+      ids.select(col("id"), (col("id") * 3).as("v"), (col("id") % 7).cast("string").as("cat"))
+    writer.write(rows(spark.range(0, 2000).select((col("id") * 2).as("id")))
+      .repartitionByRange(4, col("id")), t, DeltaWriteMode.Append)
+    writer.write(rows(spark.range(10000, 10050).toDF("id")), t, DeltaWriteMode.Append)
+    writer.write(rows(spark.range(10050, 10100).toDF("id")), t, DeltaWriteMode.Append)
+    val updates = (0 until 150).map(k => (4L * k, -1L, "u", "update_postimage"))
+    val deletes = (0 until 30).map(k => (4L * k + 2, 0L, "x", "delete"))
+    val inserts = (0 until 120).map(k => (2L * k + 1, 1L, "i", "insert"))
+    // the batch arrives as a landed parquet file, as a pipeline reads it
+    (updates ++ deletes ++ inserts).toDF("id", "v", "cat", Cdc.ChangeTypeCol)
+      .withColumn(Cdc.CommitVersionCol, lit(7L)).coalesce(1).write.parquet(batchDir)
+    spark.read.parquet(batchDir)
+  }
+
+  private def copyDir(from: String, to: String): Unit = {
+    import scala.jdk.CollectionConverters._
+    val src = java.nio.file.Paths.get(from)
+    java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
+      val dst = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(dst)
+      else java.nio.file.Files.copy(p, dst)
+    }
+  }
+
+  test("a DV merge plans once: at most 8 jobs, one log replay, the sequential result") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/silver"; val seq = s"$tmp/sequential"
+      val changes = mergeFixture(t, s"$tmp/batch")
+      copyDir(t, seq)
+      val readsBefore = graft.delta.DeltaLogReader.filesRead.get()
+      var r: MergeResult = null
+      val jobs = countJobs {
+        r = DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"), txn = Some(("app", 1L)))
+      }
+      val reads = graft.delta.DeltaLogReader.filesRead.get() - readsBefore
+      assert(jobs <= 8, s"$jobs jobs")
+      // versions 0..2, no checkpoint: one replay reads three commits
+      assert(reads === 3, s"$reads log files read")
+
+      // the sequential path from public primitives: bitmap-delete every
+      // touched key, then append the post-state
+      val keys = changes.select("id").as[Long].collect().toSeq
+      val w = writer
+      assert(w.deleteWhere(seq, col("id").isin(keys: _*)) === 150 + 30)
+      w.write(changes.filter(col(Cdc.ChangeTypeCol) =!= "delete")
+        .select("id", "v", "cat"), seq, DeltaWriteMode.Append)
+
+      val expectedRows = w.read(seq).orderBy("id").collect().toSeq
+      assert(r === MergeResult(300, expectedRows.size, "merge",
+        Map("update_postimage" -> 150L, "delete" -> 30L, "insert" -> 120L)))
+      assert(w.read(t).orderBy("id").collect().toSeq === expectedRows)
+      def cardinalities(p: String) = w.activeAdds(p)
+        .flatMap(a => a.deletionVector.map(a.path -> _.cardinality)).toMap
+      assert(cardinalities(t).nonEmpty)
+      assert(cardinalities(t) === cardinalities(seq))
+      // the pruning left the upper files untouched
+      assert(w.activeAdds(t).count(_.deletionVector.isEmpty) >= 3)
+      assert(w.lastTxnVersion(t, "app") === Some(1L))
+    }
+  }
+
+  test("a failure in either concurrent half of a DV merge commits nothing and leaves no job") {
+    val sc = spark.sparkContext
+    // half a writes the payload, half b folds the bitmaps
+    for (half <- Seq("a", "b")) withTmpDir { tmp =>
+      val t = s"$tmp/silver"
+      val changes = mergeFixture(t, s"$tmp/batch")
+      val version = writer.latestVersion(t)
+      val before = writer.read(t).orderBy("id").collect().toSeq
+      val killed = new java.util.concurrent.atomic.AtomicInteger(0)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val tags = Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          if (tags.exists(_.split(",").exists(_.endsWith(s"-$half")))) {
+            killed.incrementAndGet()
+            sc.cancelJob(j.jobId)
+          }
+        }
+      }
+      sc.addSparkListener(l)
+      try intercept[Exception] {
+        DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"))
+      } finally sc.removeSparkListener(l)
+      assert(killed.get() > 0, s"half $half ran no job")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getActiveJobIds().nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sc.statusTracker.getActiveJobIds().isEmpty, s"half $half: a job is still running")
+      assert(writer.latestVersion(t) === version, s"half $half: a commit landed")
+      assert(writer.read(t).orderBy("id").collect().toSeq === before)
+    }
+  }
 }

@@ -560,11 +560,82 @@ class DeletionVectorSuite extends SparkSpec {
 
   test("DvProbeExpr.toString never touches its broadcast") {
     import org.apache.spark.sql.catalyst.expressions.Literal
-    val bc = spark.sparkContext.broadcast(Map.empty[String, (String, DvDescriptor)])
-    val e = graft.delta.DvProbeExpr(Literal("f"), Literal(0L), bc, None, "t",
-      new graft.util.SerializableConf(conf))
+    val bc = spark.sparkContext.broadcast(
+      graft.delta.DvScanMeta(Map.empty, new graft.util.SerializableConf(conf)))
+    val e = graft.delta.DvProbeExpr(Literal("f"), Literal(0L), bc, None, "t")
     bc.destroy()
     intercept[org.apache.spark.SparkException](bc.value)
     assert(e.toString === "dv_deleted(f, 0)")
+  }
+
+  /** Probes of (path, row) sequences through ONE expression instance (the
+    * memo carries across rows) and through a fresh instance per row. */
+  private def probeRuns(delta: Boolean, seq: Seq[(String, Long)])
+      : (Seq[Boolean], Seq[Boolean]) = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.unsafe.types.UTF8String
+    // inline vectors need no files; "c" has no vector in either map
+    val newVecs = Map("/t/a.parquet" -> DeletionVector.inlineDescriptor(Seq(1L, 3L)),
+      "/t/b.parquet" -> DeletionVector.inlineDescriptor(Seq(0L, 2L, 5L)))
+    val oldVecs = Map("/t/b.parquet" -> DeletionVector.inlineDescriptor(Seq(2L)),
+      "/t/d.parquet" -> DeletionVector.inlineDescriptor(Seq(0L)))
+    def keyed(m: Map[String, DvDescriptor]) =
+      m.map { case (p, d) => p -> (s"probe-test-${d.pathOrInlineDv}", d) }
+    val bc = spark.sparkContext.broadcast(
+      graft.delta.DvScanMeta(keyed(newVecs), new graft.util.SerializableConf(conf)))
+    val bcOld = spark.sparkContext.broadcast(keyed(oldVecs))
+    def expr() = graft.delta.DvProbeExpr(Literal("f"), Literal(0L), bc,
+      if (delta) Some(bcOld) else None, "/t")
+    def run(e: graft.delta.DvProbeExpr, p: String, i: Long) = {
+      val u = UTF8String.fromString(p)
+      if (delta) e.probeDelta(u, i) else e.probe(u, i)
+    }
+    val shared = expr()
+    (seq.map { case (p, i) => run(shared, p, i) }, seq.map { case (p, i) => run(expr(), p, i) })
+  }
+
+  test("DvProbeExpr memoizes the last file and still answers every row") {
+    // runs of one file, a return to an earlier file, a file with no
+    // vector, and two spellings of one path
+    val seq = Seq(("file:///t/a.parquet", 0L), ("file:///t/a.parquet", 1L),
+      ("file:///t/a.parquet", 3L), ("file:///t/b.parquet", 2L),
+      ("file:///t/c.parquet", 1L), ("file:///t/c.parquet", 3L),
+      ("file:///t/a.parquet", 3L), ("file:/t/a.parquet", 1L),
+      ("file:///t/b.parquet", 5L), ("file:///t/b.parquet", 4L),
+      ("file:///t/d.parquet", 0L), ("file:///t/d.parquet", 1L))
+    val (deleted, deletedFresh) = probeRuns(delta = false, seq)
+    assert(deleted === deletedFresh)
+    assert(deleted === Seq(false, true, true, true, false, false, true, true,
+      true, false, false, false))
+    // CDF deltas: in the new vector (or the file is gone from it) and not
+    // in the old one
+    val (deltas, deltasFresh) = probeRuns(delta = true, seq)
+    assert(deltas === deltasFresh)
+    assert(deltas === Seq(false, true, true, false, true, true, true, true,
+      true, false, false, true))
+  }
+
+  test("a serialized DvProbeExpr holds no Hadoop Configuration") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val bc = spark.sparkContext.broadcast(graft.delta.DvScanMeta(
+      Map("/t/a.parquet" -> ("k", DeletionVector.inlineDescriptor(Seq(1L)))),
+      new graft.util.SerializableConf(conf)))
+    val e = graft.delta.DvProbeExpr(Literal("f"), Literal(0L), bc, None, "/t")
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new java.io.ObjectOutputStream(bytes)
+    out.writeObject(e); out.close()
+    val classes = scala.collection.mutable.ArrayBuffer.empty[String]
+    val in = new java.io.ObjectInputStream(
+        new java.io.ByteArrayInputStream(bytes.toByteArray)) {
+      override def resolveClass(d: java.io.ObjectStreamClass): Class[_] = {
+        classes += d.getName
+        super.resolveClass(d)
+      }
+    }
+    val back = in.readObject().asInstanceOf[graft.delta.DvProbeExpr]
+    assert(!classes.exists(c => c.contains("SerializableConf") ||
+      c.contains("hadoop.conf")), classes.mkString(", "))
+    // the conf rides the scan's broadcast, resolved once per executor
+    assert(back.meta.id === bc.id)
   }
 }

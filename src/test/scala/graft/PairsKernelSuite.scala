@@ -121,4 +121,15 @@ class PairsKernelSuite extends SparkSpec {
     assert(viaLong.toSeq == viaString.toSeq)
     assert(viaLong.nonEmpty, "law would be vacuous with no pairs")
   }
+
+  test("pairCount sizes C(n, 2) in Long and refuses buckets past array range") {
+    import graft.functions.PairsKernel.pairCount
+    assert(pairCount(0) === 0 && pairCount(1) === 0 && pairCount(2) === 1)
+    // n * (n - 1) overflows Int from here on; the count must not
+    assert(pairCount(46342) === 1073767311)
+    assert(pairCount(65536) === 2147450880)
+    val e = intercept[graft.core.GraftError](pairCount(65537))
+    assert(e.getMessage.contains("65537") && e.getMessage.contains("2147516416"),
+      e.getMessage)
+  }
 }
