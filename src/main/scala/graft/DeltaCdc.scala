@@ -29,7 +29,10 @@ private[graft] case class BatchProfile(counts: Seq[(String, Long)],
   *    metaData schema and old rows null-fill the new columns at read.
   *  - `Rewrite`: always rewrite touched files (the delta-spark classic
   *    MERGE shape).
-  *  - `DeletionVectors`: require the DV shape; error if ineligible. */
+  *  - `DeletionVectors`: require the DV shape; error if ineligible.
+  * Both shapes write their payload through the writer's one staged append
+  * path, so they obey the same write checks (CHECK constraints, column
+  * invariants, generated columns) and fail alike on a violating row. */
 sealed trait MergeStrategy
 object MergeStrategy {
   case object Auto extends MergeStrategy
@@ -63,10 +66,13 @@ object MergeStrategy {
   *  - The log is replayed once into a [[graft.delta.DeltaSnapshot]]:
   *    pruning, the DV fold, the parts write and the commit all read it,
   *    and the commit conflict-checks against its version.
-  *  - In the deletion-vector shape the payload (and CDF) parts write runs
-  *    at the same time as the bitmap fold, and the one atomic commit
-  *    follows both. The fold broadcasts the touched keys straight off the
-  *    persisted batch (no window or distinct of its own). A 300-row batch
+  *  - Both shapes stage their parts through the writer's one append
+  *    path (schema alignment, generated columns, write checks, physical
+  *    names) before the one commit. In the deletion-vector shape that
+  *    payload (and CDF) parts write runs at the same time as the bitmap
+  *    fold, and the one atomic commit follows both. The fold broadcasts
+  *    the touched keys straight off the persisted batch (no window or
+  *    distinct of its own). A 300-row batch
   *    into a multi-file table takes 3 query executions and 6 jobs: the
   *    profile pass, the payload's window and write, and the fold's key
   *    broadcast, map and result.
@@ -204,9 +210,15 @@ object DeltaCdc {
             // rewrite shape: only files that can contain a matched key are
             // read and merged; an empty touched set means every change is
             // a brand-new key and the merge degenerates to writing just
-            // the change payload
+            // the change payload. A generated column the batch omits is
+            // dropped from the kept rows too, so the write computes it for
+            // every row instead of validating the changed keys' nulls.
+            val omitted = snap.flatMap(_.schema).toSeq
+              .flatMap(graft.delta.WriteChecks.generatedOf).map(_._1)
+              .filterNot(normalized.columns.contains)
             val existing =
-              if (touched.isEmpty) None else Some(writer.readAdds(tablePath, touched))
+              if (touched.isEmpty) None
+              else Some(writer.readAdds(tablePath, touched).drop(omitted: _*))
             val merged = Cdc.applyCdc(normalized, existing, keys, CdcMode.Merge,
               changeCol, Map.empty, dropDeletes)
               .observe(outObs, count(lit(1)).as("rows_out"))

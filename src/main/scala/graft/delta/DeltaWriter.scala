@@ -23,6 +23,13 @@ private[delta] case class WrittenPart(path: String, size: Long,
     stats: Option[String], partitionValues: Map[String, String],
     deletionVector: Option[DvDescriptor] = None)
 
+/** A data write whose parts are on disk but not yet in the log: the
+  * schema and LOGICAL partition columns its commit declares, the data and
+  * CDC parts, and the `maxColumnId` a widening of a mapped table minted. */
+private[delta] case class StagedWrite(schema: StructType, parts: Seq[WrittenPart],
+    cdcParts: Seq[(String, Long)], partitionColumns: Seq[String],
+    mintedMaxColumnId: Option[Long])
+
 /** What the distributed DV writer tasks read from their one broadcast:
   * the Hadoop conf plus the touched files' old vectors and physical row
   * counts, keyed by normalized path. */
@@ -63,18 +70,26 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * from surviving JSON commits / checkpoints; reading past the replay
     * base fails loudly, never partially). */
   def read(tablePath: String, versionAsOf: Option[Long] = None,
-      timestampAsOf: Option[Long] = None): DataFrame = {
+      timestampAsOf: Option[Long] = None): DataFrame =
+    scanAdds(tablePath, addsAsOf(tablePath) { latest =>
+      val version = versionAsOf
+        .orElse(timestampAsOf.map(ts => log.versionAtOrBeforeTimestamp(tablePath, ts)
+          .getOrElse(throw new GraftError(
+            s"no commit of $tablePath at or before timestamp $ts"))))
+        .getOrElse(latest)
+      if (version > latest)
+        throw new GraftError(s"versionAsOf $version is beyond latest $latest of $tablePath")
+      version
+    })
+
+  /** Active adds at the version `pick` chooses given the latest readable
+    * one — the newest JSON commit, or the newest checkpoint's when every
+    * JSON commit expired. The read paths' shared version resolution. */
+  private def addsAsOf(tablePath: String)(pick: Long => Long): Seq[DeltaAction.AddFile] = {
     val latest = log.latestVersion(tablePath)
       .orElse(log.listCheckpoints(tablePath).lastOption.map(_.version))
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val version = versionAsOf
-      .orElse(timestampAsOf.map(ts => log.versionAtOrBeforeTimestamp(tablePath, ts)
-        .getOrElse(throw new GraftError(
-          s"no commit of $tablePath at or before timestamp $ts"))))
-      .getOrElse(latest)
-    if (version > latest)
-      throw new GraftError(s"versionAsOf $version is beyond latest $latest of $tablePath")
-    scanAdds(tablePath, DeltaStats.activeAdds(log, tablePath, version))
+    DeltaStats.activeAdds(log, tablePath, pick(latest))
   }
 
   /** RESTORE TABLE ... TO VERSION: make the state at `version` the newest
@@ -104,16 +119,15 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val schema = log.metaAt(tablePath, version).flatMap(_.schemaString)
       .map(s => DataType.fromJson(s).asInstanceOf[StructType])
       .getOrElse(StructType(Nil))
-    commit(tablePath, "RESTORE", schema,
-      toRemove.map(_.path),
-      toAdd.map(a => WrittenPart(a.path, a.size, a.stats, a.partitionValues,
-        a.deletionVector)),
-      Seq.empty,
-      readVersion = Some(latest),
-      partitionCols =
-      // layout order comes from a path, not partitionValues' map order
-      target.headOption.map(_.path.split('/').dropRight(1).filter(_.contains('='))
-        .map(seg => seg.take(seg.indexOf('='))).toSeq).getOrElse(Seq.empty))
+    commit(tablePath, "RESTORE", StagedWrite(schema,
+        toAdd.map(a => WrittenPart(a.path, a.size, a.stats, a.partitionValues,
+          a.deletionVector)),
+        Seq.empty,
+        // layout order comes from a path, not partitionValues' map order
+        target.headOption.map(_.path.split('/').dropRight(1).filter(_.contains('='))
+          .map(seg => seg.take(seg.indexOf('='))).toSeq).getOrElse(Seq.empty),
+        None),
+      toRemove.map(_.path), readVersion = Some(latest))
   }
 
   /** DELETE WHERE via deletion vectors — the O(matched rows) delete: no
@@ -138,7 +152,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       .select(col(RowMetaFile), col(RowMetaIndex))
     val folded = dvFold(snap, snap.adds, marked)
     if (folded.isEmpty) return 0L
-    dvCommit(snap, snap.adds, folded, Seq.empty, Seq.empty, None, "DELETE")
+    dvCommit(snap, snap.adds, folded, None, None, "DELETE")
     folded.map(_.freshCount).sum
   }
 
@@ -155,11 +169,8 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     // survives to the row-meta columns below
     val raw = ColumnMapping.readFiles(spark, log, tablePath,
       adds.map(a => log.resolvePath(tablePath, a.path)), keepMeta = true)
-    val dvByPath: Map[String, DvDescriptor] = adds
-      .flatMap(a => a.deletionVector.map(d =>
-        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
     // rows already deleted by an existing DV must not match again
-    dvFilter(tablePath, dvByPath, raw)
+    dvFilter(tablePath, adds, raw)
       .withColumn(RowMetaFile, col("_metadata.file_path"))
       .withColumn(RowMetaIndex, col("_metadata.row_index"))
       .drop("_metadata")
@@ -186,14 +197,12 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     import org.apache.spark.sql.functions.{col, count, lit, udaf}
     val tablePath = snap.tablePath
     val dvAgg = udaf(new DvRowAgg(), Encoders.scalaLong)
-    def byNorm[T](f: DeltaAction.AddFile => Option[T]): Map[String, T] =
-      candidates.flatMap(a => f(a).map(
-        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> _)).toMap
     // metadata the writer tasks need, keyed by normalized file path —
     // descriptors and row counts only, O(#files) small
     val taskMeta = spark.sparkContext.broadcast(DvFoldMeta(
-      new graft.util.SerializableConf(conf), byNorm(_.deletionVector),
-      byNorm(DeltaWriter.physRows)))
+      new graft.util.SerializableConf(conf),
+      byNormPath(tablePath, candidates)(_.deletionVector),
+      byNormPath(tablePath, candidates)(DeltaWriter.physRows)))
     // ~64 files' vectors per .bin keeps test-scale commits at one packed
     // file (the pre-r7 shape) while a wide delete fans out to all cores
     val numTasks = math.max(1, math.min((candidates.size + 63) / 64,
@@ -223,17 +232,14 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
   /** The DV delete's commit half: re-add every folded file with its new
     * vector (or plain-remove it when every physical row is now deleted)
-    * together with `extraParts` (a DV merge's appended payload) and
-    * `cdcParts` in ONE atomic commit against `snap`'s version. */
+    * together with `staged` (a DV merge's appended payload, CDF parts and
+    * any widened schema) in ONE atomic commit against `snap`'s version. */
   private[graft] def dvCommit(snap: DeltaSnapshot,
       candidates: Seq[DeltaAction.AddFile], results: Seq[DvWriteResult],
-      extraParts: Seq[WrittenPart], cdcParts: Seq[(String, Long)],
-      txn: Option[(String, Long)], operation: String,
-      schemaOverride: Option[StructType] = None,
-      mintedMaxColumnId: Option[Long] = None): Long = {
+      staged: Option[StagedWrite], txn: Option[(String, Long)],
+      operation: String): Long = {
     val tablePath = snap.tablePath
-    val byNorm = candidates.map(a =>
-      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> a).toMap
+    val byNorm = byNormPath(tablePath, candidates)(Some(_))
     def addOf(path: String): DeltaAction.AddFile =
       byNorm.getOrElse(DeletionVector.normUri(path),
         throw new GraftError(s"matched file $path not in snapshot"))
@@ -243,11 +249,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         Some(DvDescriptor("u", r.ref.get, r.offset, r.sizeInBytes.get,
           r.cardinality)))
     }
-    commit(tablePath, operation,
-      schemaOverride.orElse(snap.schema).getOrElse(StructType(Nil)),
-      results.map(r => addOf(r.path).path), reAdds ++ extraParts, cdcParts,
-      logicalPartitionColumns(snap), txn, base = Some(snap),
-      mintedMaxColumnId = mintedMaxColumnId)
+    val payload = staged.getOrElse(StagedWrite(snap.schema.getOrElse(StructType(Nil)),
+      Seq.empty, Seq.empty, logicalPartitionColumns(snap), None))
+    commit(tablePath, operation, payload.copy(parts = reAdds ++ payload.parts),
+      results.map(r => addOf(r.path).path), txn, base = Some(snap))
   }
 
   /** DV-based MERGE primitive: in ONE atomic commit, bitmap-delete every
@@ -255,68 +260,31 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * post-state of the changed keys). The touched files' surviving rows
     * are never read, rewritten, or shuffled — the merge's data volume is
     * O(change batch), not O(touched files); delta-spark's low-shuffle
-    * MERGE shape. A payload that WIDENS the schema is supported in the
-    * same commit: the metaData action grows the new nullable columns, and
-    * old rows null-fill them at READ (Delta semantics make this free —
-    * scans apply the declared schema, absent columns read NULL — so
-    * widening costs no rewrite either).
+    * MERGE shape. The payload stages through [[stageWrite]] as a
+    * mergeSchema append, so it obeys every writer feature a rewrite merge
+    * does (CHECK constraints, invariants, generated columns) and a payload
+    * that WIDENS the schema is supported in the same commit: the metaData
+    * action grows the new nullable columns, and old rows null-fill them at
+    * READ (Delta semantics make this free — scans apply the declared
+    * schema, absent columns read NULL — so widening costs no rewrite
+    * either).
     *
     * The payload (and CDF) parts write and the bitmap fold share no data,
     * so they run at the same time ([[DeltaWriter.concurrently]]), each
     * building its frame (`payload`, `marked`) on its own thread; the
-    * commit waits for both, and a failure in either cancels the other and
-    * commits nothing. Returns the deleted-row count. */
+    * commit waits for both, and a failure in either (a write-check
+    * violation included) cancels the other and commits nothing. Returns
+    * the deleted-row count. */
   private[graft] def dvMerge(snap: DeltaSnapshot, candidates: Seq[DeltaAction.AddFile],
       marked: => DataFrame, payload: => DataFrame, cdfChanges: Option[DataFrame],
       txn: Option[(String, Long)]): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val root = new Path(snap.tablePath)
-    val fs = Fs.fs(root, conf)
-    /** Writes the payload (and CDF) parts; returns them with the widened
-      * schema and minted column id the commit must carry, if any. */
-    def writePayload(): (Seq[WrittenPart], Seq[(String, Long)], Option[StructType], Option[Long]) = {
-      val changed = payload
-      val declared = snap.schema.getOrElse(changed.schema)
-      val mapped = ColumnMapping.isMapped(declared)
-      val newCols = changed.schema.fields
-        .filterNot(f => declared.fieldNames.contains(f.name))
-      // widening on a mapped table mints physical names + bumps maxColumnId
-      // in the same commit, like writeImpl's mergeSchema append
-      val minted: Option[(Array[StructField], Long)] =
-        if (mapped && newCols.nonEmpty)
-          Some(mintMappedColumns(snap.configurationJson, declared, newCols))
-        else None
-      val outSchema = StructType(declared.fields ++
-        minted.map(_._1).getOrElse(newCols.map(_.copy(nullable = true))))
-      val aligned = changed.select(outSchema.fields.toSeq.map(f =>
-        (if (changed.columns.contains(f.name)) col(f.name).cast(f.dataType)
-         else lit(null).cast(f.dataType)).as(f.name)): _*)
-      // appended payload files carry physical names on a mapped table; the
-      // hive layout (path-derived partCols) is already physical there
-      val toWrite =
-        if (mapped) ColumnMapping.toPhysical(aligned, outSchema) else aligned
-      val effectiveParts = partitionColumnsOf(snap)
-      val parts =
-        if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
-        else writePartitionedParts(toWrite, root, effectiveParts)
-      val cdcParts = cdfChanges.map { ch =>
-        val cdcDir = new Path(root, "_change_data")
-        fs.mkdirs(cdcDir)
-        val out =
-          if (mapped) ColumnMapping.cdcToPhysical(ch, outSchema,
-            keep = Seq(graft.Cdc.ChangeTypeCol))
-          else ch
-        writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
-          (s"_change_data/${p.path}", p.size))
-      }.getOrElse(Seq.empty)
-      (parts, cdcParts, if (newCols.isEmpty) None else Some(outSchema), minted.map(_._2))
-    }
-    val ((parts, cdcParts, schemaOverride, mintedMaxColumnId), folded) =
-      DeltaWriter.concurrently(spark)(writePayload())(dvFold(snap, candidates, marked))
+    val (staged, folded) = DeltaWriter.concurrently(spark)(
+      stageWrite(payload, snap.tablePath, Some(snap), DeltaWriteMode.Append,
+        mergeSchema = true, partitionBy = Seq.empty, cdfChanges))(
+      dvFold(snap, candidates, marked))
     // nothing matched and nothing to append: no commit
-    if (folded.nonEmpty || parts.nonEmpty || cdcParts.nonEmpty)
-      dvCommit(snap, candidates, folded, parts, cdcParts, txn, "MERGE",
-        schemaOverride, mintedMaxColumnId)
+    if (folded.nonEmpty || staged.parts.nonEmpty || staged.cdcParts.nonEmpty)
+      dvCommit(snap, candidates, folded, Some(staged), txn, "MERGE")
     folded.map(_.freshCount).sum
   }
 
@@ -337,11 +305,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   def readSkipping(tablePath: String,
       ranges: Map[String, (Option[Double], Option[Double])],
       versionAsOf: Option[Long] = None): DataFrame = {
-    val latest = log.latestVersion(tablePath)
-      .orElse(log.listCheckpoints(tablePath).lastOption.map(_.version))
-      .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val version = versionAsOf.getOrElse(latest)
-    val adds = DeltaStats.activeAdds(log, tablePath, version)
+    val adds = addsAsOf(tablePath)(versionAsOf.getOrElse(_))
     val (kept, _) = DeltaStats.prune(adds, toPhysicalKeys(tablePath, ranges))
     scanAdds(tablePath, kept)
   }
@@ -352,11 +316,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   def readSkippingStrings(tablePath: String,
       ranges: Map[String, (Option[String], Option[String])],
       versionAsOf: Option[Long] = None): DataFrame = {
-    val latest = log.latestVersion(tablePath)
-      .orElse(log.listCheckpoints(tablePath).lastOption.map(_.version))
-      .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val version = versionAsOf.getOrElse(latest)
-    val adds = DeltaStats.activeAdds(log, tablePath, version)
+    val adds = addsAsOf(tablePath)(versionAsOf.getOrElse(_))
     val (kept, _) = DeltaStats.pruneStrings(adds, toPhysicalKeys(tablePath, ranges))
     scanAdds(tablePath, kept)
   }
@@ -366,11 +326,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * in the matching `col=value` dirs are scheduled. */
   def readPartitions(tablePath: String, equal: Map[String, String],
       versionAsOf: Option[Long] = None): DataFrame = {
-    val latest = log.latestVersion(tablePath)
-      .orElse(log.listCheckpoints(tablePath).lastOption.map(_.version))
-      .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val version = versionAsOf.getOrElse(latest)
-    val adds = DeltaStats.activeAdds(log, tablePath, version)
+    val adds = addsAsOf(tablePath)(versionAsOf.getOrElse(_))
     // partitionValues key on PHYSICAL names for mapped tables
     val (kept, _) = DeltaStats.prunePartitions(adds, toPhysicalKeys(tablePath, equal))
     scanAdds(tablePath, kept)
@@ -383,16 +339,12 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         declared.getOrElse(new StructType()))
-    val dvByPath: Map[String, DvDescriptor] = adds
-      .flatMap(a => a.deletionVector.map(d =>
-        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
+    val hasDvs = adds.exists(_.deletionVector.isDefined)
     // DV filtering needs row provenance, which the mapped projection
     // would drop — keep the _metadata struct through it, filter, then
     // drop the helper column
-    val scan = ColumnMapping.readFiles(spark, log, tablePath, files,
-      keepMeta = dvByPath.nonEmpty)
-    val read =
-      if (dvByPath.isEmpty) scan else dvFilter(tablePath, dvByPath, scan).drop("_metadata")
+    val scan = ColumnMapping.readFiles(spark, log, tablePath, files, keepMeta = hasDvs)
+    val read = if (hasDvs) dvFilter(tablePath, adds, scan).drop("_metadata") else scan
     // a raw hive-layout read puts the partition columns last ('=' appears
     // in a path segment only as a partition dir): align to declared order
     declared match {
@@ -403,13 +355,21 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     }
   }
 
-  /** Drop rows a deletion vector marks deleted — see [[DvScan]]: the
-    * broadcast carries descriptors only, executors lazy-load the bitmaps,
-    * and a scan whose declared vector bytes exceed the budget fails
-    * loudly instead of OOMing. */
-  private def dvFilter(tablePath: String, dvByPath: Map[String, DvDescriptor],
+  /** Drop rows a deletion vector of `adds` marks deleted — see [[DvScan]]:
+    * the broadcast carries descriptors only, executors lazy-load the
+    * bitmaps, and a scan whose declared vector bytes exceed the budget
+    * fails loudly instead of OOMing. */
+  private def dvFilter(tablePath: String, adds: Seq[DeltaAction.AddFile],
       df: DataFrame): DataFrame =
-    DvScan.filterDeleted(spark, tablePath, dvByPath, df, conf)
+    DvScan.filterDeleted(spark, tablePath,
+      byNormPath(tablePath, adds)(_.deletionVector), df, conf)
+
+  /** `f` of every add that has one, keyed by the add's normalized
+    * absolute path — how DV scans and writer tasks address files. */
+  private def byNormPath[T](tablePath: String, adds: Seq[DeltaAction.AddFile])(
+      f: DeltaAction.AddFile => Option[T]): Map[String, T] =
+    adds.flatMap(a => f(a).map(
+      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> _)).toMap
 
   def tableExists(tablePath: String): Boolean = log.isDeltaTable(tablePath)
 
@@ -915,15 +875,35 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       operation: String,
       txn: Option[(String, Long)] = None,
       base: Option[DeltaSnapshot] = None): Long = {
-    val root = new Path(tablePath)
-    val fs = Fs.fs(root, conf)
-    fs.mkdirs(root)
-    // the ONE snapshot every read below (schema, partitioning, properties
-    // and — for Overwrite — the remove set) comes from; the commit
+    // the ONE snapshot every read (schema, partitioning, properties and —
+    // for Overwrite — the remove set) comes from; the commit
     // conflict-checks anything that lands after its version (callers that
     // planned even earlier, e.g. a MERGE's touched-file pruning, pass their
     // own)
     val snap = base.orElse(snapshot(tablePath))
+    val staged = stageWrite(df, tablePath, snap, mode, mergeSchema, partitionBy,
+      cdfChanges)
+    val removed: Seq[String] = explicitRemoves.getOrElse(mode match {
+      case DeltaWriteMode.Overwrite => snap.map(_.adds.map(_.path)).getOrElse(Seq.empty)
+      case _ => Seq.empty
+    })
+    commit(tablePath, operation, staged, removed, txn, base = snap)
+  }
+
+  /** The data half of every Delta data write — append, overwrite, rewrite
+    * merge and DV merge alike: ONE decision from `snap` (None = a new
+    * table) for the partition layout, mapped-column minting and the out
+    * schema; then the frame aligned to that schema (generated columns
+    * computed), checked inside the write projection ([[WriteChecks]]),
+    * renamed to physical names on a mapped table, and written as data and
+    * CDC parts. Nothing is committed: the caller's commit declares what
+    * the [[StagedWrite]] carries. */
+  private def stageWrite(df: DataFrame, tablePath: String,
+      snap: Option[DeltaSnapshot], mode: DeltaWriteMode, mergeSchema: Boolean,
+      partitionBy: Seq[String], cdfChanges: Option[DataFrame]): StagedWrite = {
+    val root = new Path(tablePath)
+    val fs = Fs.fs(root, conf)
+    fs.mkdirs(root)
     val existingSchema = snap.flatMap(_.schema)
     // column-mapped tables: data files carry the PHYSICAL col-<uuid>
     // names at every nesting level (delta-spark's mode=name write shape);
@@ -959,34 +939,34 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         s"table $tablePath is partitioned by ${existingParts.mkString(",")}; " +
         s"append requested ${effectiveParts.mkString(",")}")
 
-    mappedSchema.foreach { es =>
-      val newCols = df.schema.fields.filterNot(f => es.fieldNames.contains(f.name))
-      if (newCols.nonEmpty &&
-          !(mode == DeltaWriteMode.Append && mergeSchema))
+    // top-level columns `df` adds to the existing schema: only a
+    // mergeSchema append may add them (an unmapped overwrite replaces the
+    // schema outright)
+    val newCols = existingSchema.map(es => df.schema.fields
+      .filterNot(f => es.fieldNames.contains(f.name))).getOrElse(Array.empty[StructField])
+    if (newCols.nonEmpty && !(mode == DeltaWriteMode.Append && mergeSchema)) {
+      if (mappedSchema.isDefined)
         throw new GraftError(
           s"cannot add columns ${newCols.map(_.name).mkString(",")} to " +
           s"column-mapped table $tablePath in this mode; use a mergeSchema " +
           "append (mints physical names)")
+      if (mode == DeltaWriteMode.Append)
+        throw new GraftError(
+          s"schema mismatch appending to $tablePath (new columns " +
+          s"${newCols.map(_.name).mkString(",")}); use mergeSchema")
     }
     // physical-name minting for a mergeSchema append on a mapped table;
     // the commit carries the bumped maxColumnId so a foreign writer's
     // next mint can't collide
-    val minted: Option[(Array[StructField], Long)] = mappedSchema.flatMap { es =>
-      val newCols = df.schema.fields.filterNot(f => es.fieldNames.contains(f.name))
-      if (newCols.isEmpty || mode != DeltaWriteMode.Append || !mergeSchema) None
-      else Some(mintMappedColumns(snap.flatMap(_.configurationJson), es, newCols))
-    }
+    val minted: Option[(Array[StructField], Long)] = mappedSchema
+      .filter(_ => newCols.nonEmpty)
+      .map(es => mintMappedColumns(snap.flatMap(_.configurationJson), es, newCols))
     val outSchema = existingSchema match {
       case Some(es) if mappedSchema.isDefined =>
         // overwrite keeps the mapped schema; mergeSchema append extends
         // it with the freshly-minted fields (old files null-fill at read)
         StructType(es.fields ++ minted.map(_._1).getOrElse(Array.empty[StructField]))
       case Some(es) if mode == DeltaWriteMode.Append =>
-        val newCols = df.schema.fields.filterNot(f => es.fieldNames.contains(f.name))
-        if (newCols.nonEmpty && !mergeSchema)
-          throw new GraftError(
-            s"schema mismatch appending to $tablePath (new columns " +
-            s"${newCols.map(_.name).mkString(",")}); use mergeSchema")
         StructType(es.fields ++ newCols.map(_.copy(nullable = true)))
       case _ => df.schema
     }
@@ -1026,9 +1006,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       val m = ColumnMapping.physicalNames(outSchema)
       effectiveParts.map(p => m.getOrElse(p, p))
     }.getOrElse(effectiveParts)
-    val parts =
-      if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
-      else writePartitionedParts(toWrite, root, physParts)
+    val parts = writeDataParts(toWrite, root, physParts, prefix = "part")
     val cdcParts = cdfChanges.map { ch =>
       val cdcDir = new Path(root, "_change_data")
       fs.mkdirs(cdcDir)
@@ -1042,14 +1020,17 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
         (s"_change_data/${p.path}", p.size))
     }.getOrElse(Seq.empty)
-
-    val removed: Seq[String] = explicitRemoves.getOrElse(mode match {
-      case DeltaWriteMode.Overwrite => snap.map(_.adds.map(_.path)).getOrElse(Seq.empty)
-      case _ => Seq.empty
-    })
-    commit(tablePath, operation, outSchema, removed, parts, cdcParts,
-      effectiveParts, txn, base = snap, mintedMaxColumnId = minted.map(_._2))
+    StagedWrite(outSchema, parts, cdcParts, effectiveParts, minted.map(_._2))
   }
+
+  /** Write `df` as data parts under the table root: one fresh data dir
+    * when `partCols` is empty, the hive `col=value` dirs otherwise
+    * (`partCols` and `df` in the FILE name domain — physical on a mapped
+    * table). */
+  private def writeDataParts(df: DataFrame, root: Path, partCols: Seq[String],
+      prefix: String): Seq[WrittenPart] =
+    if (partCols.isEmpty) writeParts(df, root, Fs.fs(root, conf), prefix)
+    else writePartitionedParts(df, root, partCols)
 
   /** Write df's parquet parts RENAME-FREE into a fresh uniquely-named data
     * directory under `targetDir`: [[DirectCommitProtocol]] has each task
@@ -1125,12 +1106,11 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       DirectCommitProtocol.pop(popKey)
     }
 
-  private def commit(tablePath: String, operation: String, schema: StructType,
-      removed: Seq[String], adds: Seq[WrittenPart], cdcs: Seq[(String, Long)],
-      partitionCols: Seq[String], txn: Option[(String, Long)] = None,
+  private def commit(tablePath: String, operation: String, staged: StagedWrite,
+      removed: Seq[String], txn: Option[(String, Long)] = None,
       readVersion: Option[Long] = None,
-      mintedMaxColumnId: Option[Long] = None,
       base: Option[DeltaSnapshot] = None): Long = {
+    val StagedWrite(schema, adds, cdcs, partitionCols, mintedMaxColumnId) = staged
     // a commit planned from a snapshot takes the table id, properties and
     // conflict baseline from it; the log is read again only for commits
     // that landed after the snapshot
@@ -1228,24 +1208,8 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         t.put("lastUpdated", now)
         lines += s"""{"txn": ${Jsons.render(t)}}"""
       }
-      removed.foreach { p =>
-        val r = Jsons.obj(); r.put("path", p); r.put("dataChange", true)
-        r.put("deletionTimestamp", now)
-        lines += s"""{"remove": ${Jsons.render(r)}}"""
-      }
-      adds.foreach { part =>
-        val a = Jsons.obj(); a.put("path", part.path); a.put("size", part.size)
-        a.put("dataChange", true); a.put("modificationTime", now)
-        if (part.partitionValues.nonEmpty) {
-          val pv = Jsons.obj()
-          part.partitionValues.foreach { case (k, v) => pv.put(k, v) }
-          a.set[JsonNode]("partitionValues", pv)
-        }
-        part.stats.foreach(s => a.put("stats", s)) // protocol: stats is a JSON string
-        part.deletionVector.foreach(d =>
-          a.set[JsonNode]("deletionVector", DeltaWriter.dvNode(d)))
-        lines += s"""{"add": ${Jsons.render(a)}}"""
-      }
+      removed.foreach(p => lines += DeltaWriter.removeLine(p, dataChange = true, now))
+      adds.foreach(part => lines += DeltaWriter.addLine(part, dataChange = true, now))
       cdcs.foreach { case (p, sz) =>
         val c = Jsons.obj(); c.put("path", p); c.put("size", sz)
         c.put("dataChange", false)
@@ -1354,34 +1318,28 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * single-group degenerate case. */
   def compact(tablePath: String, smallFileBytes: Long = 32L * 1024 * 1024): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit, monotonically_increasing_id, pmod, typedlit}
-    val latest = log.latestVersion(tablePath)
+    val snap = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val adds = DeltaStats.activeAdds(log, tablePath, latest)
     val root = new Path(tablePath)
-    val fs = Fs.fs(root, conf)
     // DV-bearing files are excluded: compaction reads parts verbatim, and
     // folding one in without applying its bitmap would resurrect deleted
     // rows into the compacted output. Groups of <2 small files gain
     // nothing from a rewrite.
-    val groups = adds.groupBy(_.partitionValues)
+    val groups = snap.adds.groupBy(_.partitionValues)
       .map { case (pv, g) => pv -> g.filter(a =>
         a.size < smallFileBytes && a.deletionVector.isEmpty) }
       .filter(_._2.size >= 2)
-    if (groups.isEmpty) return latest
+    if (groups.isEmpty) return snap.version
     val small = groups.values.flatten.toSeq
-    val partCols = partitionColumnsOf(tablePath)
+    val partCols = partitionColumnsOf(snap)
     val parts =
       if (partCols.isEmpty) {
         // read through the declared schema (a raw multi-file read infers
         // ONE file's footer schema, silently dropping columns a schema
-        // merge added to the others); mapped tables rename back to
-        // physical so the rewrite lands in the file name domain
-        val df0 = readAdds(tablePath, small)
-        val df = tableSchema(tablePath).filter(ColumnMapping.isMapped)
-          .map(s => ColumnMapping.toPhysical(df0, s)).getOrElse(df0)
-          .coalesce(
-            math.max(1, (small.map(_.size).sum / (128L * 1024 * 1024)).toInt))
-        writeParts(df, root, fs, prefix = "compacted")
+        // merge added to the others)
+        val df = readPhysical(snap, small).coalesce(
+          math.max(1, (small.map(_.size).sum / (128L * 1024 * 1024)).toInt))
+        writeParts(df, root, Fs.fs(root, conf), prefix = "compacted")
       } else {
         // ONE job for every partition group: scan all small files with
         // partition columns re-materialized, route rows back to their hive
@@ -1407,12 +1365,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
           pvKey(pv) ->
             math.max(1, (g.map(_.size).sum / (128L * 1024 * 1024)).toInt)
         }.toMap
-        // readAdds surfaces LOGICAL names on a mapped table; the rewrite
-        // must land back under PHYSICAL names (and partCols, derived from
-        // paths, already are physical) — rename before routing
-        val df0 = readAdds(tablePath, small)
-        val df = tableSchema(tablePath).filter(ColumnMapping.isMapped)
-          .map(s => ColumnMapping.toPhysical(df0, s)).getOrElse(df0)
+        val df = readPhysical(snap, small)
         // contiguous per-task ids cycle through each group's salt budget,
         // spreading rows evenly without hashing arbitrary data columns
         val keyExpr = concat_ws(Sep, partCols.map(c =>
@@ -1433,7 +1386,17 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     commitWithRetry(tablePath, _ =>
         DeltaWriter.optimizeBody("OPTIMIZE", small, parts),
       DeltaWriter.conflictReason("OPTIMIZE", small.map(_.path), None, _),
-      readVersion = Some(latest))
+      readVersion = Some(snap.version))
+  }
+
+  /** Scan `adds` in the FILE name domain a rewrite writes back to:
+    * [[scanAdds]] surfaces LOGICAL names on a mapped table, so they rename
+    * back to physical (path-derived partition columns already are). */
+  private def readPhysical(snap: DeltaSnapshot,
+      adds: Seq[DeltaAction.AddFile]): DataFrame = {
+    val df = scanAdds(snap.tablePath, adds)
+    snap.schema.filter(ColumnMapping.isMapped)
+      .map(ColumnMapping.toPhysical(df, _)).getOrElse(df)
   }
 
   /** Rewrite every DV-bearing file with its deletion vector APPLIED and
@@ -1444,14 +1407,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * `.bin` files. dataChange=false: tailing readers see no new data.
     * Returns the number of files purged (0 = no commit). */
   def purgeDeletionVectors(tablePath: String): Int = {
-    val readVersion = log.latestVersion(tablePath)
+    val snap = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val dvAdds = DeltaStats.activeAdds(log, tablePath, readVersion)
-      .filter(_.deletionVector.isDefined)
+    val dvAdds = snap.adds.filter(_.deletionVector.isDefined)
     if (dvAdds.isEmpty) return 0
-    val root = new Path(tablePath)
-    val fs = Fs.fs(root, conf)
-    val partCols = partitionColumnsOf(tablePath)
     // ONE DV-aware scan of every vector-bearing file (survivors only,
     // partition columns re-materialized) feeding ONE write job. No shuffle:
     // scan tasks are file-aligned, so each task's rows already belong to
@@ -1459,19 +1418,12 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     // count tracks input file count, and the job count is independent of
     // how many thousand partitions the vectors touch (the old shape was a
     // serial driver loop launching one Spark job per partition group).
-    // readAdds surfaces LOGICAL names on a mapped table; the purged
-    // rewrite must land back under PHYSICAL names (partCols, derived
-    // from paths, already are physical)
-    val df0 = readAdds(tablePath, dvAdds)
-    val df = tableSchema(tablePath).filter(ColumnMapping.isMapped)
-      .map(s => ColumnMapping.toPhysical(df0, s)).getOrElse(df0)
-    val parts =
-      if (partCols.isEmpty) writeParts(df, root, fs, prefix = "purged")
-      else writePartitionedParts(df, root, partCols)
+    val parts = writeDataParts(readPhysical(snap, dvAdds), new Path(tablePath),
+      partitionColumnsOf(snap), prefix = "purged")
     commitWithRetry(tablePath, _ =>
         DeltaWriter.optimizeBody("PURGE", dvAdds, parts),
       DeltaWriter.conflictReason("OPTIMIZE", dvAdds.map(_.path), None, _),
-      readVersion = Some(readVersion))
+      readVersion = Some(snap.version))
     dvAdds.size
   }
 
@@ -1633,23 +1585,28 @@ object DeltaWriter {
     val now = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo": {"timestamp": $now, "operation": "$operation"}}"""
-    removed.foreach { a =>
-      val r = Jsons.obj(); r.put("path", a.path); r.put("dataChange", false)
-      r.put("deletionTimestamp", now)
-      lines += s"""{"remove": ${Jsons.render(r)}}"""
-    }
-    parts.foreach { part =>
-      val a = Jsons.obj(); a.put("path", part.path); a.put("size", part.size)
-      a.put("dataChange", false); a.put("modificationTime", now)
-      if (part.partitionValues.nonEmpty) {
-        val pv = Jsons.obj()
-        part.partitionValues.foreach { case (k, v) => pv.put(k, v) }
-        a.set[JsonNode]("partitionValues", pv)
-      }
-      part.stats.foreach(s => a.put("stats", s))
-      lines += s"""{"add": ${Jsons.render(a)}}"""
-    }
+    removed.foreach(a => lines += removeLine(a.path, dataChange = false, now))
+    parts.foreach(part => lines += addLine(part, dataChange = false, now))
     lines.result().mkString("\n")
+  }
+
+  private def removeLine(path: String, dataChange: Boolean, now: Long): String = {
+    val r = Jsons.obj(); r.put("path", path); r.put("dataChange", dataChange)
+    r.put("deletionTimestamp", now)
+    s"""{"remove": ${Jsons.render(r)}}"""
+  }
+
+  private def addLine(part: WrittenPart, dataChange: Boolean, now: Long): String = {
+    val a = Jsons.obj(); a.put("path", part.path); a.put("size", part.size)
+    a.put("dataChange", dataChange); a.put("modificationTime", now)
+    if (part.partitionValues.nonEmpty) {
+      val pv = Jsons.obj()
+      part.partitionValues.foreach { case (k, v) => pv.put(k, v) }
+      a.set[JsonNode]("partitionValues", pv)
+    }
+    part.stats.foreach(s => a.put("stats", s)) // protocol: stats is a JSON string
+    part.deletionVector.foreach(d => a.set[JsonNode]("deletionVector", dvNode(d)))
+    s"""{"add": ${Jsons.render(a)}}"""
   }
 
   private[delta] def dvNode(d: DvDescriptor): JsonNode = {

@@ -13,7 +13,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * refuses to fold DV files blind, and the raw-file streaming source
   * refuses rather than resurrect. Formats follow the public Delta
   * PROTOCOL.md "Deletion Vectors" section and ZeroMQ RFC 32 (Z85). */
-class DeletionVectorSuite extends SparkSpec {
+class DeletionVectorSuite extends SparkSpec with DeltaFixtures {
   import spark.implicits._
 
   private def writer = new DeltaWriter(spark, conf)
@@ -427,6 +427,118 @@ class DeletionVectorSuite extends SparkSpec {
     assert(c2 === c6, s"compact jobs must not scale with partitions ($c2 vs $c6)")
     // and the layout survives: both ops preserved hive dirs (checked by the
     // lifecycle tests above reading back through partition re-materialization)
+  }
+
+  test("purge and compact each plan from one log replay") {
+    withTmpDir { tmp =>
+      import org.apache.spark.sql.functions.col
+      val t = s"$tmp/table"
+      writer.write(spark.range(0, 40).toDF("id").repartition(4), t, DeltaWriteMode.Append)
+      writer.write(spark.range(40, 60).toDF("id").coalesce(1), t, DeltaWriteMode.Append)
+      assert(writer.deleteWhere(t, col("id") % 10 === 0) > 0)
+      // a fresh writer has nothing memoized: versions 0..2, no checkpoint,
+      // so one replay reads three commits
+      val before = DeltaLogReader.filesRead.get()
+      assert(writer.purgeDeletionVectors(t) > 0)
+      assert(DeltaLogReader.filesRead.get() - before === 3)
+      val beforeCompact = DeltaLogReader.filesRead.get()
+      writer.compact(t, smallFileBytes = 1L << 30)
+      assert(DeltaLogReader.filesRead.get() - beforeCompact === 4)
+      assert(writer.read(t).orderBy("id").collect().map(_.getLong(0)).toSeq ===
+        (0L until 60L).filterNot(_ % 10 == 0))
+    }
+  }
+
+  test("Rewrite and DeletionVectors merges agree on random change batches") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    import org.apache.spark.sql.types.MetadataBuilder
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    case class Change(id: Long, kind: String, v: Long, part: Long, twiceOff: Long)
+    val changeGen = for {
+      id <- Gen.choose(1L, 12L) // keys 1..8 exist: repeats, hits and misses
+      kind <- Gen.frequency(3 -> "update_postimage", 2 -> "insert",
+        2 -> "delete", 1 -> "update_preimage")
+      v <- Gen.choose(-3L, 30L)
+      part <- Gen.choose(0L, 2L)
+      twiceOff <- Gen.frequency(9 -> 0L, 1 -> 1L)
+    } yield Change(id, kind, v, part, twiceOff)
+    // (changes, widens with `extra`, provides the generated column)
+    val batchGen = Gen.zip(Gen.choose(1, 8).flatMap(Gen.listOfN(_, changeGen)),
+      Gen.frequency(3 -> false, 1 -> true), Gen.oneOf(false, true))
+
+    /** A table kind: how to create its seed (keys 1..8 in two files) and
+      * whether batches carry the partition or generated column. */
+    case class Kind(name: String, partitioned: Boolean, generated: Boolean,
+        create: String => Unit)
+    def seed = (1L to 8L).map(i => (i, i * 3)).toDF("id", "v")
+      .repartitionByRange(2, col("id"))
+    val twiceMeta = new MetadataBuilder()
+      .putString("delta.generationExpression", "v * 2").build()
+    val kinds = Seq(
+      Kind("plain", false, false, t => writer.write(seed, t, DeltaWriteMode.Append)),
+      Kind("partitioned", true, false, t => writer.write(
+        seed.withColumn("part", col("id") % 3), t, DeltaWriteMode.Append,
+        partitionBy = Seq("part"))),
+      Kind("mapped", false, false, { t =>
+        writer.write(seed, t, DeltaWriteMode.Append)
+        writer.upgradeToColumnMapping(t)
+      }),
+      Kind("check", false, false, { t =>
+        writer.write(seed, t, DeltaWriteMode.Append)
+        writer.addCheckConstraint(t, "v_nonneg", "v >= 0")
+      }),
+      Kind("generated", false, true, t => writer.write(
+        seed.withColumn("twice", col("v") * 2).withMetadata("twice", twiceMeta), t,
+        DeltaWriteMode.Append)))
+
+    def batchDf(k: Kind, changes: Seq[Change], widen: Boolean,
+        withTwice: Boolean): DataFrame = {
+      // a distinct commit version per row: latest-wins is a total order
+      var df = changes.zipWithIndex.map { case (c, i) =>
+        (c.id, c.v, c.part, c.twiceOff, c.kind, i.toLong) }
+        .toDF("id", "v", "part", "off", Cdc.ChangeTypeCol, Cdc.CommitVersionCol)
+      if (k.generated && withTwice) df = df.withColumn("twice", col("v") * 2 + col("off"))
+      if (widen) df = df.withColumn("extra", concat(lit("x"), col("id").cast("string")))
+      df = df.drop("off")
+      if (k.partitioned) df else df.drop("part")
+    }
+    /** The rejection up to the row dump, or the table's sorted rows (column
+      * names first) with the merge's rows_out. */
+    def outcome(t: String, batch: DataFrame, s: MergeStrategy): Either[String, (Long, Seq[String])] = {
+      val at = writer.latestVersion(t)
+      try {
+        val r = DeltaCdc.applyCdcDelta(spark, batch, t, Seq("id"), strategy = s)
+        val df = writer.read(t)
+        val cols = df.columns.sorted
+        Right((r.rowsOut, cols.mkString(",") +:
+          df.select(cols.toSeq.map(col): _*).collect().map(_.toString).sorted.toSeq))
+      } catch { case e: Exception =>
+        assert(writer.latestVersion(t) === at, s"$s committed a failed merge")
+        Left(writeRejection(e))
+      }
+    }
+
+    var (committed, rejected) = (0, 0)
+    withTmpDir { tmp =>
+      for ((k, ki) <- kinds.zipWithIndex; c <- 0 until 3) {
+        val (rw, dv) = (s"$tmp/${k.name}-$c-rw", s"$tmp/${k.name}-$c-dv")
+        k.create(rw); k.create(dv)
+        // two batches in a row: the second merges over the first's vectors
+        for (b <- 0 until 2) {
+          val (changes, widen, withTwice) = batchGen(Gen.Parameters.default,
+            Seed(4200L + ki * 100 + c * 10 + b)).get
+          val batch = batchDf(k, changes, widen, withTwice)
+          val expected = outcome(rw, batch, MergeStrategy.Rewrite)
+          assert(outcome(dv, batch, MergeStrategy.DeletionVectors) === expected,
+            s"${k.name} case $c batch $b: $changes widen=$widen twice=$withTwice")
+          if (expected.isLeft) rejected += 1 else committed += 1
+        }
+      }
+    }
+    // the sampled batches exercise both outcomes
+    assert(committed > 0 && rejected > 0, s"committed $committed, rejected $rejected")
   }
 
   test("vacuum keeps .bin files the current snapshot still references") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.core._
 import graft.delta.{DeltaLogReader, DeltaWriteMode, DeltaWriter}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -235,6 +236,71 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
         Option(e.getCause).map(_.getMessage).getOrElse("")
       assert(msg.contains("generated column twice"), s"got: $msg")
       assert(w.read(t).count() === 3)
+    }
+  }
+
+  test("a CDC merge enforces the same write checks under Rewrite and DeletionVectors") {
+    withTmpDir { tmp =>
+      val w = writer
+      def changes(rows: (Long, Long)*) = rows.map { case (id, v) =>
+        (id, v, "update_postimage", 1L) }
+        .toDF("id", "v", Cdc.ChangeTypeCol, Cdc.CommitVersionCol)
+      val strategies = Seq(MergeStrategy.Rewrite, MergeStrategy.DeletionVectors)
+      def twoRows = Seq((1L, 10L), (2L, 20L)).toDF("id", "v")
+      // rows 1 and 2 with `twice` = v * 2, the generated table's seed
+      def twoRowsTwice = twoRows.withColumn("twice", col("v") * 2)
+      /** A fresh 2-row table per strategy, declared by `declare`; merging
+        * `batch` into each must fail with one shared rejection and commit
+        * nothing. */
+      def rejectedAlike(name: String, declare: String => Unit,
+          batch: => DataFrame, seed: => DataFrame = twoRows): String = {
+        val msgs = strategies.map { s =>
+          val t = s"$tmp/$name-$s"
+          w.write(seed.coalesce(1), t, DeltaWriteMode.Append)
+          declare(t)
+          val at = log.latestVersion(t)
+          val e = intercept[Exception](
+            DeltaCdc.applyCdcDelta(spark, batch, t, Seq("id"), strategy = s))
+          assert(log.latestVersion(t) === at, s"$s committed a violating batch")
+          assert(w.read(t).select("id", "v").orderBy("id").as[(Long, Long)]
+            .collect().toSeq === Seq((1L, 10L), (2L, 20L)))
+          writeRejection(e)
+        }
+        assert(msgs.distinct.size === 1, s"strategies disagree: $msgs")
+        msgs.head
+      }
+      val check = rejectedAlike("check",
+        t => w.addCheckConstraint(t, "v_pos", "v > 0"), changes((2L, -7L)))
+      assert(check.contains("CHECK constraint v_pos"))
+      val invariant = rejectedAlike("inv", t => foreignAlter(t, Map.empty,
+        Some("""{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}"""),
+        schemaOverride = Some(StructType(Seq(StructField("id", LongType, true),
+          StructField("v", LongType, true, new MetadataBuilder()
+            .putString("delta.invariants",
+              """{"expression":{"expression":"v > 0"}}""").build()))))),
+        changes((2L, -7L)))
+      assert(invariant.contains("column invariant on v"))
+      // generated `twice` = v * 2: a provided disagreeing value refuses, an
+      // omitted one is computed by both strategies, never null-filled
+      def generated(t: String): Unit = foreignAlter(t, Map.empty,
+        Some("""{"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}}"""),
+        schemaOverride = Some(StructType(Seq(StructField("id", LongType, true),
+          StructField("v", LongType, true),
+          StructField("twice", LongType, true, new MetadataBuilder()
+            .putString("delta.generationExpression", "v * 2").build())))))
+      val gen = rejectedAlike("gen", generated,
+        changes((2L, 7L)).withColumn("twice", lit(15L)), seed = twoRowsTwice)
+      assert(gen.contains("generated column twice"))
+      for (s <- strategies) {
+        val t = s"$tmp/gen-ok-$s"
+        w.write(twoRowsTwice.coalesce(1), t, DeltaWriteMode.Append)
+        generated(t)
+        DeltaCdc.applyCdcDelta(spark, changes((2L, 7L), (3L, 8L)), t, Seq("id"),
+          strategy = s)
+        assert(w.read(t).orderBy("id").as[(Long, Long, Option[Long])]
+          .collect().toSeq ===
+          Seq((1L, 10L, Some(20L)), (2L, 7L, Some(14L)), (3L, 8L, Some(16L))), s"$s")
+      }
     }
   }
 

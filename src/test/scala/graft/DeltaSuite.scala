@@ -41,6 +41,17 @@ trait DeltaFixtures { self: SparkSpec =>
 
   def names(b: BatchInfo): Seq[String] = b.files.map(f => new File(f.path).getName)
 
+  /** A write-check rejection ([[graft.delta.WriteChecks]]) from anywhere in
+    * `e`'s cause chain, cut before the row dump that names the violating
+    * row; fails the test when `e` is any other failure. */
+  def writeRejection(e: Throwable): String = {
+    val m = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+    val at = m.indexOf("delta write rejected:")
+    assert(at >= 0, s"expected a write-check rejection, got: $m")
+    m.substring(at, m.indexOf(" violated by row", at))
+  }
+
   /** Write a delta-spark-shaped checkpoint parquet (one row per action,
     * each kind a nullable struct column) by writing with Spark and moving
     * the part file to the protocol checkpoint name — the same producer
