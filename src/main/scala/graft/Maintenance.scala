@@ -93,16 +93,4 @@ object Maintenance {
       totalBatches = wal.listOffsetIds().size,
       metadata = wal.readMetadata().map(Jsons.render))
   }
-
-  /** Drop old Delta snapshot-cache files beyond the newest `keep`. */
-  def cleanupSnapshotCache(checkpointDir: String, conf: Configuration,
-      keep: Int = 2): Int = {
-    val dir = new Path(checkpointDir, "snapshot_cache")
-    val snaps = Fs.list(dir, conf)
-      .filter(_.getPath.getName.startsWith("snapshot_"))
-      .sortBy(_.getPath.getName)
-    val doomed = snaps.dropRight(keep)
-    doomed.foreach(s => Fs.delete(s.getPath, recursive = false, conf))
-    doomed.size
-  }
 }

@@ -111,9 +111,9 @@ class CheckpointWriter(conf: Configuration, actionsPerPart: Int = 100000) {
     val instance =
       if (already) log.listCheckpoints(tablePath).find(_.version == version).get
       else {
-        // whole actions (not the path->size fold) so per-file stats survive
-        // the checkpoint and skipping keeps working on pruned-log tables
-        // one replay for the adds, metaData, protocol and layout
+        // whole actions so per-file stats survive the checkpoint and
+        // skipping keeps working on pruned-log tables; one snapshot for the
+        // adds, metaData, protocol, layout, watermarks and domains
         val snap = log.snapshot(tablePath, version)
         val state = snap.adds
         val meta = snap.meta
@@ -121,11 +121,11 @@ class CheckpointWriter(conf: Configuration, actionsPerPart: Int = 100000) {
         // it, a reader replaying an EMPTY partitioned table from this
         // checkpoint (post-expiry, all adds removed) loses the layout
         val partCols = snap.partitionColumns
-        val txns = log.txnState(tablePath, version)
+        val txns = snap.txns
         // domainMetadata preservation (the writer feature's obligation):
         // the newest action per domain — tombstones included — must ride
         // the checkpoint, or expireLogs erases another writer's state
-        val domains = log.domainMetadataState(tablePath, version)
+        val domains = snap.domains.values.toSeq.sortBy(_.domain)
         // the spec requires exactly one protocol action per checkpoint:
         // a DV table's reader-3/writer-7 upgrade lives only in JSON
         // commits, so after expireLogs a protocol-less checkpoint leaves

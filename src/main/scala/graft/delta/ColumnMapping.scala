@@ -211,15 +211,15 @@ object ColumnMapping {
   def readFiles(spark: SparkSession, log: DeltaLogReader, tablePath: String,
       files: Seq[String], passthrough: Seq[StructField] = Nil,
       keepMeta: Boolean = false): DataFrame = {
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    val snap = log.latestSnapshot(tablePath)
+    val declared = snap.flatMap(_.schema)
     val basePath =
       if (files.exists(_.split('/').dropRight(1).exists(_.contains('=')))) Some(tablePath)
       else None
     declared match {
       case Some(s) if isMapped(s) =>
         readMapped(spark, files, s, basePath, passthrough, keepMeta,
-          byFieldId = isIdMode(log.tableConfigurationJson(tablePath)))
+          byFieldId = isIdMode(snap.flatMap(_.configurationJson)))
       case _ =>
         val reader = basePath.foldLeft(spark.read)((r, b) => r.option("basePath", b))
         declared.map(s => StructType(s.fields ++ passthrough))

@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 
 import java.io.{BufferedReader, InputStreamReader}
 import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
+import scala.collection.immutable.TreeMap
 
 /** Delta-protocol actions we understand — a superset of what the
   * reference's from-scratch `_delta_log` parser handles
@@ -43,7 +43,7 @@ object DeltaAction {
   /** SetTransaction — the protocol's idempotent-writer watermark: the
     * newest `version` a writer identified by `appId` has committed. A
     * sink that stamps every commit with its (appId, batchId) and skips
-    * batches at-or-below [[DeltaLogReader.lastTxnVersion]] gets
+    * batches at-or-below its watermark ([[DeltaSnapshot.txns]]) gets
     * exactly-once output from an at-least-once pipeline (delta-spark's
     * `txnAppId`/`txnVersion` idempotent writes). */
   case class Txn(appId: String, version: Long) extends DeltaAction
@@ -85,25 +85,66 @@ case class DeltaCommit(version: Long, actions: Seq[DeltaAction]) {
   * single-file (`v.checkpoint.parquet`). */
 case class CheckpointInstance(version: Long, parts: Option[Int])
 
-/** Latest-known table metadata; `atVersion` is the newest log version the
-  * resolution scan covered (the meta is current as of it). */
-case class TableMeta(id: String, schemaString: Option[String], atVersion: Long,
+/** A table's metaData as a snapshot folded it. */
+case class TableMeta(id: String, schemaString: Option[String],
     configurationJson: Option[String] = None)
 
-/** The table as of `version`, from ONE replay of its log
-  * ([[DeltaLogReader.snapshot]]): the active adds (stats, partition
-  * values and deletion vectors kept, sorted by path), the newest metaData
-  * and protocol, and the metaData's LOGICAL `partitionColumns`. A write
-  * plans from one snapshot and commits against its version, so every
-  * question it asks of the table (files, schema, layout, properties)
-  * costs no further log read. */
+/** The table as of `version`, from ONE fold of its log
+  * ([[DeltaLogReader.snapshot]], the only replay there is — every
+  * question asked of the table reads a field here): the active adds
+  * (stats, partition values and deletion vectors kept, keyed and sorted
+  * by path), the newest metaData and protocol, the metaData's LOGICAL
+  * `partitionColumns`, the newest SetTransaction version per appId (the
+  * idempotent-writer watermarks), the newest `domainMetadata` per domain
+  * (tombstones kept: a checkpoint that drops one lets a surviving older
+  * commit resurrect the removed domain) and the commit timestamps of the
+  * JSON commits the fold read. A write plans from one snapshot and
+  * commits against its version, so every question it asks of the table
+  * (files, schema, layout, properties, protocol) costs no further log
+  * read. */
 case class DeltaSnapshot(tablePath: String, version: Long,
-    adds: Seq[DeltaAction.AddFile], meta: Option[TableMeta],
-    protocol: Option[DeltaAction.Protocol], partitionColumns: Seq[String]) {
+    files: TreeMap[String, DeltaAction.AddFile], meta: Option[TableMeta],
+    protocol: Option[DeltaAction.Protocol], partitionColumns: Seq[String],
+    txns: Map[String, Long], domains: Map[String, DeltaAction.DomainMetadata],
+    commitTs: Map[Long, Long]) {
+  /** Active adds, sorted by path. */
+  lazy val adds: Seq[DeltaAction.AddFile] = files.values.toVector
   lazy val schema: Option[org.apache.spark.sql.types.StructType] =
     meta.flatMap(_.schemaString).map(s => org.apache.spark.sql.types.DataType
       .fromJson(s).asInstanceOf[org.apache.spark.sql.types.StructType])
   def configurationJson: Option[String] = meta.flatMap(_.configurationJson)
+
+  /** This snapshot with the actions of version `v` (a JSON commit, or a
+    * checkpoint's rows) folded on top — removes before adds, so a
+    * deletion-vector re-add of the same path survives. The active adds
+    * are an immutable map, so a fold costs O(actions of `v`), not
+    * O(active files). */
+  private[delta] def fold(v: Long, actions: Seq[DeltaAction]): DeltaSnapshot = {
+    import DeltaAction._
+    var fs = files; var m = meta; var p = protocol; var pc = partitionColumns
+    var tx = txns; var dm = domains; var ts = commitTs
+    actions.foreach {
+      case r: RemoveFile => fs -= r.path
+      case md: MetaData =>
+        m = Some(TableMeta(md.id, md.schemaString.orElse(m.flatMap(_.schemaString)),
+          md.configurationJson.orElse(m.flatMap(_.configurationJson))))
+        pc = md.partitionColumns
+      case pr: Protocol => p = Some(pr)
+      case t: Txn => tx += t.appId -> t.version
+      case d: DomainMetadata => dm += d.domain -> d
+      case CommitInfo(Some(t)) => ts += v -> t
+      case _ =>
+    }
+    actions.foreach { case a: AddFile => fs += a.path -> a; case _ => }
+    DeltaSnapshot(tablePath, v, fs, m, p, pc, tx, dm, ts)
+  }
+}
+
+object DeltaSnapshot {
+  /** The table before its first version. */
+  private[delta] def empty(tablePath: String): DeltaSnapshot =
+    DeltaSnapshot(tablePath, -1L, TreeMap.empty, None, None, Seq.empty, Map.empty,
+      Map.empty, Map.empty)
 }
 
 object DeltaLogReader {
@@ -111,27 +152,63 @@ object DeltaLogReader {
     * since JVM start — test instrumentation for "a write replays its log
     * once", where the writer's own reader is out of reach. */
   val filesRead = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Tables whose newest snapshot the process keeps. */
+  private val CachedTables = 16
+
+  /** A snapshot and the log files it was folded from — its base
+    * checkpoint's parts and the JSON commits above them — by name, with
+    * the (length, modification time) each had when it was read. */
+  private case class Cached(snap: DeltaSnapshot, sources: Map[String, (Long, Long)])
+
+  /** The newest snapshot asked of each table, keyed by qualified log
+    * path, least recently used evicted first. Process-wide because
+    * readers and writers are built per operation (a CDC merge builds a
+    * new [[DeltaWriter]] per batch): only a shared cache lets the next
+    * one skip the replay. Threads share it (a DV merge's two concurrent
+    * halves both read the table); the snapshots are immutable. */
+  private val cache = new java.util.LinkedHashMap[String, Cached](32, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[String, Cached]): Boolean =
+      size() > CachedTables
+  }
+
+  private def cached(key: String): Option[Cached] = cache.synchronized(Option(cache.get(key)))
+
+  /** Keep `c` unless the entry there now is newer and was not found
+    * `stale` (a time-travel read leaves the newest snapshot in place). */
+  private def remember(key: String, c: Cached, stale: Option[Cached]): Unit =
+    cache.synchronized {
+      val cur = cache.get(key)
+      if (cur == null || stale.exists(_ eq cur) || cur.snap.version <= c.snap.version)
+        cache.put(key, c)
+    }
 }
 
 /** Reader for a Delta table's `_delta_log`: version listing, JSON-lines
-  * action parsing, parquet-checkpoint interop, and snapshot-state
-  * reconstruction with an optional snapshot cache.
+  * action parsing, parquet-checkpoint interop, and the one log replay,
+  * [[snapshot]].
   *
   * Re-implements (no delta-spark jars on this classpath) the log-replay
   * core of delta-spark's `Snapshot`, following the reference's design
-  * (`checkpoints/delta.py:425-499`): fold add/remove actions in version
-  * order. Two complementary replay bases bound the cost:
+  * (`checkpoints/delta.py:425-499`): fold actions in version order onto
+  * a replay base, the newest parquet checkpoint at or below the target
+  * version (written by [[CheckpointWriter]] every 10 commits, or by
+  * delta-spark, which prunes aged JSON commits after checkpointing — a
+  * foreign table usually has no version-0 commit). A pruned log with no
+  * usable checkpoint, or a gap in the JSON commits, is an error, never a
+  * silent partial file set.
   *
-  *  - our own JSON snapshot cache every `SnapshotEvery` versions
-  *    (reference `delta.py:110-187`), and
-  *  - the table's own `*.checkpoint.parquet` files (written by
-  *    delta-spark, pointed to by `_delta_log/_last_checkpoint`), which
-  *    make tables with pruned JSON logs readable at all: delta-spark
-  *    checkpoints every 10 commits and log-retention deletes aged JSON,
-  *    so a foreign table usually has no version-0 commit. Replay then
-  *    starts from the newest checkpoint at or below the target version.
-  *    A pruned log with no usable checkpoint is an error, never a
-  *    silent partial file set.
+  * The replay is incremental, as delta-spark's `SnapshotManagement.update`
+  * is: the process keeps the newest snapshot asked of each table (see
+  * the companion), and a read lists `_delta_log` once, reuses the kept
+  * snapshot while every file it was folded from is still listed with the
+  * same length and modification time, and folds only the JSON commits
+  * between it and the requested version. Anything else — a replaced or
+  * rewritten log, a gap, a request below the kept version — replays from
+  * the checkpoint. Log expiry deletes only JSON commits below the newest
+  * checkpoint, so it resets a kept snapshot only when the snapshot was
+  * folded from them. The commit's put-if-absent conflict check stays the
+  * authority on what is committed; the cache only speeds up reads.
   *
   * Checkpoint parquet is read driver-side with parquet-mr's Group API
   * (no SparkSession needed — this is planning metadata, and the state it
@@ -145,32 +222,9 @@ object DeltaLogReader {
 class DeltaLogReader(conf: Configuration) {
   import DeltaAction._
 
-  val SnapshotEvery = 100
-  val MaxSnapshots = 2
-
   /** Commit-file reads since construction — instrumentation for tests
     * asserting the amortized (non-O(versions)) metadata path. */
   @volatile var commitReadCount: Long = 0L
-
-  /** Per-table memo of the newest metaData seen, so repeated `tableId` /
-    * `tableSchemaString` calls (one per planned batch) scan only commits
-    * newer than the memo instead of the whole log. Invalidated when the
-    * table's latest version drops below the memo (log replaced/reset —
-    * delta tables always restart numbering at 0 on replacement). */
-  private val metaMemo = TrieMap.empty[String, TableMeta]
-
-  /** Per-table commit timestamps (version -> epoch ms), harvested for free
-    * whenever a commit is parsed and persisted inside the snapshot cache —
-    * so timestamp start-offset resolution stops being O(versions) commit
-    * re-reads on tables whose log was already replayed once. */
-  private val tsMemo = TrieMap.empty[String, Map[Long, Long]]
-
-  private def memoTs(tablePath: String, entries: Map[Long, Long]): Unit =
-    if (entries.nonEmpty)
-      tsMemo.updateWith(tablePath) {
-        case Some(m) => Some(m ++ entries)
-        case None => Some(entries)
-      }
 
   def logDir(tablePath: String): Path = new Path(tablePath, "_delta_log")
 
@@ -208,7 +262,6 @@ class DeltaLogReader(conf: Configuration) {
         .flatMap(line => parseAction(Jsons.parse(line)))
         .toSeq
       val commit = DeltaCommit(version, actions)
-      commit.timestampMs.foreach(ts => memoTs(tablePath, Map(version -> ts)))
       // refuse unreadable protocols at PARSE time so every consumer —
       // snapshot replay, stats, tailing, CDF — inherits the guard
       actions.collect { case p: Protocol => p }.foreach(checkProtocol(tablePath, _))
@@ -322,36 +375,9 @@ class DeltaLogReader(conf: Configuration) {
     * column actually carries `delta.identity.*` metadata, at which point
     * any append must maintain its high watermark. No-op on a path with
     * no log yet (first write defines the protocol). */
-  /** Memoized latest protocol per table. Protocol actions only upgrade,
-    * so a cached answer at version v stays correct until a NEWER commit
-    * carries a protocol action — the refresh folds only commits above
-    * the cached version (same amortization as the meta memo; a replaced
-    * table, detected by any cache/version mismatch, falls back to a full
-    * [[resolveProtocol]]). Keeps the per-commit write gate O(new
-    * commits), not O(log length). */
-  private val protocolMemo = TrieMap.empty[String, (Long, Option[Protocol])]
-
-  def latestProtocol(tablePath: String): Option[Protocol] =
-    latestVersion(tablePath).flatMap { v =>
-      protocolMemo.get(tablePath) match {
-        case Some((cv, cp)) if cv == v => cp
-        case Some((cv, cp)) if cv < v =>
-          val newer = listVersions(tablePath).filter(x => x > cv && x <= v)
-            .flatMap(x => readCommit(tablePath, x).actions
-              .collectFirst { case p: Protocol => p })
-            .lastOption
-          val res = newer.orElse(cp)
-          protocolMemo.put(tablePath, (v, res))
-          res
-        case _ =>
-          val res = resolveProtocol(tablePath, v)
-          protocolMemo.put(tablePath, (v, res))
-          res
-      }
-    }
-
-  def checkWriteProtocol(tablePath: String): Unit = {
-      latestProtocol(tablePath).foreach { p =>
+  def checkWriteProtocol(tablePath: String): Unit =
+    latestSnapshot(tablePath).foreach { snap =>
+      snap.protocol.foreach { p =>
         val unsupported =
           if (p.minWriterVersion == 7) p.writerFeatures.filterNot(SupportedWriterFeatures)
           else if (p.minWriterVersion > 7) Seq(s"minWriterVersion=${p.minWriterVersion}")
@@ -364,17 +390,12 @@ class DeltaLogReader(conf: Configuration) {
             "writers rely on")
         val identityPossible = p.minWriterVersion == 6 ||
           (p.minWriterVersion == 7 && p.writerFeatures.contains("identityColumns"))
-        if (identityPossible) {
-          val hasIdentity = tableSchemaString(tablePath)
-            .map(s => org.apache.spark.sql.types.DataType.fromJson(s)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .exists(_.fields.exists(_.metadata.json.contains("delta.identity.")))
-          if (hasIdentity)
-            throw new PlanningError(
-              s"delta table $tablePath has identity columns; this engine " +
-              "does not maintain identity high watermarks — refusing to " +
-              "write rather than mint colliding identity values")
-        }
+        if (identityPossible &&
+            snap.schema.exists(_.fields.exists(_.metadata.json.contains("delta.identity."))))
+          throw new PlanningError(
+            s"delta table $tablePath has identity columns; this engine " +
+            "does not maintain identity high watermarks — refusing to " +
+            "write rather than mint colliding identity values")
       }
     }
 
@@ -387,8 +408,8 @@ class DeltaLogReader(conf: Configuration) {
     new Path(logDir(tablePath), "_last_checkpoint")
 
   /** The `_last_checkpoint` pointer, validated against the files it names
-    * (the protocol treats it as a hint — a stale pointer falls through to
-    * the directory scan in [[checkpointAtOrBelow]]). */
+    * (the protocol treats it as a hint; [[snapshot]] finds checkpoints in
+    * its own listing, so a stale pointer misleads no replay). */
   def lastCheckpoint(tablePath: String): Option[CheckpointInstance] = {
     val p = lastCheckpointPath(tablePath)
     if (!Fs.exists(p, conf)) return None
@@ -402,8 +423,10 @@ class DeltaLogReader(conf: Configuration) {
 
   /** All complete checkpoint instances found by scanning the log dir
     * (multi-part instances count only when every part is present). */
-  def listCheckpoints(tablePath: String): Seq[CheckpointInstance] = {
-    val names = Fs.list(logDir(tablePath), conf).map(_.getPath.getName)
+  def listCheckpoints(tablePath: String): Seq[CheckpointInstance] =
+    completeCheckpoints(Fs.list(logDir(tablePath), conf).map(_.getPath.getName))
+
+  private def completeCheckpoints(names: Seq[String]): Seq[CheckpointInstance] = {
     val singles = names.collect { case SinglePartRe(v) =>
       CheckpointInstance(v.toLong, None) }
     val multis = names.collect { case MultiPartRe(v, part, total) =>
@@ -412,14 +435,8 @@ class DeltaLogReader(conf: Configuration) {
       .collect { case ((v, total), parts)
           if parts.map(_._2).toSet == (1 to total).toSet =>
         CheckpointInstance(v, Some(total)) }
-    (singles ++ multis).toSeq.sortBy(_.version)
+    (singles ++ multis).sortBy(_.version)
   }
-
-  /** Newest complete checkpoint at or below `version`: the
-    * `_last_checkpoint` pointer when it qualifies, else a directory scan. */
-  def checkpointAtOrBelow(tablePath: String, version: Long): Option[CheckpointInstance] =
-    lastCheckpoint(tablePath).filter(_.version <= version)
-      .orElse(listCheckpoints(tablePath).filter(_.version <= version).lastOption)
 
   def checkpointFiles(tablePath: String, cp: CheckpointInstance): Seq[Path] =
     cp.parts match {
@@ -570,364 +587,98 @@ class DeltaLogReader(conf: Configuration) {
     out.result()
   }
 
-  // ---- metadata (amortized: memo + snapshot cache + checkpoint) ----------
+  // ---- the one replay ------------------------------------------------------
 
-  /** Newest table metadata. Cost is O(commits newer than the last answer):
-    * the scan starts from the in-memory memo, else the persisted snapshot
-    * cache's stored meta, else the newest parquet checkpoint — a full
-    * backward JSON scan happens only on the first contact with an
-    * uncached, checkpoint-less table. A replaced table is detected by its
-    * version numbering restarting below the memo (the delta-universal
-    * behavior); `verifyTableId` upstream guards the persisted id. */
-  def resolveMeta(tablePath: String, cacheDir: Option[Path] = None): Option[TableMeta] = {
-    val latest = latestVersion(tablePath)
-    val memo = metaMemo.get(tablePath).filter(m => latest.exists(_ >= m.atVersion))
-    if (memo.isEmpty) { metaMemo.remove(tablePath); tsMemo.remove(tablePath) }
-    val floor: Option[TableMeta] = memo
-      .orElse(cacheDir.flatMap(d => latest.flatMap(l => newestCachedAtOrBelow(d, l)))
-        .flatMap(cs => cs.meta))
-      .orElse(latest.flatMap(l => checkpointAtOrBelow(tablePath, l)).flatMap { cp =>
-        readCheckpointActions(tablePath, cp)
-          .collectFirst { case m: MetaData =>
-            TableMeta(m.id, m.schemaString, cp.version, m.configurationJson) }
-      })
-    val toScan = listVersions(tablePath).filter(v => floor.forall(_.atVersion < v))
-    val fresh = toScan.reverseIterator
-      .map(v => (v, readCommit(tablePath, v).actions.collectFirst { case m: MetaData => m }))
-      .collectFirst { case (v, Some(m)) => TableMeta(m.id,
-        m.schemaString.orElse(floor.flatMap(_.schemaString)), v,
-        m.configurationJson.orElse(floor.flatMap(_.configurationJson))) }
-    // the scan covered every commit newer than the floor, so whatever we
-    // resolved is current as of `latest` — memo that version so the next
-    // call scans only commits newer still
-    val resolved = fresh.orElse(floor)
-      .map(m => latest.fold(m)(l => m.copy(atVersion = math.max(m.atVersion, l))))
-    resolved.foreach(m => metaMemo.put(tablePath, m))
-    resolved
+  /** The table at `version`: the kept snapshot folded forward when it is
+    * still valid and at or below `version` (see the class doc), else the
+    * newest checkpoint at or below `version` with every JSON commit above
+    * it folded on top. Throws [[PlanningError]] when `version` is past
+    * the log's newest, or when the log is pruned below the replay start
+    * with no covering checkpoint or has a gap. */
+  def snapshot(tablePath: String, version: Long): DeltaSnapshot =
+    replay(tablePath, Some(version)).getOrElse(
+      throw new PlanningError(s"no delta log versions <= $version at $tablePath"))
+
+  /** The table at its newest version — the newest JSON commit's, or the
+    * newest checkpoint's when every JSON commit expired. None = no log. */
+  def latestSnapshot(tablePath: String): Option[DeltaSnapshot] = replay(tablePath, None)
+
+  private def replay(tablePath: String, at: Option[Long]): Option[DeltaSnapshot] = {
+    import DeltaLogReader.Cached
+    val dir = logDir(tablePath)
+    val key = Fs.fs(dir, conf).makeQualified(dir).toString
+    // the one listing this read makes
+    val listed = Fs.list(dir, conf).map(s => s.getPath.getName -> s).toMap
+    val jsons = listed.values.flatMap(s => versionOf(s.getPath.getName).map(_ -> s)).toMap
+    val ckpts = completeCheckpoints(listed.keys.toSeq)
+    val latest = (jsons.keys ++ ckpts.map(_.version)).maxOption.getOrElse(return None)
+    val version = at.getOrElse(latest)
+    if (version > latest)
+      throw new PlanningError(
+        s"delta log at $tablePath has no version $version (latest is $latest)")
+    def stamp(s: org.apache.hadoop.fs.FileStatus) = (s.getLen, s.getModificationTime)
+    def extend(c: Cached, versions: Seq[Long]): Cached =
+      versions.foldLeft(c) { (acc, v) =>
+        Cached(acc.snap.fold(v, readCommit(tablePath, v).actions),
+          acc.sources + (jsons(v).getPath.getName -> stamp(jsons(v))))
+      }
+    val hit = DeltaLogReader.cached(key)
+    val valid = hit.filter(_.sources.forall { case (name, st) =>
+      listed.get(name).exists(stamp(_) == st) })
+    val reusable = valid.filter(c => c.snap.version <= version &&
+      (c.snap.version + 1 to version).forall(jsons.contains))
+    val result = reusable match {
+      case Some(c) if c.snap.version == version => return Some(c.snap)
+      case Some(c) => extend(c, c.snap.version + 1 to version)
+      case None =>
+        val cp = ckpts.filter(_.version <= version).lastOption
+        val start = cp.fold(0L)(_.version + 1)
+        (start to version).find(v => !jsons.contains(v)).foreach { v =>
+          if (v == start)
+            throw new PlanningError(
+              s"delta log at $tablePath is pruned: replay needs version $start " +
+              s"but it is gone and no parquet checkpoint at or below $version " +
+              "covers it; cannot reconstruct a complete snapshot")
+          throw new PlanningError(
+            s"delta log at $tablePath has a gap: version $v is missing; " +
+            "cannot reconstruct a complete snapshot")
+        }
+        // a checkpoint's remove rows are tombstones of older versions,
+        // never of its own adds
+        val base = cp.fold(Cached(DeltaSnapshot.empty(tablePath), Map.empty)) { c =>
+          Cached(DeltaSnapshot.empty(tablePath).fold(c.version,
+              readCheckpointActions(tablePath, c).filterNot(_.isInstanceOf[RemoveFile])),
+            checkpointFiles(tablePath, c).map(f => f.getName -> stamp(listed(f.getName))).toMap)
+        }
+        extend(base, start to version)
+    }
+    DeltaLogReader.remember(key, result, if (valid.isEmpty) hit else None)
+    Some(result.snap)
   }
-
-  /** Current table id (newest metaData action; amortized via [[resolveMeta]]). */
-  def tableId(tablePath: String, cacheDir: Option[Path] = None): Option[String] =
-    resolveMeta(tablePath, cacheDir).map(_.id).filter(_.nonEmpty)
-
-  /** Latest schemaString (amortized via [[resolveMeta]]). */
-  def tableSchemaString(tablePath: String, cacheDir: Option[Path] = None): Option[String] =
-    resolveMeta(tablePath, cacheDir).flatMap(_.schemaString)
-
-  /** Latest metaData `configuration` as raw JSON (amortized via
-    * [[resolveMeta]]) — table properties a write must carry forward. */
-  def tableConfigurationJson(tablePath: String,
-      cacheDir: Option[Path] = None): Option[String] =
-    resolveMeta(tablePath, cacheDir).flatMap(_.configurationJson)
 
   /** First version whose commit timestamp is >= tsMs
-    * (reference `delta.py:560-575`). Timestamps ride the same memo +
-    * snapshot cache as table meta: versions the memo or a persisted
-    * snapshot already covers cost zero commit reads; only uncovered
-    * commits (typically the post-snapshot tail) are opened, and those
-    * reads land in the memo for the next call. */
-  def versionForTimestamp(tablePath: String, tsMs: Long,
-      cacheDir: Option[Path] = None): Option[Long] = {
-    val versions = listVersions(tablePath)
-    for (d <- cacheDir; l <- versions.lastOption; cs <- newestCachedAtOrBelow(d, l))
-      memoTs(tablePath, cs.commitTs)
-    versions.find { v =>
-      tsMemo.getOrElse(tablePath, Map.empty).get(v)
-        .orElse(readCommit(tablePath, v).timestampMs)
-        .exists(_ >= tsMs)
-    }
-  }
+    * (reference `delta.py:560-575`). */
+  def versionForTimestamp(tablePath: String, tsMs: Long): Option[Long] =
+    commitTimes(tablePath).collectFirst { case (v, Some(ts)) if ts >= tsMs => v }
 
   /** Newest version whose commit timestamp is <= tsMs — delta-spark's
     * `timestampAsOf` time-travel semantics (read the table as it was AT
-    * that moment). Same memo/cache amortization as
-    * [[versionForTimestamp]]. */
-  def versionAtOrBeforeTimestamp(tablePath: String, tsMs: Long,
-      cacheDir: Option[Path] = None): Option[Long] = {
-    val versions = listVersions(tablePath)
-    for (d <- cacheDir; l <- versions.lastOption; cs <- newestCachedAtOrBelow(d, l))
-      memoTs(tablePath, cs.commitTs)
-    versions.filter { v =>
-      tsMemo.getOrElse(tablePath, Map.empty).get(v)
-        .orElse(readCommit(tablePath, v).timestampMs)
-        .exists(_ <= tsMs)
-    }.lastOption
-  }
+    * that moment). */
+  def versionAtOrBeforeTimestamp(tablePath: String, tsMs: Long): Option[Long] =
+    commitTimes(tablePath).collect { case (v, Some(ts)) if ts <= tsMs => v }
+      .foldLeft(Option.empty[Long])((_, v) => Some(v))
 
-  /** Newest committed SetTransaction version for `appId` — the
-    * idempotent-writer watermark. Scans JSON commits NEWEST first (a sink
-    * stamping every batch is found in the most recent commit or two) and
-    * falls back to the newest checkpoint's txn rows, so an expiry-pruned
-    * table still answers from checkpoint + surviving tail. */
-  def lastTxnVersion(tablePath: String, appId: String): Option[Long] = {
-    val ckpt = latestVersion(tablePath)
-      .orElse(listCheckpoints(tablePath).lastOption.map(_.version))
-      .flatMap(l => checkpointAtOrBelow(tablePath, l))
-    // newest-first through the commits ABOVE the checkpoint (a sink
-    // stamping every batch hits in the first commit or two); anything
-    // below the checkpoint cannot beat the checkpointed watermark
-    val floor = ckpt.map(_.version).getOrElse(-1L)
-    val fromJson = listVersions(tablePath).filter(_ > floor).reverseIterator
-      .map(v => readCommit(tablePath, v).txns.filter(_.appId == appId))
-      .collectFirst { case ts if ts.nonEmpty => ts.map(_.version).max }
-    fromJson.orElse(ckpt.flatMap { cp =>
-      val ts = readCheckpointActions(tablePath, cp)
-        .collect { case t: Txn if t.appId == appId => t.version }
-      if (ts.isEmpty) None else Some(ts.max)
-    })
-  }
-
-  /** All writers' SetTransaction watermarks at `version` (newest per
-    * appId) — what a checkpoint must carry so expiry can't lose them. */
-  def txnState(tablePath: String, version: Long): Map[String, Long] = {
-    val ckpt = checkpointAtOrBelow(tablePath, version)
-    val base: Map[String, Long] = ckpt
-      .map(cp => readCheckpointActions(tablePath, cp)
-        .collect { case t: Txn => t.appId -> t.version }.toMap)
-      .getOrElse(Map.empty)
-    // only commits ABOVE the checkpoint replay on top — a surviving older
-    // commit must not roll a watermark back below the checkpointed value
-    val start = ckpt.map(_.version + 1).getOrElse(0L)
-    listVersions(tablePath).filter(v => v >= start && v <= version)
-      .foldLeft(base) { (acc, v) =>
-        readCommit(tablePath, v).txns.foldLeft(acc)((m, t) => m + (t.appId -> t.version))
-      }
-  }
-
-  /** Newest `domainMetadata` action per domain at `version` — what a
-    * checkpoint must carry so `expireLogs` can't erase another writer's
-    * per-domain state. Tombstones (`removed=true`) are KEPT: a checkpoint
-    * that drops one would let a surviving older commit resurrect the
-    * removed domain on the next replay. Same replay shape as
-    * [[txnState]]: newest checkpoint at-or-below as the base, only the
-    * JSON commits above it fold on top. */
-  def domainMetadataState(tablePath: String,
-      version: Long): Seq[DeltaAction.DomainMetadata] = {
-    val ckpt = checkpointAtOrBelow(tablePath, version)
-    val base: Map[String, DeltaAction.DomainMetadata] = ckpt
-      .map(cp => readCheckpointActions(tablePath, cp)
-        .collect { case d: DomainMetadata => d.domain -> d }.toMap)
-      .getOrElse(Map.empty)
-    val start = ckpt.map(_.version + 1).getOrElse(0L)
-    listVersions(tablePath).filter(v => v >= start && v <= version)
-      .foldLeft(base) { (acc, v) =>
-        readCommit(tablePath, v).actions.foldLeft(acc) {
-          case (m, d: DomainMetadata) => m + (d.domain -> d)
-          case (m, _) => m
-        }
-      }.values.toSeq.sortBy(_.domain)
-  }
-
-  /** Last protocol action at or below `version` — the table's protocol
-    * requirements THEN. Protocol actions only ever upgrade (the spec
-    * forbids downgrades), so the newest one wins. JSON commits newest
-    * first, the newest checkpoint at-or-below as the fallback base (a
-    * checkpoint must carry the protocol or foreign readers of an
-    * expiry-pruned log can't load the snapshot at all). */
-  def resolveProtocol(tablePath: String, version: Long): Option[DeltaAction.Protocol] =
-    listVersions(tablePath).filter(_ <= version).reverseIterator
-      .map(v => readCommit(tablePath, v).actions
-        .collectFirst { case p: Protocol => p })
-      .collectFirst { case Some(p) => p }
-      .orElse(checkpointAtOrBelow(tablePath, version).flatMap(cp =>
-        readCheckpointActions(tablePath, cp)
-          .collectFirst { case p: Protocol => p }))
-
-  /** Last metaData action at or below `version` (the schema the table had
-    * THEN — what a restore must revert to). JSON commits first, newest
-    * checkpoint at-or-below as the fallback base. */
-  def metaAt(tablePath: String, version: Long): Option[TableMeta] =
-    listVersions(tablePath).filter(_ <= version).reverseIterator
-      .map(v => (v, readCommit(tablePath, v).actions.collectFirst { case m: MetaData => m }))
-      .collectFirst { case (v, Some(m)) =>
-        TableMeta(m.id, m.schemaString, v, m.configurationJson) }
-      .orElse(checkpointAtOrBelow(tablePath, version).flatMap(cp =>
-        readCheckpointActions(tablePath, cp)
-          .collectFirst { case m: MetaData =>
-            TableMeta(m.id, m.schemaString, cp.version, m.configurationJson) }))
-
-  /** Logical `partitionColumns` of the last metaData action at or below
-    * `version` — the protocol's record of the hive layout, needed when a
-    * table has NO active add files left to infer it from (a fully
-    * deleted partitioned table must not silently de-partition on its
-    * next write or ALTER). */
-  def partitionColumnsAt(tablePath: String, version: Long): Seq[String] =
-    snapshot(tablePath, version).partitionColumns
-
-  /** Replay the log once up to `version`: the newest checkpoint at or
-    * below it, then every JSON commit above the checkpoint (removes before
-    * adds within a commit, so a deletion-vector re-add of the same path
-    * survives). Throws [[PlanningError]] when the log is pruned below the
-    * replay start with no covering checkpoint. The replay also seeds the
-    * metaData and protocol memos, so the commit's write-protocol gate and
-    * metadata lookups read nothing more while the table stays at
-    * `version`. */
-  def snapshot(tablePath: String, version: Long): DeltaSnapshot = {
-    val ckpt = checkpointAtOrBelow(tablePath, version)
-    val replayStart = ckpt.map(_.version + 1).getOrElse(0L)
-    val replay = listVersions(tablePath).filter(v => v >= replayStart && v <= version)
-    replay.headOption.foreach { h =>
-      if (h != replayStart)
-        throw new PlanningError(
-          s"delta log at $tablePath is pruned below $h with no covering checkpoint")
-    }
-    val adds = scala.collection.mutable.HashMap.empty[String, AddFile]
-    var meta: Option[TableMeta] = None
-    var protocol: Option[Protocol] = None
-    var partCols = Seq.empty[String]
-    def fold(v: Long, actions: Seq[DeltaAction]): Unit = {
-      actions.foreach {
-        case r: RemoveFile => adds.remove(r.path)
-        case m: MetaData =>
-          meta = Some(TableMeta(m.id, m.schemaString.orElse(meta.flatMap(_.schemaString)),
-            v, m.configurationJson.orElse(meta.flatMap(_.configurationJson))))
-          partCols = m.partitionColumns
-        case p: Protocol => protocol = Some(p)
-        case _ =>
-      }
-      actions.foreach { case a: AddFile => adds(a.path) = a; case _ => }
-    }
-    // a checkpoint's remove rows are tombstones of older versions, never
-    // of its own adds
-    ckpt.foreach(c => fold(c.version,
-      readCheckpointActions(tablePath, c).filterNot(_.isInstanceOf[RemoveFile])))
-    replay.foreach(v => fold(v, readCommit(tablePath, v).actions))
-    if (metaMemo.get(tablePath).forall(_.atVersion <= version))
-      meta.foreach(m => metaMemo.put(tablePath, m.copy(atVersion = version)))
-    if (protocolMemo.get(tablePath).forall(_._1 <= version))
-      protocolMemo.put(tablePath, (version, protocol))
-    DeltaSnapshot(tablePath, version, adds.values.toSeq.sortBy(_.path), meta,
-      protocol, partCols)
-  }
-
-  /** Active file set (path -> size) at `version`.
-    *
-    * Replay base: the newest of (our cached JSON snapshot, the table's own
-    * parquet checkpoint) at or below `version`; JSON commits after the
-    * base are folded on top. Throws [[PlanningError]] instead of returning
-    * a partial file set when the log is pruned below the replay start
-    * (no version-0 commit and no checkpoint) or has a gap.
-    * Result sorted by path for deterministic batching. */
-  def snapshotState(tablePath: String, version: Long,
-      cacheDir: Option[Path] = None): Seq[(String, Long)] = {
-    val jsonVersions = listVersions(tablePath).filter(_ <= version)
-    val cached = cacheDir.flatMap(d => newestCachedAtOrBelow(d, version))
-    val ckpt = checkpointAtOrBelow(tablePath, version)
-      .filter(c => cached.forall(_.version < c.version))
-
-    val (baseVersion, startState, baseMeta) = ckpt match {
-      case Some(c) =>
-        val actions = readCheckpointActions(tablePath, c)
-        val st = actions.collect { case a: AddFile => a.path -> a.size }.toMap
-        val m = actions.collectFirst { case md: MetaData =>
-          TableMeta(md.id, md.schemaString, c.version, md.configurationJson) }
-        (Some(c.version), st, m)
-      case None => cached match {
-        case Some(cs) => (Some(cs.version), cs.files, cs.meta)
-        case None => (None, Map.empty[String, Long], None)
-      }
-    }
-
-    if (baseVersion.isEmpty && jsonVersions.isEmpty)
-      throw new PlanningError(s"no delta log versions <= $version at $tablePath")
-
-    val replay = jsonVersions.filter(v => baseVersion.forall(_ < v))
-    val replayStart = baseVersion.map(_ + 1).getOrElse(0L)
-    replay.headOption.foreach { h =>
-      if (h != replayStart)
-        throw new PlanningError(
-          s"delta log at $tablePath is pruned: replay needs version $replayStart " +
-          s"but the earliest surviving JSON commit <= $version is $h and no " +
-          "parquet checkpoint covers the gap; cannot reconstruct a complete snapshot")
-    }
-    replay.zipWithIndex.foreach { case (v, i) =>
-      if (v != replayStart + i)
-        throw new PlanningError(
-          s"delta log at $tablePath has a gap: version ${replayStart + i} is " +
-          s"missing (next surviving commit is $v); cannot reconstruct a complete snapshot")
-    }
-
-    var meta = baseMeta
-    val state = replay.foldLeft(startState) { (acc, v) =>
-      val commit = readCommit(tablePath, v)
-      commit.actions.collectFirst { case m: MetaData => m }.foreach { md =>
-        meta = Some(TableMeta(md.id,
-          md.schemaString.orElse(meta.flatMap(_.schemaString)), v,
-          md.configurationJson.orElse(meta.flatMap(_.configurationJson))))
-      }
-      val afterRemoves = commit.removes.foldLeft(acc)((m, r) => m - r.path)
-      commit.adds.foldLeft(afterRemoves)((m, a) => m + (a.path -> a.size))
-    }
-    // replay covered every commit <= version: meta is current as of it
-    meta.foreach(m => metaMemo.put(tablePath,
-      m.copy(atVersion = math.max(m.atVersion, version))))
-
-    // Re-snapshot once replay distance exceeds SnapshotEvery — a bounded
-    // write amortized over >= SnapshotEvery planning calls (writing every
-    // call, as the reference does, is O(files) driver I/O per batch).
-    cacheDir.foreach { d =>
-      if (version - baseVersion.getOrElse(-1L) >= SnapshotEvery)
-        writeSnapshot(tablePath, d, version, state, meta)
-    }
-    state.toSeq.sortBy(_._1)
-  }
-
-  // ---- snapshot cache (reference delta.py:110-187) -----------------------
-
-  private[delta] case class CachedSnapshot(version: Long, files: Map[String, Long],
-      metaId: Option[String], schemaString: Option[String],
-      commitTs: Map[Long, Long] = Map.empty,
-      configurationJson: Option[String] = None) {
-    def meta: Option[TableMeta] =
-      metaId.map(id => TableMeta(id, schemaString, version, configurationJson))
-  }
-
-  private def snapPath(dir: Path, version: Long) = new Path(dir, f"snapshot_$version%020d.json")
-
-  private def listSnapshots(dir: Path): Seq[Long] =
-    Fs.list(dir, conf).flatMap { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("snapshot_") && n.endsWith(".json"))
-        Some(n.stripPrefix("snapshot_").stripSuffix(".json").toLong)
-      else None
-    }.sorted
-
-  private def newestCachedAtOrBelow(dir: Path, version: Long): Option[CachedSnapshot] =
-    listSnapshots(dir).filter(_ <= version).lastOption.map { v =>
-      val n = Fs.readJson(snapPath(dir, v), conf)
-      CachedSnapshot(v,
-        Jsons.fields(n.get("files")).map { case (p, sz) => p -> sz.asLong() }.toMap,
-        Jsons.optStr(n, "meta_id"), Jsons.optStr(n, "schema_string"),
-        Jsons.optField(n, "commit_ts").map(ct =>
-          Jsons.fields(ct).map { case (v2, ts) => v2.toLong -> ts.asLong() }.toMap)
-          .getOrElse(Map.empty),
-        Jsons.optStr(n, "configuration_json"))
-    }
-
-  private def writeSnapshot(tablePath: String, dir: Path, version: Long,
-      state: Map[String, Long], meta: Option[TableMeta]): Unit = {
-    if (listSnapshots(dir).contains(version)) return
-    val o = Jsons.obj()
-    o.put("version", version)
-    meta.foreach { m =>
-      o.put("meta_id", m.id)
-      m.schemaString.foreach(s => o.put("schema_string", s))
-      m.configurationJson.foreach(c => o.put("configuration_json", c))
-    }
-    val files = Jsons.obj()
-    state.foreach { case (p, sz) => files.put(p, sz) }
-    o.set[JsonNode]("files", files)
-    // commit timestamps the replay just harvested: persisting them makes
-    // timestamp start-offset resolution O(post-snapshot tail) forever after
-    val ts = Jsons.obj()
-    tsMemo.getOrElse(tablePath, Map.empty).filter(_._1 <= version)
-      .toSeq.sortBy(_._1).foreach { case (v, t) => ts.put(v.toString, t) }
-    o.set[JsonNode]("commit_ts", ts)
-    Fs.atomicWriteJson(snapPath(dir, version), o, conf)
-    // prune: keep newest MaxSnapshots
-    val all = listSnapshots(dir)
-    all.dropRight(MaxSnapshots).foreach(v =>
-      Fs.delete(snapPath(dir, v), recursive = false, conf))
+  /** (version, commit timestamp) of every surviving JSON commit, oldest
+    * first, lazily: the newest snapshot's timestamps for the commits it
+    * folded, a read of the commit for the older ones (below its
+    * checkpoint). A log no snapshot can be built from (pruned, gapped)
+    * still answers from its commits. */
+  private def commitTimes(tablePath: String): Iterator[(Long, Option[Long])] = {
+    val known =
+      try latestSnapshot(tablePath).map(_.commitTs).getOrElse(Map.empty[Long, Long])
+      catch { case _: PlanningError => Map.empty[Long, Long] }
+    listVersions(tablePath).iterator.map(v =>
+      v -> known.get(v).orElse(readCommit(tablePath, v).timestampMs))
   }
 
   /** Resolve a (possibly relative) action path against the table root. */

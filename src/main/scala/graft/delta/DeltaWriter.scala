@@ -99,35 +99,25 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * schema. No data is copied or rewritten: restore is O(#files) log
     * work, delta-spark's RESTORE shape. */
   def restore(tablePath: String, version: Long): Long = {
-    val latest = log.latestVersion(tablePath)
+    val current = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    if (version > latest)
-      throw new GraftError(s"cannot restore $tablePath to $version: latest is $latest")
-    if (version == latest) return latest
-    val target = DeltaStats.activeAdds(log, tablePath, version)
-    val current = DeltaStats.activeAdds(log, tablePath, latest)
-    val targetPaths = target.map(_.path).toSet
-    val currentPaths = current.map(_.path).toSet
-    val toAdd = target.filterNot(a => currentPaths(a.path))
-    val toRemove = current.filterNot(a => targetPaths(a.path))
+    if (version > current.version)
+      throw new GraftError(s"cannot restore $tablePath to $version: latest is ${current.version}")
+    if (version == current.version) return version
+    val target = log.snapshot(tablePath, version)
+    val toAdd = target.adds.filterNot(a => current.files.contains(a.path))
+    val toRemove = current.adds.filterNot(a => target.files.contains(a.path))
     toAdd.foreach { a =>
       val p = new Path(log.resolvePath(tablePath, a.path))
       if (!Fs.exists(p, conf))
         throw new GraftError(
           s"cannot restore $tablePath to $version: ${a.path} was vacuumed")
     }
-    val schema = log.metaAt(tablePath, version).flatMap(_.schemaString)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .getOrElse(StructType(Nil))
-    commit(tablePath, "RESTORE", StagedWrite(schema,
+    commit(tablePath, "RESTORE", StagedWrite(target.schema.getOrElse(StructType(Nil)),
         toAdd.map(a => WrittenPart(a.path, a.size, a.stats, a.partitionValues,
           a.deletionVector)),
-        Seq.empty,
-        // layout order comes from a path, not partitionValues' map order
-        target.headOption.map(_.path.split('/').dropRight(1).filter(_.contains('='))
-          .map(seg => seg.take(seg.indexOf('='))).toSeq).getOrElse(Seq.empty),
-        None),
-      toRemove.map(_.path), readVersion = Some(latest))
+        Seq.empty, logicalPartitionColumns(target), None),
+      toRemove.map(_.path), base = Some(current))
   }
 
   /** DELETE WHERE via deletion vectors — the O(matched rows) delete: no
@@ -334,8 +324,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
   private def scanAdds(tablePath: String, adds: Seq[DeltaAction.AddFile]): DataFrame = {
     val files = adds.map(a => log.resolvePath(tablePath, a.path))
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    val declared = tableSchema(tablePath)
     if (files.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         declared.getOrElse(new StructType()))
@@ -375,13 +364,11 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
   /** The table's declared schema (None until a metaData action exists). */
   def tableSchema(tablePath: String): Option[StructType] =
-    log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    snapshot(tablePath).flatMap(_.schema)
 
-  /** The table at its latest version from one log replay (None = no
-    * commit yet) — what a write plans from and commits against. */
-  def snapshot(tablePath: String): Option[DeltaSnapshot] =
-    log.latestVersion(tablePath).map(log.snapshot(tablePath, _))
+  /** The table at its latest version (None = no commit yet) — what a
+    * write plans from and commits against. */
+  def snapshot(tablePath: String): Option[DeltaSnapshot] = log.latestSnapshot(tablePath)
 
   /** Partition columns of an existing table, in layout order (derived
     * from an active add's path — the authoritative record of the hive
@@ -478,7 +465,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * of a duplicate (delta-spark's txnAppId/txnVersion idempotent
     * writes). */
   def lastTxnVersion(tablePath: String, appId: String): Option[Long] =
-    if (!tableExists(tablePath)) None else log.lastTxnVersion(tablePath, appId)
+    snapshot(tablePath).flatMap(_.txns.get(appId))
 
   /** Every `delta.columnMapping.id` in the schema, NESTED fields
     * included (struct/array/map element traversal mirrors
@@ -625,20 +612,18 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * the upgrade, [[renameColumn]]/[[dropColumn]] compose and
     * mergeSchema appends mint fresh `col-<uuid>` names. */
   def upgradeToColumnMapping(tablePath: String): Long = {
-    val latest = log.latestVersion(tablePath)
+    val snap = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val es0 = tableSchema(tablePath)
-      .getOrElse(throw new GraftError(s"no schema on $tablePath"))
-    if (ColumnMapping.isMapped(es0)) return latest
+    val es0 = snap.schema.getOrElse(throw new GraftError(s"no schema on $tablePath"))
+    if (ColumnMapping.isMapped(es0)) return snap.version
     // the protocol requires EVERY struct field — nested included — to
     // carry a field id + physical name once mapping is on; a top-level-
     // only assignment would emit metadata foreign readers may reject.
-    // The mapped schema, the maxColumnId property, and the protocol line
-    // all derive from the ONE schema/version alterSchema captures — a
-    // commit landing after that point is `intervening` for the
-    // metaConflicts guard, so a concurrent mergeSchema append's column
-    // can never be silently dropped by an upgrade planned against a
-    // staler read.
+    // The mapped schema and the maxColumnId property derive from the ONE
+    // snapshot alterSchema captures — a commit landing after that point
+    // is `intervening` for the metaConflicts guard, so a concurrent
+    // mergeSchema append's column can never be silently dropped by an
+    // upgrade planned against a staler read.
     def mapped(es: StructType): StructType = {
       var idCounter = 0L
       def nextId(): Long = { idCounter += 1; idCounter }
@@ -662,52 +647,12 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         cfg.put("delta.columnMapping.maxColumnId",
           mappedFieldIds(newSchema).maxOption.getOrElse(0L).toString)
       },
-      extraLinesAt = rv =>
-        mappingProtocolLines(log.resolveProtocol(tablePath, rv))) { es =>
+      feature = Some("columnMapping")) { es =>
       if (ColumnMapping.isMapped(es))
         throw new GraftError(
           s"concurrent columnMapping upgrade detected on $tablePath; " +
           "the table is already mapped at the planned read version")
       mapped(es)
-    }
-  }
-
-  /** The protocol action (if any) a columnMapping upgrade must commit,
-    * given the table's current protocol. NEVER downgrades: a legacy
-    * protocol rises to the mapping floor componentwise
-    * (`max(reader, 2)` / `max(writer, 5)` — writer-only capability
-    * versions like 6 survive), and any table already speaking writer
-    * features (minWriterVersion 7, with or without a v3 reader) goes
-    * through the feature-list branch so its existing features are
-    * PRESERVED with `columnMapping` added — a blanket (2,5) there would
-    * erase constraints other writers rely on, a spec-forbidden
-    * downgrade. */
-  private def mappingProtocolLines(
-      curP: Option[DeltaAction.Protocol]): Seq[String] = {
-    def l(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString(", ")
-    curP match {
-      case Some(p) if p.minReaderVersion >= 3 =>
-        val rf = (p.readerFeatures :+ "columnMapping").distinct
-        val wf = (p.writerFeatures :+ "columnMapping").distinct
-        Seq(s"""{"protocol": {"minReaderVersion": ${p.minReaderVersion}, """ +
-          s""""minWriterVersion": ${math.max(p.minWriterVersion, 7)}, """ +
-          s""""readerFeatures": [${l(rf)}], "writerFeatures": [${l(wf)}]}}""")
-      case Some(p) if p.minWriterVersion >= 7 =>
-        // writer-features table with a legacy reader: keep the feature
-        // list (plus columnMapping), raise only the reader floor — the
-        // spec puts readerFeatures on v3 readers only, so the mapping's
-        // reader requirement is expressed as minReaderVersion 2
-        val wf = (p.writerFeatures :+ "columnMapping").distinct
-        Seq(s"""{"protocol": {"minReaderVersion": ${math.max(p.minReaderVersion, 2)}, """ +
-          s""""minWriterVersion": ${p.minWriterVersion}, """ +
-          s""""writerFeatures": [${l(wf)}]}}""")
-      case Some(p) if p.minReaderVersion >= 2 && p.minWriterVersion >= 5 =>
-        Seq.empty
-      case Some(p) =>
-        Seq(s"""{"protocol": {"minReaderVersion": ${math.max(p.minReaderVersion, 2)}, """ +
-          s""""minWriterVersion": ${math.max(p.minWriterVersion, 5)}}}""")
-      case None =>
-        Seq("""{"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}}""")
     }
   }
 
@@ -726,7 +671,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val key = name.toLowerCase(java.util.Locale.ROOT)
     require(key.nonEmpty && key.matches("[a-z0-9_]+"),
       s"constraint name must be [a-zA-Z0-9_]+, got '$name'")
-    val existing = WriteChecks.constraintsOf(log.tableConfigurationJson(tablePath))
+    val existing = WriteChecks.constraintsOf(snapshot(tablePath).flatMap(_.configurationJson))
     if (existing.exists(_._1 == key))
       throw new GraftError(
         s"constraint $key already exists on $tablePath " +
@@ -735,8 +680,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     alterSchema(tablePath, "ADD CONSTRAINT",
       requireMapped = false,
       mutateConfig = (cfg, _) => cfg.put(s"delta.constraints.$key", sql),
-      extraLinesAt = rv =>
-        constraintProtocolLines(log.resolveProtocol(tablePath, rv)),
+      feature = Some("checkConstraints"),
       extraConflict = intervening => intervening.flatMap(_.actions).collectFirst {
         case a: DeltaAction.AddFile if a.dataChange =>
           s"an intervening commit added data the constraint scan never " +
@@ -752,7 +696,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * IF EXISTS to opt into that). */
   def dropCheckConstraint(tablePath: String, name: String): Long = {
     val key = name.toLowerCase(java.util.Locale.ROOT)
-    val existing = WriteChecks.constraintsOf(log.tableConfigurationJson(tablePath))
+    val existing = WriteChecks.constraintsOf(snapshot(tablePath).flatMap(_.configurationJson))
     if (!existing.exists(_._1 == key))
       throw new GraftError(
         s"no constraint named $key on $tablePath " +
@@ -761,30 +705,6 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       requireMapped = false,
       mutateConfig = (cfg, _) => { cfg.remove(s"delta.constraints.$key"); () })(
       identity)
-  }
-
-  /** The protocol action an ADD CONSTRAINT must commit — the
-    * checkConstraints floor is legacy writer 3; same never-downgrade
-    * discipline as [[mappingProtocolLines]]. */
-  private def constraintProtocolLines(
-      curP: Option[DeltaAction.Protocol]): Seq[String] = {
-    def l(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString(", ")
-    curP match {
-      case Some(p) if p.minWriterVersion >= 7 =>
-        val wf = (p.writerFeatures :+ "checkConstraints").distinct
-        val rf =
-          if (p.minReaderVersion >= 3) s""""readerFeatures": [${l(p.readerFeatures)}], """
-          else ""
-        Seq(s"""{"protocol": {"minReaderVersion": ${p.minReaderVersion}, """ +
-          s""""minWriterVersion": ${p.minWriterVersion}, """ + rf +
-          s""""writerFeatures": [${l(wf)}]}}""")
-      case Some(p) if p.minWriterVersion >= 3 => Seq.empty
-      case Some(p) =>
-        Seq(s"""{"protocol": {"minReaderVersion": ${p.minReaderVersion}, """ +
-          s""""minWriterVersion": 3}}""")
-      case None =>
-        Seq("""{"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}}""")
-    }
   }
 
   /** Shared metadata-only ALTER commit for [[renameColumn]]/[[dropColumn]]
@@ -802,43 +722,40 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   private def alterSchema(tablePath: String, operation: String,
       requireMapped: Boolean,
       mutateConfig: (com.fasterxml.jackson.databind.node.ObjectNode, StructType) => Unit = (_, _) => (),
-      extraLinesAt: Long => Seq[String] = _ => Seq.empty,
+      feature: Option[String] = None,
       extraConflict: Seq[DeltaCommit] => Option[String] = _ => None)(
       transform: StructType => StructType): Long = {
     // ONE consistent read point: the schema the transform rebuilds, the
-    // table id and configuration carried forward, and any protocol line
-    // (extraLinesAt) all resolve AT readVersion. A commit landing after
-    // this capture is `intervening` for commitWithRetry's metaConflicts
-    // guard — the stale-plan race (schema read before a concurrent
-    // mergeSchema append, guard never firing because the append was
-    // at-or-below a later-captured readVersion) is structurally closed.
-    val readVersion = log.latestVersion(tablePath)
+    // table id, configuration and layout carried forward all come from
+    // one snapshot. A commit landing after it is `intervening` for
+    // commitWithRetry's metaConflicts guard — the stale-plan race (schema
+    // read before a concurrent mergeSchema append, guard never firing
+    // because the append was at-or-below a later-captured read version)
+    // is structurally closed. The protocol line (`feature`) is built per
+    // attempt from the attempt's parent ([[protocolLines]]).
+    val snap = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
-    val metaBaseline = log.metaAt(tablePath, readVersion)
+    val metaBaseline = snap.meta
       .getOrElse(throw new GraftError(s"no metaData on $tablePath"))
-    val es = metaBaseline.schemaString
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
-      .getOrElse(throw new GraftError(s"no schema on $tablePath"))
+    val es = snap.schema.getOrElse(throw new GraftError(s"no schema on $tablePath"))
     if (requireMapped && !ColumnMapping.isMapped(es))
       throw new GraftError(
         s"$operation requires column mapping on $tablePath: without " +
         "physical names, the change would orphan existing files' data")
     val newSchema = transform(es)
-    val tid = metaBaseline.id
-    val extraLines = extraLinesAt(readVersion)
     val physToLogicalNew = ColumnMapping.physicalNames(newSchema).map(_.swap)
-    val partsLogical = partitionColumnsOf(tablePath)
+    val partsLogical = partitionColumnsOf(snap)
       .map(p => physToLogicalNew.getOrElse(p, p))
     def content(version: Long): String = {
       val now = System.currentTimeMillis()
       val lines = Seq.newBuilder[String]
-      lines ++= extraLines
+      lines ++= protocolLines(tablePath, Some(snap), version, feature.toSeq)
       val ci = Jsons.obj()
       ci.put("timestamp", now)
       ci.put("operation", operation)
       lines += s"""{"commitInfo": ${Jsons.render(ci)}}"""
       val md = Jsons.obj()
-      md.put("id", tid)
+      md.put("id", metaBaseline.id)
       val fmt = Jsons.obj(); fmt.put("provider", "parquet")
       fmt.set[JsonNode]("options", Jsons.obj())
       md.set[JsonNode]("format", fmt)
@@ -846,10 +763,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       val pcols = Jsons.arr()
       partsLogical.foreach(pcols.add)
       md.set[JsonNode]("partitionColumns", pcols)
-      // pre-r7 commits omitted configuration entirely — only a truly
-      // absent field falls back to the resolver's chained view
-      val cfgNode = metaBaseline.configurationJson
-        .orElse(log.tableConfigurationJson(tablePath)).map(Jsons.parse)
+      val cfgNode = snap.configurationJson.map(Jsons.parse)
         .collect { case o: com.fasterxml.jackson.databind.node.ObjectNode => o }
         .getOrElse(Jsons.obj())
       mutateConfig(cfgNode, newSchema)
@@ -864,7 +778,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
           s"an intervening commit changed the table's metaData; " +
           s"re-plan the $operation"
       }.orElse(extraConflict(intervening)),
-      Some(readVersion))
+      Some(snap.version))
   }
 
   private def writeImpl(df: DataFrame, tablePath: String, mode: DeltaWriteMode,
@@ -1108,21 +1022,17 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
 
   private def commit(tablePath: String, operation: String, staged: StagedWrite,
       removed: Seq[String], txn: Option[(String, Long)] = None,
-      readVersion: Option[Long] = None,
       base: Option[DeltaSnapshot] = None): Long = {
     val StagedWrite(schema, adds, cdcs, partitionCols, mintedMaxColumnId) = staged
-    // a commit planned from a snapshot takes the table id, properties and
-    // conflict baseline from it; the log is read again only for commits
-    // that landed after the snapshot
-    val rv = base.map(_.version).orElse(readVersion)
-    val tid = base.map(_.meta.map(_.id).filter(_.nonEmpty))
-      .getOrElse(log.tableId(tablePath)).getOrElse(UUID.randomUUID().toString)
+    // a commit planned from a snapshot (None = a new table) takes the table
+    // id, properties and conflict baseline from it; the log is read again
+    // only for commits that landed after the snapshot
+    val tid = base.flatMap(_.meta).map(_.id).filter(_.nonEmpty)
+      .getOrElse(UUID.randomUUID().toString)
     val firstVersion = base.map(_.version + 1)
       .getOrElse(log.latestVersion(tablePath).map(_ + 1).getOrElse(0L))
-    def configAt(version: Long): Option[String] = base match {
-      case Some(b) if b.version + 1 == version => b.configurationJson
-      case _ => log.tableConfigurationJson(tablePath)
-    }
+    def configAt(version: Long): Option[String] =
+      parentOf(tablePath, base, version).flatMap(_.configurationJson)
     // delta.appendOnly: every remove reaching THIS funnel is a
     // dataChange=true remove (delete/overwrite/merge/restore) — exactly
     // what the feature forbids. OPTIMIZE/PURGE rewrites commit through
@@ -1142,8 +1052,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       // retriable for it anyway).
       val schemaNow =
         if (version == firstVersion || operation == "WRITE_OVERWRITE") schema
-        else log.tableSchemaString(tablePath)
-          .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+        else parentOf(tablePath, base, version).flatMap(_.schema)
           .map(cur => StructType(cur.fields ++ schema.fields
             .filterNot(f => cur.fieldNames.contains(f.name))
             .map(_.copy(nullable = true))))
@@ -1151,22 +1060,16 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       val lines = Seq.newBuilder[String]
       // real delta readers (delta-spark, delta-rs, duckdb) REQUIRE a protocol
       // action in the log; 1/2 = the base feature set. A commit that carries
-      // DV adds must UPGRADE the protocol in the same commit (reader 3 /
-      // writer 7 + the deletionVectors feature): under 1/2 a compliant
-      // foreign reader would legally ignore the vectors and resurrect the
-      // deleted rows. Emitted on every DV commit — protocol actions
-      // override, so repetition is harmless and saves an O(versions) scan
-      // for "did we upgrade already".
-      if (adds.exists(_.deletionVector.isDefined))
-        lines += """{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["deletionVectors"], "writerFeatures": ["deletionVectors"]}}"""
-      else if (version == 0L) {
-        // a table CREATED with generated columns must declare the
-        // generatedColumns writer obligation (legacy writer 4) — under
-        // 2 a compliant foreign writer would legally null-fill or skip
-        // the generation expression and silently diverge
-        val floor = if (WriteChecks.generatedOf(schemaNow).nonEmpty) 4 else 2
-        lines += s"""{"protocol": {"minReaderVersion": 1, "minWriterVersion": $floor}}"""
-      }
+      // DV adds must support deletionVectors in the same commit: under 1/2
+      // a compliant foreign reader would legally ignore the vectors and
+      // resurrect the deleted rows. A table CREATED with generated columns
+      // must declare the generatedColumns writer obligation — under 2 a
+      // compliant foreign writer would legally null-fill or skip the
+      // generation expression and silently diverge.
+      lines ++= protocolLines(tablePath, base, version,
+        Seq("deletionVectors").filter(_ => adds.exists(_.deletionVector.isDefined)) ++
+          Seq("generatedColumns").filter(_ =>
+            version == 0L && WriteChecks.generatedOf(schemaNow).nonEmpty))
       val ci = Jsons.obj()
       ci.put("timestamp", now)
       ci.put("operation", operation)
@@ -1218,14 +1121,31 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       lines.result().mkString("\n")
     }
 
-    // the metaData state our re-emission was planned from — evaluated
-    // only when intervening commits actually need conflict-checking
-    lazy val metaBaseline = base.map(_.meta)
-      .getOrElse(rv.flatMap(v => log.metaAt(tablePath, v)))
+    // the metaData state our re-emission was planned from
     commitWithRetry(tablePath, content,
-      DeltaWriter.conflictReason(operation, removed, txn, _, metaBaseline),
-      rv)
+      DeltaWriter.conflictReason(operation, removed, txn, _, base.flatMap(_.meta)),
+      base.map(_.version))
   }
+
+  /** The snapshot a commit attempt at `version` lands on: `base` when it
+    * is that version's parent, else one (cached, fold-forward) read of
+    * the parent. None for a new table. */
+  private def parentOf(tablePath: String, base: Option[DeltaSnapshot],
+      version: Long): Option[DeltaSnapshot] =
+    if (version == 0L) None
+    else base.filter(_.version == version - 1).orElse(Some(log.snapshot(tablePath, version - 1)))
+
+  /** The protocol action a commit attempt at `version` must carry so the
+    * table supports `features`, built from the protocol of the attempt's
+    * parent ([[parentOf]]) — so a retry above an intervening protocol
+    * change keeps what that change added ([[DeltaWriter.protocolWith]]
+    * never downgrades). Empty when the parent already supports them; a
+    * new table always gets one. */
+  private def protocolLines(tablePath: String, base: Option[DeltaSnapshot],
+      version: Long, features: Seq[String]): Seq[String] =
+    if (features.isEmpty && version > 0L) Seq.empty
+    else DeltaWriter.protocolWith(parentOf(tablePath, base, version).flatMap(_.protocol),
+      features).map(DeltaWriter.protocolLine).toSeq
 
   /** Optimistic concurrency: attempt the commit at latest+1; when another
     * writer wins the version (create-no-overwrite fails and the version
@@ -1453,12 +1373,12 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val fs = Fs.fs(root, conf)
     val rootPrefix = root.toUri.getPath.stripSuffix("/") + "/"
     // (parquet paths, dv .bin paths) referenced by the snapshot at `v`
-    def referenced(v: Long): (Set[String], Set[String]) = (
-      log.snapshotState(tablePath, v).map(_._1).toSet,
-      DeltaStats.activeAdds(log, tablePath, v)
-        .flatMap(_.deletionVector)
+    def referenced(v: Long): (Set[String], Set[String]) = {
+      val adds = log.snapshot(tablePath, v).adds
+      (adds.map(_.path).toSet, adds.flatMap(_.deletionVector)
         .flatMap(d => DeletionVector.resolvePath(tablePath, d))
         .map(_.toUri.getPath.stripPrefix(rootPrefix)).toSet)
+    }
     val (active0, activeDvs0) = referenced(planned)
     val cutoff = System.currentTimeMillis() - retentionMs
     val candidates = Seq.newBuilder[(Path, String)]
@@ -1576,6 +1496,93 @@ object DeltaWriter {
     configJson.map(Jsons.parse)
       .flatMap(c => Jsons.optStr(c, "delta.appendOnly"))
       .exists(_.equalsIgnoreCase("true"))
+
+  /** The legacy (reader, writer) protocol versions that imply each
+    * feature, in the protocol's order: writer 2 implies appendOnly and
+    * invariants, 3 adds checkConstraints, 4 changeDataFeed and
+    * generatedColumns, 5 columnMapping, 6 identityColumns; reader 2
+    * implies columnMapping. */
+  private val LegacyFeatures = Seq(("appendOnly", 1, 2), ("invariants", 1, 2),
+    ("checkConstraints", 1, 3), ("changeDataFeed", 1, 4), ("generatedColumns", 1, 4),
+    ("columnMapping", 2, 5), ("identityColumns", 1, 6))
+
+  /** Features a reader must implement too (listed in `readerFeatures`). */
+  private val ReaderWriterFeatures =
+    Set("columnMapping", "deletionVectors", "timestampNtz", "v2Checkpoint",
+      "vacuumProtocolCheck")
+
+  /** Whether `p` already requires `f`: listed, or implied by a legacy
+    * version. */
+  private def supports(p: DeltaAction.Protocol, f: String): Boolean = {
+    def legacy(ok: ((String, Int, Int)) => Boolean) =
+      LegacyFeatures.exists(l => l._1 == f && ok(l))
+    val writer =
+      if (p.minWriterVersion >= 7) p.writerFeatures.contains(f)
+      else legacy(_._3 <= p.minWriterVersion)
+    val reader = !ReaderWriterFeatures(f) ||
+      (if (p.minReaderVersion >= 3) p.readerFeatures.contains(f)
+       else legacy(_._2 <= p.minReaderVersion))
+    writer && reader
+  }
+
+  /** `p` raised to support feature `f`, never downgraded. A legacy
+    * protocol stays legacy while `f` has legacy versions (componentwise
+    * max, so writer-only capabilities like 6 survive). Otherwise the
+    * writer moves to 7 with `f` added to its feature list — listing the
+    * features a legacy writer version implied, which a feature-list
+    * protocol no longer implies — and, for a reader feature, the reader
+    * moves to 3 the same way; a legacy reader keeps its version where
+    * that covers `f` (reader 2 for columnMapping). */
+  private def withFeature(p: DeltaAction.Protocol, f: String): DeltaAction.Protocol = {
+    val legacy = LegacyFeatures.find(_._1 == f)
+    if (supports(p, f)) p
+    else legacy match {
+      case Some((_, r, w)) if p.minWriterVersion < 7 && p.minReaderVersion < 3 =>
+        p.copy(minReaderVersion = math.max(p.minReaderVersion, r),
+          minWriterVersion = math.max(p.minWriterVersion, w))
+      case _ =>
+        val writerFeatures =
+          if (p.minWriterVersion >= 7) p.writerFeatures
+          else LegacyFeatures.filter(_._3 <= p.minWriterVersion).map(_._1)
+        val withWriter = p.copy(minWriterVersion = 7,
+          writerFeatures = (writerFeatures :+ f).distinct)
+        if (!ReaderWriterFeatures(f)) withWriter
+        else if (p.minReaderVersion < 3 && legacy.exists(_._2 > 1))
+          withWriter.copy(minReaderVersion = math.max(p.minReaderVersion, legacy.get._2))
+        else {
+          val readerFeatures =
+            if (p.minReaderVersion >= 3) p.readerFeatures
+            else LegacyFeatures.filter(l => l._2 > 1 && l._2 <= p.minReaderVersion).map(_._1)
+          withWriter.copy(minReaderVersion = 3,
+            readerFeatures = (readerFeatures :+ f).distinct)
+        }
+    }
+  }
+
+  /** The protocol a commit must declare so a table whose protocol is
+    * `cur` (None = none yet: the base 1/2) supports `features`, or None
+    * when `cur` already does — the one never-downgrade builder every
+    * protocol change goes through. */
+  private[delta] def protocolWith(cur: Option[DeltaAction.Protocol],
+      features: Seq[String]): Option[DeltaAction.Protocol] = {
+    val next = features.foldLeft(cur.getOrElse(DeltaAction.Protocol(1, Nil, 2, Nil)))(withFeature)
+    if (cur.contains(next)) None else Some(next)
+  }
+
+  /** A protocol action line; feature lists appear only on the versions
+    * that carry them (reader 3, writer 7). */
+  private[delta] def protocolLine(p: DeltaAction.Protocol): String = {
+    val o = Jsons.obj()
+    o.put("minReaderVersion", p.minReaderVersion)
+    o.put("minWriterVersion", p.minWriterVersion)
+    def list(name: String, features: Seq[String]): Unit = {
+      val a = o.putArray(name)
+      features.foreach(f => a.add(f))
+    }
+    if (p.minReaderVersion >= 3) list("readerFeatures", p.readerFeatures)
+    if (p.minWriterVersion >= 7) list("writerFeatures", p.writerFeatures)
+    s"""{"protocol": ${Jsons.render(o)}}"""
+  }
 
   /** Commit body for a dataChange=false rewrite (OPTIMIZE / PURGE):
     * removes every old file, adds every new part — readers tailing with

@@ -3,11 +3,10 @@ package graft.sources
 import com.fasterxml.jackson.databind.JsonNode
 import graft.Cdc
 import graft.core._
-import graft.delta.{ColumnMapping, DeltaAction, DeltaLogReader, DeltaStats, DvDescriptor, DvScan}
+import graft.delta.{ColumnMapping, DeltaAction, DeltaLogReader, DvDescriptor, DvScan}
 import graft.functions.BatchConst
 import graft.util.Jsons
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -66,7 +65,6 @@ private[sources] case class CdfEntry(path: String, size: Long, kind: String,
 class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
   val wal = new WriteAheadLog(checkpointDir, conf)
   val log = new DeltaLogReader(conf)
-  private val snapshotCacheDir = new Path(checkpointDir, "snapshot_cache")
 
   private case class Position(version: Long, index: Long, isInitial: Boolean)
 
@@ -120,7 +118,12 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
   // ---- table identity (reference delta.py:302-344) -----------------------
 
   private def verifyTableId(tablePath: String): String = {
-    val current = log.tableId(tablePath, Some(snapshotCacheDir)).getOrElse("")
+    // a log no snapshot can be built from (pruned below its oldest commit
+    // with no checkpoint) has no knowable id: tailing it stands or falls
+    // on its own pruning check
+    val current =
+      try log.latestSnapshot(tablePath).flatMap(_.meta).map(_.id).getOrElse("")
+      catch { case _: PlanningError => "" }
     wal.readMetadata().flatMap(m => Jsons.optStr(m, "table_id")) match {
       case Some(stored) if stored.nonEmpty && current.nonEmpty && stored != current =>
         throw new PlanningError(
@@ -151,7 +154,7 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
           case DeltaStartOffset.StartingVersion(v) =>
             Some(Position(v - 1, -1, isInitial = false))
           case DeltaStartOffset.StartingTimestamp(ts) =>
-            val v = log.versionForTimestamp(tablePath, ts, Some(snapshotCacheDir))
+            val v = log.versionForTimestamp(tablePath, ts)
               .getOrElse(latest.map(_ + 1).getOrElse(0L))
             Some(Position(v - 1, -1, isInitial = false))
         }
@@ -213,12 +216,10 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
     * flows through the CDF reader instead of being dropped. */
   private def planSnapshot(tablePath: String, tableId: String, pos: Position,
       opts: DeltaSourceOptions): Option[BatchInfo] = {
-    // DV-bearing actives: ONE extra replay on the first page (the snapshot
-    // version is frozen, so the map is too), memoized in WAL metadata for
-    // the remaining pages — a DV-free table stores an empty map and later
-    // pages cost nothing
-    val dvByPath = snapshotDvMap(tablePath, pos.version)
-    val files = log.snapshotState(tablePath, pos.version, Some(snapshotCacheDir))
+    // every page reads the files and their deletion vectors from one
+    // snapshot of the frozen version (a cache hit while no newer version
+    // of the table has been read)
+    val files = log.snapshot(tablePath, pos.version).adds
     if (pos.index >= files.size) {
       // snapshot finished -> switch to tailing after the snapshot version
       val after = Position(pos.version, -1, isInitial = false)
@@ -226,39 +227,22 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
       else planLog(tablePath, tableId, after, opts)
     }
     val remaining = files.drop(pos.index.toInt)
-    val (admitted, _) = admit[(String, Long)](remaining, _._2, opts, 0, 0L)
+    val (admitted, _) = admit[DeltaAction.AddFile](remaining, _.size, opts, 0, 0L)
     val taken = if (admitted.isEmpty) remaining.take(1) else admitted
     val newIndex = pos.index + taken.size
-    val entries = taken.map { case (p, sz) =>
-      FileEntry(log.resolvePath(tablePath, p), sz, 0L)
-    }
+    val entries = taken.map(a => FileEntry(log.resolvePath(tablePath, a.path), a.size, 0L))
     val cdf =
       if (!opts.readChangeFeed) Seq.empty[CdfEntry]
       else {
         val ts = if (log.commitExists(tablePath, pos.version))
           log.readCommit(tablePath, pos.version).timestampMs.getOrElse(0L)
         else 0L
-        taken.map { case (p, sz) => CdfEntry(p, sz, "insert", pos.version, ts) }
+        taken.map(a => CdfEntry(a.path, a.size, "insert", pos.version, ts))
       }
     Some(BatchInfo(wal.nextBatchId(), entries,
       offsetJson(tableId, Position(pos.version, newIndex, isInitial = true), cdf,
-        taken.flatMap { case (p, _) => dvByPath.get(p).map(p -> _) })))
+        taken.flatMap(a => a.deletionVector.map(a.path -> _)))))
   }
-
-  /** The snapshot version's DV-bearing actives (add path -> descriptor),
-    * computed once and memoized in WAL metadata (`snapshot_dvs`) — the
-    * snapshot is paged over many batches and the version never moves, so
-    * later pages must not pay the replay again. */
-  private def snapshotDvMap(tablePath: String,
-      version: Long): Map[String, DvDescriptor] =
-    wal.readMetadata().flatMap(m => Jsons.optField(m, "snapshot_dvs")) match {
-      case Some(node) => DeltaTableCheckpoint.dvsFromJson(node).toMap
-      case None =>
-        val dvs = DeltaStats.activeAdds(log, tablePath, version)
-          .flatMap(a => a.deletionVector.map(a.path -> _))
-        wal.updateMetadata("snapshot_dvs", DeltaTableCheckpoint.dvsToJson(dvs))
-        dvs.toMap
-    }
 
   /** Log tailing (reference delta.py:697-787). */
   private def planLog(tablePath: String, tableId: String, pos: Position,

@@ -229,26 +229,44 @@ class BatchInvarianceSuite extends SparkSpec {
 
   test("a DV merge plans once: at most 8 jobs, one log replay, the sequential result") {
     withTmpDir { tmp =>
-      val t = s"$tmp/silver"; val seq = s"$tmp/sequential"
-      val changes = mergeFixture(t, s"$tmp/batch")
-      copyDir(t, seq)
-      val readsBefore = graft.delta.DeltaLogReader.filesRead.get()
-      var r: MergeResult = null
-      val jobs = countJobs {
-        r = DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"), txn = Some(("app", 1L)))
+      val fixture = s"$tmp/fixture"; val t = s"$tmp/silver"; val seq = s"$tmp/sequential"
+      val changes = mergeFixture(fixture, s"$tmp/batch")
+      // the fixture's own writes left its snapshot cached; copies at fresh
+      // paths read their logs cold
+      copyDir(fixture, t)
+      copyDir(fixture, seq)
+      def logReads(body: => Unit): Long = {
+        val before = graft.delta.DeltaLogReader.filesRead.get()
+        body
+        graft.delta.DeltaLogReader.filesRead.get() - before
       }
-      val reads = graft.delta.DeltaLogReader.filesRead.get() - readsBefore
+      var r: MergeResult = null
+      var jobs = 0
+      val reads = logReads {
+        jobs = countJobs {
+          r = DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"), txn = Some(("app", 1L)))
+        }
+      }
       assert(jobs <= 8, s"$jobs jobs")
-      // versions 0..2, no checkpoint: one replay reads three commits
+      // versions 0..2, no checkpoint: one cold replay reads three commits
       assert(reads === 3, s"$reads log files read")
+      // the next merge folds only the first one's commit onto the cached
+      // snapshot; the batch re-applied leaves the same rows
+      val reads2 = logReads {
+        DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"), txn = Some(("app", 2L)))
+      }
+      assert(reads2 === 1, s"$reads2 log files read by the second merge")
 
-      // the sequential path from public primitives: bitmap-delete every
-      // touched key, then append the post-state
+      // the sequential path from public primitives, applied as often:
+      // bitmap-delete every touched key, then append the post-state
       val keys = changes.select("id").as[Long].collect().toSeq
       val w = writer
-      assert(w.deleteWhere(seq, col("id").isin(keys: _*)) === 150 + 30)
-      w.write(changes.filter(col(Cdc.ChangeTypeCol) =!= "delete")
-        .select("id", "v", "cat"), seq, DeltaWriteMode.Append)
+      // the second pass deletes the first's appended post-state
+      for (deleted <- Seq(150 + 30, 150 + 120)) {
+        assert(w.deleteWhere(seq, col("id").isin(keys: _*)) === deleted)
+        w.write(changes.filter(col(Cdc.ChangeTypeCol) =!= "delete")
+          .select("id", "v", "cat"), seq, DeltaWriteMode.Append)
+      }
 
       val expectedRows = w.read(seq).orderBy("id").collect().toSeq
       assert(r === MergeResult(300, expectedRows.size, "merge",
@@ -260,7 +278,7 @@ class BatchInvarianceSuite extends SparkSpec {
       assert(cardinalities(t) === cardinalities(seq))
       // the pruning left the upper files untouched
       assert(w.activeAdds(t).count(_.deletionVector.isEmpty) >= 3)
-      assert(w.lastTxnVersion(t, "app") === Some(1L))
+      assert(w.lastTxnVersion(t, "app") === Some(2L))
     }
   }
 

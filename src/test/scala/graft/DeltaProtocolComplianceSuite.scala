@@ -32,9 +32,9 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       protocolLine: Option[String] = None,
       schemaOverride: Option[StructType] = None): Unit = {
     val l = log
-    val id = l.tableId(t).get
+    val id = l.latestSnapshot(t).flatMap(_.meta).map(_.id).get
     val schema = schemaOverride.map(_.json)
-      .orElse(l.tableSchemaString(t)).get
+      .orElse(l.latestSnapshot(t).flatMap(_.meta).flatMap(_.schemaString)).get
     val sLit = graft.util.Jsons.render(
       com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
         .textNode(schema))
@@ -137,7 +137,7 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       assert(log.latestVersion(t).get === before)
       // a valid constraint commits and raises the protocol floor
       val v = w.addCheckConstraint(t, "status_domain", "status IN ('O','F','P')")
-      val p = log.resolveProtocol(t, v).get
+      val p = log.snapshot(t, v).protocol.get
       assert(p.minWriterVersion >= 3)
       // conforming appends pass
       w.write(Seq((3L, "P")).toDF("id", "status"), t, DeltaWriteMode.Append)
@@ -172,7 +172,7 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
         """{"protocol": {"minReaderVersion": 1, "minWriterVersion": 7, """ +
           """"writerFeatures": ["domainMetadata"]}}"""))
       val v = w.addCheckConstraint(t, "pos_id", "id > 0")
-      val p = log.resolveProtocol(t, v).get
+      val p = log.snapshot(t, v).protocol.get
       assert(p.minWriterVersion === 7)
       assert(p.writerFeatures.toSet === Set("domainMetadata", "checkConstraints"))
       // the constraint's configuration rides checkpoints + expiry
@@ -183,6 +183,39 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       val msg = Option(e.getMessage).getOrElse("") +
         Option(e.getCause).map(_.getMessage).getOrElse("")
       assert(msg.contains("pos_id"))
+    }
+  }
+
+  test("a deletion-vector commit adds its feature to the protocol and keeps the table's others") {
+    withTmpDir { tmp =>
+      val w = writer
+      val t = s"$tmp/mapped"
+      w.write(spark.range(0, 10).toDF("id").withColumn("s", lit("a")).coalesce(1), t,
+        DeltaWriteMode.Append)
+      w.upgradeToColumnMapping(t) // protocol 2/5
+      w.addCheckConstraint(t, "id_nonneg", "id >= 0") // 2/5 already covers it
+      assert(w.deleteWhere(t, col("id") < 3) === 3L)
+      // the move to feature lists names what 2/5 implied: columnMapping on
+      // the reader side; on the writer side every feature up to writer 5
+      // (checkConstraints is a writer-only feature, so only there)
+      val p = log.latestSnapshot(t).flatMap(_.protocol).get
+      assert((p.minReaderVersion, p.minWriterVersion) === ((3, 7)))
+      assert(p.readerFeatures.toSet === Set("columnMapping", "deletionVectors"))
+      assert(p.writerFeatures.toSet === Set("appendOnly", "invariants",
+        "checkConstraints", "changeDataFeed", "generatedColumns", "columnMapping",
+        "deletionVectors"))
+      // a later vector commit finds the feature supported: no protocol action
+      val v = w.latestVersion(t).get
+      assert(w.deleteWhere(t, col("id") === 5L) === 1L)
+      val next = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(t, "_delta_log", f"${v + 1}%020d.json")))
+      assert(!next.contains("\"protocol\""))
+      // the constraint still binds and the mapped names still resolve
+      val e = intercept[Exception](
+        w.write(Seq((-1L, "z")).toDF("id", "s"), t, DeltaWriteMode.Append))
+      assert(writeRejection(e).contains("id_nonneg"))
+      assert(w.read(t).orderBy("id").as[(Long, String)].collect().map(_._1).toSeq ===
+        Seq(3L, 4L, 6L, 7L, 8L, 9L))
     }
   }
 
@@ -319,7 +352,7 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, l.latestVersion(t).get + 1, ci(2L),
         """{"domainMetadata": {"domain": "other.domain", """ +
           """"configuration": "", "removed": true}}""")
-      val live = l.domainMetadataState(t, l.latestVersion(t).get)
+      val live = l.snapshot(t, l.latestVersion(t).get).domains.values.toSeq
       assert(live.map(d => d.domain -> d.removed).toMap ===
         Map("delta.clustering" -> false, "other.domain" -> true))
       // checkpoint, expire every JSON commit, re-read from the parquet:
@@ -327,7 +360,7 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       // losing the TOMBSTONE would resurrect other.domain on replay
       w.checkpoint(t)
       w.expireLogs(t)
-      val after = l.domainMetadataState(t, l.latestVersion(t).get)
+      val after = l.snapshot(t, l.latestVersion(t).get).domains.values.toSeq
       assert(after.map(d => d.domain -> d.removed).toMap ===
         Map("delta.clustering" -> false, "other.domain" -> true))
       assert(after.find(_.domain == "delta.clustering").get.configurationJson

@@ -116,10 +116,10 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 0, ci(1000), meta(), add("a.parquet"), add("b.parquet"))
       writeLog(t, 1, ci(2000), remove("a.parquet"), add("c.parquet", 20))
       val log = new DeltaLogReader(hconf)
-      assert(log.snapshotState(t, 1).map(_._1) === Seq("b.parquet", "c.parquet"))
-      assert(log.snapshotState(t, 0).map(_._1) === Seq("a.parquet", "b.parquet"))
+      assert(log.snapshot(t, 1).adds.map(_.path) === Seq("b.parquet", "c.parquet"))
+      assert(log.snapshot(t, 0).adds.map(_.path) === Seq("a.parquet", "b.parquet"))
       assert(log.latestVersion(t) === Some(1L))
-      assert(log.tableId(t) === Some("table-1"))
+      assert(log.latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("table-1"))
     }
   }
 
@@ -141,20 +141,19 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       val t = s"$tmp/table"
       writeLog(t, 0, ci(0), meta(), add("f0.parquet"))
       (1L to 250L).foreach(v => writeLog(t, v, ci(v * 10), add(s"f$v.parquet")))
-      val cache = new org.apache.hadoop.fs.Path(s"$tmp/cache")
       val log = new DeltaLogReader(hconf)
-      log.snapshotState(t, 250, Some(cache)) // replay harvests every commit ts
+      log.snapshot(t, 250) // replay harvests every commit ts
       val before = log.commitReadCount
-      assert(log.versionForTimestamp(t, 1995, Some(cache)) === Some(200L))
-      assert(log.commitReadCount === before, "memoized timestamps: zero re-reads")
-      // fresh reader + persisted snapshot cache: still zero commit reads
+      assert(log.versionForTimestamp(t, 1995) === Some(200L))
+      assert(log.commitReadCount === before, "cached timestamps: zero re-reads")
+      // a fresh reader in the same process shares the cached snapshot
       val log2 = new DeltaLogReader(hconf)
-      assert(log2.versionForTimestamp(t, 1995, Some(cache)) === Some(200L))
+      assert(log2.versionForTimestamp(t, 1995) === Some(200L))
       assert(log2.commitReadCount === 0L,
         s"expected cached resolution, got ${log2.commitReadCount} commit reads")
       // commits past the snapshot cost exactly the uncovered tail
       writeLog(t, 251, ci(9990), add("f251.parquet"))
-      assert(log2.versionForTimestamp(t, 9990, Some(cache)) === Some(251L))
+      assert(log2.versionForTimestamp(t, 9990) === Some(251L))
       assert(log2.commitReadCount === 1L)
     }
   }
@@ -167,18 +166,18 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 0,
         """{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["deletionVectors"]}}""",
         ci(0), meta(), add("a.parquet"))
-      assert(new DeltaLogReader(hconf).snapshotState(t, 0).size === 1)
+      assert(new DeltaLogReader(hconf).snapshot(t, 0).adds.size === 1)
       // v2 (column mapping) is READABLE — scan-time name resolution
       val t2 = s"$tmp/t2"
       writeLog(t2, 0, """{"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}}""",
         ci(0), meta(), add("a.parquet"))
-      assert(new DeltaLogReader(hconf).snapshotState(t2, 0).size === 1)
+      assert(new DeltaLogReader(hconf).snapshot(t2, 0).adds.size === 1)
       // v3 with a feature we do NOT implement still refuses loudly
       val t3 = s"$tmp/t3"
       writeLog(t3, 0,
         """{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["rowTracking"]}}""",
         ci(0), meta(), add("a.parquet"))
-      val e = intercept[PlanningError](new DeltaLogReader(hconf).snapshotState(t3, 0))
+      val e = intercept[PlanningError](new DeltaLogReader(hconf).snapshot(t3, 0))
       assert(e.getMessage.contains("rowTracking"))
       // a DV descriptor parses into the add action with its fields intact
       val t4 = s"$tmp/t4"
@@ -190,21 +189,37 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
     }
   }
 
-  test("snapshot cache: written at multiples of SnapshotEvery and reused") {
+  test("snapshot cache: cold reads checkpoint + tail, warm folds new commits") {
     withTmpDir { tmp =>
       val t = s"$tmp/table"
+      // the engine's shape: a checkpoint every 10 commits
+      val cw = new graft.delta.CheckpointWriter(hconf)
       writeLog(t, 0, ci(0), meta(), add("f0.parquet"))
-      (1L to 100L).foreach(v => writeLog(t, v, ci(v * 10), add(s"f$v.parquet")))
+      (1L to 250L).foreach { v =>
+        writeLog(t, v, ci(v * 10), add(s"f$v.parquet"))
+        if (v % 10 == 0) cw.checkpoint(t, Some(v))
+      }
+      (251L to 257L).foreach(v => writeLog(t, v, ci(v * 10), add(s"f$v.parquet")))
       val log = new DeltaLogReader(hconf)
-      val cache = new org.apache.hadoop.fs.Path(s"$tmp/cache")
-      val full = log.snapshotState(t, 100, Some(cache))
-      assert(full.size === 101)
-      assert(new File(s"$tmp/cache/snapshot_${"0" * 17}100.json").exists())
-      // cached replay gives identical state
-      writeLog(t, 101, ci(1010), add("f101.parquet"), remove("f0.parquet"))
-      val next = log.snapshotState(t, 101, Some(cache))
-      assert(next.size === 101)
-      assert(!next.map(_._1).contains("f0.parquet"))
+      def reads(body: => Unit): Long = {
+        val before = DeltaLogReader.filesRead.get()
+        body
+        DeltaLogReader.filesRead.get() - before
+      }
+      // a copy at a fresh path has nothing cached: the newest checkpoint
+      // (v250) plus the 7 JSON commits above it
+      val cold = s"$tmp/copy"
+      org.apache.commons.io.FileUtils.copyDirectory(new File(t), new File(cold))
+      assert(reads(assert(log.snapshot(cold, 257).adds.size === 258)) === 1 + 7)
+      // the same version again, from any reader in the process: no read
+      assert(reads(assert(new DeltaLogReader(hconf).snapshot(cold, 257).adds.size === 258)) === 0)
+      // a new commit folds alone onto the cached snapshot
+      writeLog(cold, 258, ci(2580), add("f258.parquet"), remove("f0.parquet"))
+      val next = reads {
+        val s = log.snapshot(cold, 258)
+        assert(s.adds.size === 258 && !s.files.contains("f0.parquet"))
+      }
+      assert(next === 1)
     }
   }
 
@@ -222,14 +237,14 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 12, ci(1200), add("f5.parquet", 15))
       val log = new DeltaLogReader(hconf)
       assert(log.lastCheckpoint(t) === Some(graft.delta.CheckpointInstance(10, None)))
-      assert(log.snapshotState(t, 12) ===
+      assert(log.snapshot(t, 12).adds.map(a => a.path -> a.size) ===
         Seq("f2.parquet" -> 12L, "f3.parquet" -> 13L, "f4.parquet" -> 14L,
           "f5.parquet" -> 15L))
       // checkpoint at exactly the target version: no JSON replay at all
-      assert(log.snapshotState(t, 10).map(_._1) ===
+      assert(log.snapshot(t, 10).adds.map(_.path) ===
         Seq("f1.parquet", "f2.parquet", "f3.parquet"))
       // metaData comes from the checkpoint when no surviving JSON has one
-      assert(log.tableId(t) === Some("ck-table"))
+      assert(log.latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("ck-table"))
     }
   }
 
@@ -245,7 +260,7 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLastCheckpoint(t, 10)
       writeLog(t, 11, ci(1100), add("f2.parquet"))
       val log = new DeltaLogReader(hconf)
-      assert(log.tableConfigurationJson(t)
+      assert(log.latestSnapshot(t).flatMap(_.configurationJson)
         === Some("""{"delta.enableChangeDataFeed":"true"}"""))
     }
   }
@@ -261,9 +276,9 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 21, ci(2100), add("d.parquet"))
       val log = new DeltaLogReader(hconf)
       assert(log.lastCheckpoint(t) === None)
-      assert(log.checkpointAtOrBelow(t, 21) ===
-        Some(graft.delta.CheckpointInstance(20, Some(2))))
-      assert(log.snapshotState(t, 21).map(_._1) ===
+      assert(log.listCheckpoints(t) ===
+        Seq(graft.delta.CheckpointInstance(20, Some(2))))
+      assert(log.snapshot(t, 21).adds.map(_.path) ===
         Seq("a.parquet", "b.parquet", "c.parquet", "d.parquet"))
     }
   }
@@ -274,7 +289,7 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 5, ci(500), meta(), add("f5.parquet"))
       writeLog(t, 6, ci(600), add("f6.parquet"))
       val log = new DeltaLogReader(hconf)
-      val e = intercept[PlanningError](log.snapshotState(t, 6))
+      val e = intercept[PlanningError](log.snapshot(t, 6))
       assert(e.getMessage.contains("pruned"))
     }
   }
@@ -286,7 +301,7 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLog(t, 1, ci(100), add("f1.parquet"))
       writeLog(t, 3, ci(300), add("f3.parquet"))
       val log = new DeltaLogReader(hconf)
-      val e = intercept[PlanningError](log.snapshotState(t, 3))
+      val e = intercept[PlanningError](log.snapshot(t, 3))
       assert(e.getMessage.contains("gap"))
     }
   }
@@ -296,21 +311,18 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       val t = s"$tmp/table"
       writeLog(t, 0, ci(0), meta(), add("f0.parquet"))
       (1L to 250L).foreach(v => writeLog(t, v, ci(v * 10), add(s"f$v.parquet")))
-      val cache = new org.apache.hadoop.fs.Path(s"$tmp/cache")
       val log = new DeltaLogReader(hconf)
-      log.snapshotState(t, 250, Some(cache)) // replays once, memoizes meta
+      log.snapshot(t, 250) // replays once, caches the snapshot
       val before = log.commitReadCount
-      assert(log.tableId(t) === Some("table-1"))
-      assert(log.commitReadCount === before, "memoized meta: zero commit re-reads")
-      // fresh reader, persisted snapshot cache (written at v250 with meta):
-      // no commit reads at all, not 251
+      assert(log.latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("table-1"))
+      assert(log.commitReadCount === before, "cached meta: zero commit re-reads")
+      // a fresh reader in the same process: no commit reads at all, not 251
       val log2 = new DeltaLogReader(hconf)
-      assert(log2.tableId(t, Some(cache)) === Some("table-1"))
+      assert(log2.latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("table-1"))
       assert(log2.commitReadCount === 0,
         s"expected 0 post-snapshot commit reads, got ${log2.commitReadCount}")
-      val mid = log2.commitReadCount
-      assert(log2.tableSchemaString(t, Some(cache)) === None)
-      assert(log2.commitReadCount === mid, "second resolve is memoized")
+      assert(log2.latestSnapshot(t).flatMap(_.schema) === None)
+      assert(log2.commitReadCount === 0, "second read is cached")
     }
   }
 
@@ -321,7 +333,246 @@ class DeltaLogReaderSuite extends SparkSpec with DeltaFixtures {
       writeLastCheckpoint(t, 10)
       writeLog(t, 11, ci(1100), meta("new-id"), add("f2.parquet"))
       val log = new DeltaLogReader(hconf)
-      assert(log.tableId(t) === Some("new-id"))
+      assert(log.latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("new-id"))
+    }
+  }
+
+  // ---- the cached snapshot against a cold replay -------------------------
+
+  /** What a cached fold and a cold replay must agree on. A checkpoint
+    * keeps no add's `dataChange` (meaningless for an active file) and
+    * renders the configuration in key order, so those compare
+    * normalized; commit timestamps compare through `versionForTimestamp`. */
+  private def view(s: graft.delta.DeltaSnapshot) =
+    (s.version, s.adds.map(_.copy(dataChange = true)),
+      s.meta.map(m => (m.id, m.schemaString,
+        m.configurationJson.map(graft.util.Jsons.parse))),
+      s.protocol, s.partitionColumns, s.txns, s.domains)
+
+  /** `f`'s answer for table `t`, or its PlanningError with the path masked. */
+  private def outcome[T](t: String)(f: String => T): Either[String, T] =
+    try Right(f(t))
+    catch { case e: PlanningError => Left(e.getMessage.replace(t, "<table>")) }
+
+  private def logReads(body: => Unit): Long = {
+    val before = DeltaLogReader.filesRead.get()
+    body
+    DeltaLogReader.filesRead.get() - before
+  }
+
+  /** Every version of `live`, read through the cache, against a copy of
+    * its log at the fresh path `cold`. The copy is read newest first, so
+    * every read of it is a replay from its checkpoint, never a fold onto
+    * a cached snapshot. Returns the number of versions that failed. */
+  private def assertMatchesCold(log: DeltaLogReader, live: String, cold: String,
+      clue: String): Int = {
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new File(s"$live/_delta_log"), new File(s"$cold/_delta_log"))
+    val versions = (log.listVersions(live) ++ log.listCheckpoints(live).map(_.version))
+      .maxOption.map(0L to _).getOrElse(Seq.empty)
+    val expected = versions.reverse
+      .map(v => v -> outcome(cold)(t => view(log.snapshot(t, v)))).toMap
+    versions.foreach { v =>
+      assert(outcome(live)(t => view(log.snapshot(t, v))) === expected(v), s"$clue version $v")
+    }
+    (Seq(-1L, Long.MaxValue) ++ versions.map(_ * 1000 + 500)).foreach { ts =>
+      assert(outcome(live)(log.versionForTimestamp(_, ts)) ===
+        outcome(cold)(log.versionForTimestamp(_, ts)), s"$clue timestamp $ts")
+    }
+    expected.values.count(_.isLeft)
+  }
+
+  private def protocolLine(kind: Int): String = kind match {
+    case 0 => """{"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}"""
+    case 1 => """{"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}}"""
+    case 2 => """{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["deletionVectors"], "writerFeatures": ["deletionVectors"]}}"""
+    case _ => """{"protocol": {"minReaderVersion": 3, "minWriterVersion": 7, "readerFeatures": ["rowTracking"], "writerFeatures": ["rowTracking"]}}"""
+  }
+
+  private def metaLine(id: String, variant: Int): String = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val md = graft.util.Jsons.obj()
+    md.put("id", id)
+    md.put("schemaString", StructType(Seq(StructField(s"c$variant", LongType))).json)
+    val pc = md.putArray("partitionColumns")
+    if (variant % 2 == 0) pc.add("p")
+    // variant 3 omits configuration: the previous one carries forward
+    if (variant != 3) {
+      val cfg = md.putObject("configuration")
+      cfg.put(s"k$variant", id)
+      cfg.put("a", "1")
+    }
+    s"""{"metaData": ${graft.util.Jsons.render(md)}}"""
+  }
+
+  private def addLine(path: String, dataChange: Boolean, dv: Option[Long]): String =
+    s"""{"add": {"path": "$path", "size": ${path.length}, "dataChange": $dataChange, """ +
+      s""""stats": "{\\"numRecords\\":4}", "partitionValues": {"p": "${path.charAt(2)}"}""" +
+      dv.fold("")(d => s""", "deletionVector": {"storageType": "u", "pathOrInlineDv": "dv$d", """ +
+        """"offset": 1, "sizeInBytes": 10, "cardinality": 1}""") + "}}"
+
+  test("a cached fold-forward read equals a cold replay at every version of random logs") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    trait Op
+    case class Commit(adds: Int, removes: Int, dvs: Int, meta: Option[Int],
+        protocol: Option[Int], txn: Option[(Int, Long)],
+        domain: Option[(Int, Boolean)]) extends Op
+    case object Checkpoint extends Op
+    case class Expire(keep: Int) extends Op
+    /** A foreign writer replaces the whole log with `commits` new ones. */
+    case class Replace(commits: Int) extends Op
+    val commitGen = for {
+      adds <- Gen.choose(0, 3)
+      removes <- Gen.choose(0, 2)
+      dvs <- Gen.frequency(3 -> 0, 1 -> 1)
+      meta <- Gen.frequency(5 -> Gen.const(Option.empty[Int]), 1 -> Gen.some(Gen.choose(0, 3)))
+      // kind 3 names a reader feature this engine refuses
+      protocol <- Gen.frequency(12 -> Gen.const(Option.empty[Int]),
+        3 -> Gen.some(Gen.choose(0, 2)), 1 -> Gen.const(Some(3)))
+      txn <- Gen.option(Gen.zip(Gen.choose(0, 2), Gen.choose(0L, 40L)))
+      domain <- Gen.option(Gen.zip(Gen.choose(0, 2), Gen.oneOf(false, true)))
+    } yield Commit(adds, removes, dvs, meta, protocol, txn, domain)
+    val opGen: Gen[Op] = Gen.frequency(12 -> commitGen, 3 -> Gen.const(Checkpoint),
+      2 -> Gen.choose(0, 2).map(Expire), 1 -> Gen.choose(1, 14).map(Replace))
+
+    val cw = new graft.delta.CheckpointWriter(hconf)
+    val log = new DeltaLogReader(hconf)
+    var (folds, failures) = (0, 0)
+    withTmpDir { tmp =>
+      for (c <- 0 until 6) {
+        val live = s"$tmp/live-$c"
+        var active = Vector.empty[String]
+        var (files, generation) = (0, 0)
+        def latest: Option[Long] =
+          (log.listVersions(live) ++ log.listCheckpoints(live).map(_.version)).maxOption
+        def commit(v: Long, op: Commit): Unit = {
+          val lines = Seq.newBuilder[String]
+          lines += ci(v * 1000 + 7)
+          if (v == 0) lines += protocolLine(0)
+          op.protocol.foreach(k => lines += protocolLine(k))
+          if (v == 0 || op.meta.isDefined)
+            lines += metaLine(s"table-$c-$generation", op.meta.getOrElse(0))
+          op.txn.foreach { case (a, tv) =>
+            lines += s"""{"txn": {"appId": "app$a", "version": $tv}}""" }
+          op.domain.foreach { case (d, removed) =>
+            lines += s"""{"domainMetadata": {"domain": "d$d", "configuration": "{\\"v\\": $v}", "removed": $removed}}""" }
+          val gone = active.take(op.removes)
+          gone.foreach(p => lines += remove(p))
+          // a deletion-vector update: remove and re-add the same path
+          active.drop(op.removes).take(op.dvs).foreach { p =>
+            lines += remove(p)
+            lines += addLine(p, dataChange = true, Some(v))
+          }
+          val fresh = (0 until op.adds).map { _ => files += 1; s"p=${files % 2}/f$files.parquet" }
+          fresh.foreach(p => lines += addLine(p, dataChange = files % 3 != 0, None))
+          active = active.filterNot(gone.contains) ++ fresh
+          writeLog(live, v, lines.result(): _*)
+        }
+        commit(0L, Commit(2, 0, 0, None, None, None, None))
+        val ops = Gen.listOfN(24, opGen)(Gen.Parameters.default, Seed(7100L + c)).get
+        ops.zipWithIndex.foreach { case (op, step) =>
+          op match {
+            case cm: Commit =>
+              val v = latest.fold(0L)(_ + 1)
+              commit(v, cm)
+              // the newest read after one new commit folds just that commit
+              // whenever the cached snapshot is still valid
+              if (logReads(outcome(live)(log.snapshot(_, v))) == 1) folds += 1
+            case Checkpoint =>
+              try latest.foreach(v => cw.checkpoint(live, Some(v)))
+              catch { case _: PlanningError => } // a refused protocol cannot be checkpointed
+            case Expire(keep) => cw.expireLogs(live, keep)
+            case Replace(n) =>
+              org.apache.commons.io.FileUtils.deleteDirectory(new File(s"$live/_delta_log"))
+              generation += 1
+              active = Vector.empty
+              (0 until n).foreach(v => commit(v, Commit(v % 3, v % 2, 0, None, None,
+                Some((0, v.toLong)), None)))
+          }
+          failures += assertMatchesCold(log, live, s"$tmp/cold-$c-$step", s"case $c step $step ($op)")
+        }
+      }
+    }
+    // the sampled logs exercise the fold and the refusals both
+    assert(folds > 0 && failures > 0, s"folds $folds, failing versions $failures")
+  }
+
+  test("a foreign commit between two reads folds onto the cached snapshot") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      writeLog(t, 0, protocolLine(0), ci(0), meta(), add("a.parquet"))
+      val log = new DeltaLogReader(hconf)
+      assert(log.snapshot(t, 0).adds.map(_.path) === Seq("a.parquet"))
+      writeLog(t, 1, ci(10), remove("a.parquet"), add("b.parquet"))
+      var snap: graft.delta.DeltaSnapshot = null
+      assert(logReads { snap = log.latestSnapshot(t).get } === 1)
+      assert(snap.version === 1L && snap.adds.map(_.path) === Seq("b.parquet"))
+      assertMatchesCold(log, t, s"$tmp/cold", "foreign commit")
+    }
+  }
+
+  test("a log replaced with lower versions resets the cached snapshot") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      (0L to 5L).foreach(v => writeLog(t, v,
+        (Seq(ci(v)) ++ (if (v == 0) Seq(protocolLine(0), meta("first")) else Nil) :+
+          add(s"f$v.parquet")): _*))
+      val log = new DeltaLogReader(hconf)
+      assert(log.latestSnapshot(t).map(_.version) === Some(5L))
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(s"$t/_delta_log"))
+      writeLog(t, 0, protocolLine(0), ci(100), meta("second"), add("g0.parquet"))
+      writeLog(t, 1, ci(101), add("g1.parquet"))
+      val snap = log.latestSnapshot(t).get
+      assert(snap.version === 1L && snap.meta.map(_.id) === Some("second"))
+      assert(snap.adds.map(_.path) === Seq("g0.parquet", "g1.parquet"))
+      assertMatchesCold(log, t, s"$tmp/cold", "replaced log")
+    }
+  }
+
+  test("a checkpoint-only table reads from its checkpoint and folds later commits") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      writeCheckpointParquet(t, 10, Seq(ckMeta("ck-only"), ckAdd("f1.parquet"),
+        ckAdd("f2.parquet")))
+      writeLastCheckpoint(t, 10)
+      val log = new DeltaLogReader(hconf)
+      assert(log.latestVersion(t) === None, "no JSON commit survives")
+      var snap: graft.delta.DeltaSnapshot = null
+      assert(logReads { snap = log.latestSnapshot(t).get } === 1)
+      assert(snap.version === 10L && snap.meta.map(_.id) === Some("ck-only"))
+      writeLog(t, 11, ci(1100), remove("f1.parquet"), add("f3.parquet"))
+      assert(logReads { snap = log.latestSnapshot(t).get } === 1)
+      assert(snap.adds.map(_.path) === Seq("f2.parquet", "f3.parquet"))
+      assertMatchesCold(log, t, s"$tmp/cold", "checkpoint-only")
+    }
+  }
+
+  test("log expiry resets the cached snapshot only when it deletes what the snapshot was folded from") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      val cw = new graft.delta.CheckpointWriter(hconf)
+      val log = new DeltaLogReader(hconf)
+      def commit(v: Long): Unit = {
+        writeLog(t, v, (Seq(ci(v)) ++ (if (v == 0) Seq(protocolLine(0), meta()) else Nil) :+
+          add(s"f$v.parquet")): _*)
+        if (v > 0 && v % 10 == 0) cw.checkpoint(t, Some(v))
+      }
+      (0L to 15L).foreach(commit)
+      // a copy at a fresh path: checkpoint 10 plus commits 11..15
+      val cold = s"$tmp/cold-read"
+      org.apache.commons.io.FileUtils.copyDirectory(new File(t), new File(cold))
+      assert(logReads(log.snapshot(cold, 15)) === 1 + 5)
+      // expiry below the checkpoint the snapshot was folded from: no reset
+      assert(cw.expireLogs(cold) === 10)
+      assert(logReads(assert(log.snapshot(cold, 15).adds.size === 16)) === 0)
+      // a newer checkpoint, then expiry below it: the snapshot's commits
+      // 11..15 are gone, so the read replays from checkpoint 20
+      (16L to 20L).foreach(v => writeLog(cold, v, ci(v), add(s"f$v.parquet")))
+      cw.checkpoint(cold, Some(20))
+      assert(cw.expireLogs(cold) === 10)
+      assert(logReads(assert(log.snapshot(cold, 20).adds.size === 21)) === 1)
+      assertMatchesCold(log, cold, s"$tmp/cold-check", "expired log")
     }
   }
 }
@@ -653,8 +904,8 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       assert(log.listVersions(t) === Seq(10L, 11L))
       // a FRESH reader reconstructs the full table from checkpoint + tail
       val fresh = new DeltaLogReader(conf)
-      assert(fresh.snapshotState(t, 11).size === 12)
-      assert(fresh.tableId(t).isDefined)
+      assert(fresh.snapshot(t, 11).adds.size === 12)
+      assert(fresh.latestSnapshot(t).flatMap(_.meta).map(_.id).isDefined)
       assert(w.read(t).orderBy("id").collect().map(_.getLong(0)).toSeq ===
         (1L to 12L))
       // manual checkpoint at latest + full expiry keeps the table readable
@@ -697,7 +948,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       w.write(Seq((1L, "a")).toDF("id", "s"), t, DeltaWriteMode.Append)
       // a foreign writer sets table properties in a metaData action
       val md = graft.util.Jsons.obj()
-      md.put("id", new DeltaLogReader(conf).tableId(t).get)
+      md.put("id", new DeltaLogReader(conf).latestSnapshot(t).flatMap(_.meta).map(_.id).get)
       md.put("schemaString", w.tableSchema(t).get.json)
       val cfg = graft.util.Jsons.obj()
       cfg.put("delta.enableChangeDataFeed", "true")
@@ -733,7 +984,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       // a foreign UNSET of every property (explicitly empty {}) must NOT
       // be resurrected by our next commit's re-emission
       val md2 = graft.util.Jsons.obj()
-      md2.put("id", new DeltaLogReader(conf).tableId(t).get)
+      md2.put("id", new DeltaLogReader(conf).latestSnapshot(t).flatMap(_.meta).map(_.id).get)
       md2.put("schemaString", w.tableSchema(t).get.json)
       md2.set[com.fasterxml.jackson.databind.JsonNode]("configuration",
         graft.util.Jsons.obj())
@@ -1022,7 +1273,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
           """"writerFeatures": ["domainMetadata"]}}""",
         ci(1L))
       val v = w.upgradeToColumnMapping(t)
-      val p = log.resolveProtocol(t, v).get
+      val p = log.snapshot(t, v).protocol.get
       assert(p.minReaderVersion === 2)
       assert(p.minWriterVersion === 7)
       assert(p.writerFeatures.toSet === Set("domainMetadata", "columnMapping"))
@@ -1033,7 +1284,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       writeLog(t2, log.latestVersion(t2).get + 1,
         """{"protocol": {"minReaderVersion": 1, "minWriterVersion": 6}}""",
         ci(2L))
-      val p2 = log.resolveProtocol(t2, w.upgradeToColumnMapping(t2)).get
+      val p2 = log.snapshot(t2, w.upgradeToColumnMapping(t2)).protocol.get
       assert(p2.minReaderVersion === 2 && p2.minWriterVersion === 6)
     }
   }
@@ -1091,7 +1342,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
           (Seq(ci(6L)) ++ live3.map(p => remove(p))): _*)
       assert(w.activeAdds(t3).isEmpty)
       w.renameColumn(t3, "part", "region")
-      assert(log.partitionColumnsAt(t3, log.latestVersion(t3).get)
+      assert(log.snapshot(t3, log.latestVersion(t3).get).partitionColumns
         === Seq("region"))
       // and dropColumn's partition guard can still fire without adds
       intercept[GraftError](w.dropColumn(t3, "region"))
@@ -1114,7 +1365,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
         .getString("delta.columnMapping.physicalName") === "id")
       assert(sc("s").metadata.getLong("delta.columnMapping.id") === 2L)
       // the same commit raises the protocol to the mapping floor
-      val p = log.resolveProtocol(t, v).get
+      val p = log.snapshot(t, v).protocol.get
       assert(p.minReaderVersion === 2 && p.minWriterVersion === 5)
       // idempotent: a second upgrade is a no-op at the same version
       assert(w.upgradeToColumnMapping(t) === v)
@@ -1128,15 +1379,18 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       assert(w.tableSchema(t).get("score").metadata
         .getString("delta.columnMapping.physicalName").startsWith("col-"))
       // a DV table (reader 3 / writer 7) must NOT downgrade: the upgrade
-      // adds the columnMapping feature to the existing lists
+      // adds the columnMapping feature to the existing lists (the DV
+      // commit moved the table's legacy 1/2 to feature lists, so its
+      // writer list names the appendOnly/invariants that 2 implied)
       val t2 = s"$tmp/dv"
       w.write(spark.range(0, 6).toDF("id").coalesce(1), t2, DeltaWriteMode.Append)
       w.deleteWhere(t2, col("id") < 2)
       val v2 = w.upgradeToColumnMapping(t2)
-      val p2 = log.resolveProtocol(t2, v2).get
+      val p2 = log.snapshot(t2, v2).protocol.get
       assert(p2.minReaderVersion === 3 && p2.minWriterVersion === 7)
       assert(p2.readerFeatures.toSet === Set("deletionVectors", "columnMapping"))
-      assert(p2.writerFeatures.toSet === Set("deletionVectors", "columnMapping"))
+      assert(p2.writerFeatures.toSet ===
+        Set("appendOnly", "invariants", "deletionVectors", "columnMapping"))
       assert(w.read(t2).orderBy("id").collect().map(_.getLong(0)).toSeq
         === (2L until 6L))
       // NESTED schemas map recursively — the protocol requires every
@@ -1243,6 +1497,28 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       // and the mapping survives the restore: rename composes again
       w.renameColumn(t, "s", "label2")
       assert(w.read(t).columns.toSeq === Seq("id", "label2"))
+    }
+  }
+
+  test("restore declares the target version's LOGICAL partition columns on a mapped table") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      val w = writer
+      w.write(Seq((1L, "x"), (2L, "y")).toDF("id", "p"), t, DeltaWriteMode.Append,
+        partitionBy = Seq("p"))
+      w.upgradeToColumnMapping(t)
+      // the partition dirs keep the physical name p; the logical one is pp
+      val vRename = w.renameColumn(t, "p", "pp")
+      w.write(Seq((3L, "z")).toDF("id", "pp"), t, DeltaWriteMode.Append)
+      val vRestore = w.restore(t, vRename)
+      val committed = new String(Files.readAllBytes(
+        Paths.get(t, "_delta_log", f"$vRestore%020d.json")))
+      val md = committed.split('\n').map(graft.util.Jsons.parse)
+        .flatMap(n => graft.util.Jsons.optField(n, "metaData")).head
+      assert(graft.util.Jsons.render(md.get("partitionColumns")) === """["pp"]""")
+      assert(new DeltaLogReader(conf).snapshot(t, vRestore).partitionColumns === Seq("pp"))
+      assert(w.read(t).orderBy("id").as[(Long, String)].collect().toSeq ===
+        Seq((1L, "x"), (2L, "y")))
     }
   }
 
@@ -2144,7 +2420,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       w.write(Seq((1L, "a")).toDF("id", "s"), t0, DeltaWriteMode.Append)
       w.checkpoint(t0)
       w.expireLogs(t0)
-      assert(log.resolveProtocol(t0, 0L) ===
+      assert(log.snapshot(t0, 0L).protocol ===
         Some(graft.delta.DeltaAction.Protocol(1, Seq.empty, 2, Seq.empty)))
       // DV table: deleteWhere upgrades to reader 3 / writer 7 in its JSON
       // commit; after checkpoint + FULL expiry (keepVersions = 0) the
@@ -2158,7 +2434,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       w.checkpoint(t)
       w.expireLogs(t)
       assert(log.listVersions(t) === Seq(dv), "expiry must leave only the checkpointed tail")
-      val p = log.resolveProtocol(t, dv)
+      val p = log.snapshot(t, dv).protocol
       assert(p.map(_.minReaderVersion) === Some(3))
       assert(p.map(_.minWriterVersion) === Some(7))
       assert(p.exists(_.readerFeatures.contains("deletionVectors")))
@@ -2196,9 +2472,9 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
       assert(log.lastCheckpoint(t) === Some(graft.delta.CheckpointInstance(0, Some(3))))
       cw.expireLogs(t) // v0 json is NOT below the checkpoint; keep
       writeLog(t, 1, ci(100), add("f8.parquet", 80), remove("f1.parquet"))
-      val state = new DeltaLogReader(conf).snapshotState(t, 1)
-      assert(state.map(_._1) === (2 to 8).map(i => s"f$i.parquet"))
-      assert(new DeltaLogReader(conf).tableId(t) === Some("mp-table"))
+      val state = new DeltaLogReader(conf).snapshot(t, 1).adds
+      assert(state.map(_.path) === (2 to 8).map(i => s"f$i.parquet"))
+      assert(new DeltaLogReader(conf).latestSnapshot(t).flatMap(_.meta).map(_.id) === Some("mp-table"))
     }
   }
 
@@ -2426,7 +2702,7 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
     val widened = StructType(Seq(StructField("id", LongType),
       StructField("v", LongType)))
     val retyped = StructType(Seq(StructField("id", StringType)))
-    val base = graft.delta.TableMeta("t", Some(baseSchema.json), 0L,
+    val base = graft.delta.TableMeta("t", Some(baseSchema.json),
       Some("""{"delta.appendOnly":"false"}"""))
     def metaCommit(schema: StructType, cfg: Option[String]) =
       commitOf(DeltaAction.MetaData("t", Some(schema.json), cfg))
