@@ -96,8 +96,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * state again with a METADATA-ONLY commit — add back the files active
     * then (they're still on disk unless vacuumed; verified before
     * committing), remove the files active now but not then, and revert the
-    * schema. No data is copied or rewritten: restore is O(#files) log
-    * work, delta-spark's RESTORE shape. */
+    * schema. A logical file is (path, deletion vector): a file whose
+    * vector changed since `version` is removed with its current vector and
+    * re-added with the old one. No data is copied or rewritten: restore is
+    * O(#files) log work, delta-spark's RESTORE shape. */
   def restore(tablePath: String, version: Long): Long = {
     val current = snapshot(tablePath)
       .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
@@ -105,8 +107,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       throw new GraftError(s"cannot restore $tablePath to $version: latest is ${current.version}")
     if (version == current.version) return version
     val target = log.snapshot(tablePath, version)
-    val toAdd = target.adds.filterNot(a => current.files.contains(a.path))
-    val toRemove = current.adds.filterNot(a => target.files.contains(a.path))
+    def in(snap: DeltaSnapshot)(a: DeltaAction.AddFile): Boolean =
+      snap.files.get(a.path).exists(_.deletionVector == a.deletionVector)
+    val toAdd = target.adds.filterNot(in(current))
+    val toRemove = current.adds.filterNot(in(target))
     toAdd.foreach { a =>
       val p = new Path(log.resolvePath(tablePath, a.path))
       if (!Fs.exists(p, conf))
@@ -1111,7 +1115,10 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
         t.put("lastUpdated", now)
         lines += s"""{"txn": ${Jsons.render(t)}}"""
       }
-      removed.foreach(p => lines += DeltaWriter.removeLine(p, dataChange = true, now))
+      // a remove names the logical file it ends, (path, deletion vector)
+      // as the base snapshot holds it
+      removed.foreach(p => lines += DeltaWriter.removeLine(p,
+        base.flatMap(_.files.get(p)).flatMap(_.deletionVector), dataChange = true, now))
       adds.foreach(part => lines += DeltaWriter.addLine(part, dataChange = true, now))
       cdcs.foreach { case (p, sz) =>
         val c = Jsons.obj(); c.put("path", p); c.put("size", sz)
@@ -1592,14 +1599,18 @@ object DeltaWriter {
     val now = System.currentTimeMillis()
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo": {"timestamp": $now, "operation": "$operation"}}"""
-    removed.foreach(a => lines += removeLine(a.path, dataChange = false, now))
+    removed.foreach(a => lines += removeLine(a.path, a.deletionVector, dataChange = false, now))
     parts.foreach(part => lines += addLine(part, dataChange = false, now))
     lines.result().mkString("\n")
   }
 
-  private def removeLine(path: String, dataChange: Boolean, now: Long): String = {
+  /** The protocol matches a remove to its add on (path, deletion vector),
+    * so a remove of a file that has a vector must carry it. */
+  private def removeLine(path: String, dv: Option[DvDescriptor], dataChange: Boolean,
+      now: Long): String = {
     val r = Jsons.obj(); r.put("path", path); r.put("dataChange", dataChange)
     r.put("deletionTimestamp", now)
+    dv.foreach(d => r.set[JsonNode]("deletionVector", dvNode(d)))
     s"""{"remove": ${Jsons.render(r)}}"""
   }
 

@@ -2,244 +2,172 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, SpecializedGetters, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Codegen'd in-bucket pair generation for the LSH/simhash dedup
-  * families — the fused replacement for the interpreted
-  * `flatten(transform(sorted, (x, i) => transform(slice(sorted, i+2, n),
-  * y => struct(x, y))))` formulation (`Dedup.pairStructs`), which paid a
-  * Catalyst-lambda dispatch per PAIR: a template-heavy corpus puts
-  * thousands of members into one hot bucket, and C(1900, 2) ≈ 1.8M
-  * interpreted struct-of-struct allocations in ONE task was the measured
-  * wall of `d_simhash_pairs_poly` at sf0.1 (4.1 s of a 5.2 s query).
-  * Each kernel is one tight primitive loop per bucket row inside
-  * whole-stage codegen.
+/** In-bucket pair generation for every dedup family (MinHash/LSH,
+  * SimHash/hash64, winnowing): one row per (i, j), i < j, pair of a
+  * sorted bucket membership of ANY element type, streamed — nothing sized
+  * by C(n, 2) is ever built, so no bucket size turns the stage into a
+  * crash; `maxBucket`/`maxDf` caps bound the work, not an array.
   *
-  * Parity contract (suite-pinned in PairsKernelSuite, oracle-gated by
-  * every consuming query):
-  *  - pairs are exactly the (i, j), i < j, combinations IN ARRAY ORDER —
-  *    the operators pass `array_sort`ed memberships, so emitted order and
-  *    id ordering match the HOF formulation element for element;
-  *  - [[Hash64HammingPairs]] additionally applies the
-  *    `bit_count(a.sh ^ b.sh) <= maxHamming` verify INSIDE the loop —
-  *    dropping a failing pair exactly where the old plan's post-explode
-  *    filter dropped it, so millions of non-near-dup candidates no longer
-  *    materialize as rows at all. A null element or a null `sh` field
-  *    yields a null XOR → null hamming, which the old filter dropped —
-  *    the kernel skips those pairs identically. A null `id` rides
-  *    through (the old struct carried it; such pairs survived when their
-  *    hamming passed).
+  * `maxHamming = None` pairs the members themselves: `array<T>` →
+  * `(id_a: T, id_b: T)`. `Some(m)` is the Hamming variant: the members
+  * are `struct<id: T, sh: long>` and each pair is verified INSIDE the
+  * walk, `(id_a, id_b, hamming)` kept only when `bit_count(sh_a ^ sh_b)
+  * <= m` — non-near-dup candidates never become rows.
+  *
+  * Parity contract (pinned in PairsKernelSuite against the interpreted
+  * `flatten(transform(slice(...)))` formulation it replaced, and
+  * oracle-gated by every consuming query):
+  *  - pairs are exactly the (i, j), i < j, combinations IN ARRAY ORDER;
+  *    callers pass `sort_array`ed memberships, so emitted order and id
+  *    ordering follow the sort;
+  *  - a null member pairs through as a null id; in the Hamming variant a
+  *    null member or a null `sh` makes every pair it is in fail the
+  *    verify (a null XOR), while a null `id` rides through;
+  *  - a null bucket yields no rows;
+  *  - every output field is declared nullable.
+  *
+  * The generator is whole-stage codegen'd through `GenerateExec`'s
+  * iterator path: the generated code asks [[pairs]] for one bucket's
+  * iterator and consumes each pair before the next is produced, so one
+  * row per bucket is reused for every pair.
   */
-object PairsKernel {
-  private val HamOut = Array[DataType](LongType, LongType, IntegerType)
+case class BucketPairs(child: Expression, maxHamming: Option[Int])
+    extends UnaryExpression with Generator {
 
-  /** All (i < j) pairs with Hamming(sh_i, sh_j) <= maxHamming from a
-    * bucket's `array<struct<id: long, sh: long>>` membership. Returns
-    * `array<struct<id_a, id_b, hamming>>`. */
-  def hammingPairs(items: ArrayData, maxHamming: Int): ArrayData = {
-    if (items == null) return new GenericArrayData(Array.empty[Any])
-    val n = items.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    // unpack once: the O(n^2) loop then runs over primitive arrays
-    val ids = new Array[Long](n)
-    val idNull = new Array[Boolean](n)
-    val shs = new Array[Long](n)
-    val dead = new Array[Boolean](n) // null element / null sh: every pair dropped
-    var i = 0
-    while (i < n) {
-      if (items.isNullAt(i)) dead(i) = true
-      else {
-        val row = items.getStruct(i, 2)
-        if (row.isNullAt(1)) dead(i) = true
-        else {
-          shs(i) = row.getLong(1)
-          if (row.isNullAt(0)) idNull(i) = true else ids(i) = row.getLong(0)
-        }
-      }
-      i += 1
+  private def idType: DataType = (child.dataType, maxHamming) match {
+    case (ArrayType(StructType(Array(id, _)), _), Some(_)) => id.dataType
+    case (ArrayType(t, _), None) => t
+    case (t, _) => t
+  }
+
+  override def elementSchema: StructType = StructType(
+    Seq(StructField("id_a", idType), StructField("id_b", idType)) ++
+      maxHamming.map(_ => StructField("hamming", IntegerType)))
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (child.dataType, maxHamming) match {
+      case (ArrayType(_, _), None) => TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(StructType(Array(_, StructField(_, LongType, _, _))), _), Some(_)) =>
+        TypeCheckResult.TypeCheckSuccess
+      case (t, None) =>
+        TypeCheckResult.TypeCheckFailure(s"$prettyName requires an array, got $t")
+      case (t, Some(_)) => TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires array<struct<id, sh: bigint>>, got $t")
     }
-    val out = scala.collection.mutable.ArrayBuilder.make[Any]
-    i = 0
-    while (i < n) {
-      if (!dead(i)) {
-        val shi = shs(i)
-        var j = i + 1
-        while (j < n) {
-          if (!dead(j)) {
-            val h = java.lang.Long.bitCount(shi ^ shs(j))
-            if (h <= maxHamming)
-              out += new GenericInternalRow(Array[Any](
-                if (idNull(i)) null else ids(i),
-                if (idNull(j)) null else ids(j), h))
+
+  @transient private lazy val idOf: (SpecializedGetters, Int) => Any =
+    InternalRow.getAccessor(idType, nullable = true)
+
+  /** The pairs of one bucket, in (i, j) order. */
+  def pairs(items: ArrayData): Iterator[InternalRow] = {
+    if (items == null) return Iterator.empty
+    val n = items.numElements()
+    // unpack once: the O(n^2) walk then reads plain arrays
+    val ids = new Array[Any](n)
+    maxHamming match {
+      case None =>
+        var i = 0
+        while (i < n) { ids(i) = idOf(items, i); i += 1 }
+        new BucketPairs.Walk(ids, null, null, 0)
+      case Some(m) =>
+        val shs = new Array[Long](n)
+        val live = new Array[Boolean](n) // false: null member or null sh
+        var i = 0
+        while (i < n) {
+          if (!items.isNullAt(i)) {
+            val member = items.getStruct(i, 2)
+            if (!member.isNullAt(1)) {
+              live(i) = true
+              shs(i) = member.getLong(1)
+              ids(i) = idOf(member, 0)
+            }
           }
-          j += 1
+          i += 1
         }
-      }
-      i += 1
+        new BucketPairs.Walk(ids, shs, live, m)
     }
-    new GenericArrayData(out.result())
   }
 
-  /** C(n, 2), the pair count of an n-member bucket, as an array size:
-    * computed in Long (n * (n - 1) overflows Int from n = 46,342), and a
-    * bucket whose pairs exceed the JVM's array range fails with a
-    * [[graft.core.GraftError]] naming its size instead of allocating a
-    * wrong-size array. */
-  def pairCount(n: Int): Int = {
-    val pairs = n.toLong * (n - 1) / 2
-    if (pairs > Int.MaxValue - 8)
-      throw new graft.core.GraftError(
-        s"a bucket of $n members has $pairs pairs, past the JVM array range " +
-        s"(${Int.MaxValue - 8}); cap the bucket size")
-    pairs.toInt
-  }
-
-  /** All (i < j) pairs from a bucket's `array<long>` membership —
-    * `array<struct<a, b>>`, the [[Dedup.candidatePairs]] shape. A null
-    * element pairs through as a null field, exactly as the HOF built
-    * `struct(null, y)`. */
-  def idPairs(items: ArrayData): ArrayData = {
-    if (items == null) return new GenericArrayData(Array.empty[Any])
-    val n = items.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](n)
-    val idNull = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      if (items.isNullAt(i)) idNull(i) = true else ids(i) = items.getLong(i)
-      i += 1
-    }
-    val out = new Array[Any](pairCount(n))
-    var k = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(k) = new GenericInternalRow(Array[Any](
-          if (idNull(i)) null else ids(i),
-          if (idNull(j)) null else ids(j)))
-        k += 1
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
-
-/** `array<struct<id_a: long, id_b: long, hamming: int>>` — the verified
-  * in-bucket near-dup pairs of a sorted `array<struct<id, sh>>` bucket
-  * membership (see [[PairsKernel.hammingPairs]]). */
-case class Hash64HammingPairs(child: Expression, maxHamming: Int)
-    extends UnaryExpression {
-
-  // every field declared nullable like the HOF formulation's struct
-  // fields were (schema parity for the Verify dump; values are never
-  // null for hamming — passing pairs always carry one)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = true),
-    StructField("id_b", LongType, nullable = true),
-    StructField("hamming", IntegerType, nullable = true))),
-    containsNull = false)
-  // a null input array yields an EMPTY pair array (the old plan's
-  // explode over a null HOF result emitted no rows either way)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(Array(
-          StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure(
-          s"hash64_hamming_pairs requires array<struct<long, long>>, got $t")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    PairsKernel.hammingPairs(v, maxHamming)
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    pairs(child.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
     val childGen = child.genCode(ctx)
-    val kernel = PairsKernel.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
+    val self = ctx.addReferenceObj("bucketPairs", this)
     ev.copy(
       code = childGen.code +
         code"""
-          |$ad ${ev.value} = $kernel.hammingPairs(
-          |  ${childGen.isNull} ? null : ${childGen.value}, $maxHamming);
-          |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : Hash64HammingPairs = copy(child = newChild)
-
-  override def prettyName: String = "hash64_hamming_pairs"
-  override def toString: String =
-    s"hash64_hamming_pairs(${child}, maxHamming=$maxHamming)"
-  override def sql: String = s"hash64_hamming_pairs(${child.sql})"
-}
-
-/** `array<struct<a: long, b: long>>` — all (i < j) id pairs of a sorted
-  * `array<long>` bucket membership (see [[PairsKernel.idPairs]]). */
-case class LongIdPairs(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = true),
-    StructField("b", LongType, nullable = true))), containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure(s"long_id_pairs requires array<long>, got $t")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    PairsKernel.idPairs(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val kernel = PairsKernel.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-    ev.copy(
-      code = childGen.code +
-        code"""
-          |$ad ${ev.value} = $kernel.idPairs(
+          |scala.collection.Iterator ${ev.value} = $self.pairs(
           |  ${childGen.isNull} ? null : ${childGen.value});
           |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+      isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(newChild: Expression)
-      : LongIdPairs = copy(child = newChild)
+  override protected def withNewChildInternal(newChild: Expression): BucketPairs =
+    copy(child = newChild)
 
-  override def prettyName: String = "long_id_pairs"
-  override def toString: String = s"long_id_pairs(${child})"
-  override def sql: String = s"long_id_pairs(${child.sql})"
+  override def prettyName: String = "bucket_pairs"
+  override def toString: String =
+    s"bucket_pairs($child${maxHamming.fold("")(m => s", maxHamming=$m")})"
 }
 
-/** Column-level entry points. */
-object PairsFunctions {
-  /** verified near-dup pairs of a sorted `array<struct<id, sh>>` bucket. */
-  def hammingPairs(sortedItems: Column, maxHamming: Int): Column =
-    Bridge.column(Hash64HammingPairs(Bridge.expression(sortedItems), maxHamming))
+object BucketPairs {
+  /** The (i, j), i < j, walk over one unpacked bucket, in (i, j) order,
+    * each pair written into the one reused row `(ids(i), ids(j))`. With
+    * `shs` it is the Hamming variant: a pair of two `live` members is
+    * kept, with its distance, only when within `maxHamming`. */
+  private final class Walk(ids: Array[Any], shs: Array[Long], live: Array[Boolean],
+      maxHamming: Int) extends scala.collection.AbstractIterator[InternalRow] {
+    private val n = ids.length
+    private val row = new GenericInternalRow(if (shs == null) 2 else 3)
+    private var i = 0
+    private var j = 0
+    private var h = 0
+    private var ready = false // (i, j) is found and not yet returned
 
-  /** all (i < j) id pairs of a sorted `array<long>` bucket. */
+    private def advance(): Boolean = {
+      while (i < n - 1) {
+        j += 1
+        if (j == n) { i += 1; j = i }
+        else if (shs == null) return true
+        else if (!live(i)) { i += 1; j = i }
+        else if (live(j)) {
+          h = java.lang.Long.bitCount(shs(i) ^ shs(j))
+          if (h <= maxHamming) return true
+        }
+      }
+      false
+    }
+
+    override def hasNext: Boolean = ready || { ready = advance(); ready }
+
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("no pair left in the bucket")
+      ready = false
+      row.update(0, ids(i))
+      row.update(1, ids(j))
+      if (shs != null) row.setInt(2, h)
+      row
+    }
+  }
+}
+
+/** Column-level entry points: generators, used as a `select` item. */
+object PairsFunctions {
+  /** all (i < j) member pairs of a sorted bucket, as `id_a, id_b`. */
   def idPairs(sortedIds: Column): Column =
-    Bridge.column(LongIdPairs(Bridge.expression(sortedIds)))
+    Bridge.column(BucketPairs(Bridge.expression(sortedIds), None))
+
+  /** verified near-dup pairs of a sorted `array<struct<id, sh>>` bucket,
+    * as `id_a, id_b, hamming`. */
+  def hammingPairs(sortedItems: Column, maxHamming: Int): Column =
+    Bridge.column(BucketPairs(Bridge.expression(sortedItems), Some(maxHamming)))
 }

@@ -36,8 +36,11 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Default LSH bucket-size cap. 4096²/2 ≈ 8.4M comparisons is the most
-    * a single degenerate bucket may cost before truncation. */
+  /** Default LSH bucket-size cap. It bounds WORK, not memory: a full
+    * bucket costs C(4096, 2) = 8,386,560 pair visits, streamed one at a
+    * time by [[graft.functions.BucketPairs]]. No array is sized by the
+    * bucket's pair count, so an uncapped bucket (`maxBucket = 0`) is only
+    * slow, never a crash. */
   val DefaultMaxBucket = 4096
 
   /** Exact dedup: keep one row per key set, smallest `tieBreak` wins.
@@ -53,14 +56,6 @@ object Dedup {
     exact(df.withColumn("__fp", fingerprint(col(textCol))), Seq("__fp"), tieBreak)
       .drop("__fp")
 
-  /** All ordered pairs (aᵢ, aⱼ), i < j, from a sorted array — generated
-    * inside the bucket row, so pair explosion happens after the (cheap)
-    * bucket aggregation instead of via a bucket self-join. */
-  private def pairStructs(sorted: Column): Column =
-    flatten(transform(sorted, (x, i) =>
-      transform(slice(sorted, i + lit(2), size(sorted)), y =>
-        struct(x.as("a"), y.as("b")))))
-
   /** Bucket rows → aggregated buckets with membership bounded BEFORE the
     * aggregation: rank members per bucket (`row_number` over the same
     * partition key — rank 1 = smallest id, so truncation is deterministic),
@@ -69,8 +64,9 @@ object Dedup {
     * materializing an unbounded bucket in a single aggregation buffer row
     * (a degenerate hot bucket — billions of empty docs on one band key —
     * would otherwise accumulate its whole membership into one in-memory
-    * buffer and OOM the executor; the cap on pair GENERATION alone can't
-    * prevent that). `rows` must carry an `id` column. */
+    * buffer and OOM the executor; pair generation itself streams, so
+    * there the cap bounds only the C(maxBucket, 2) pair work). `rows` must
+    * carry an `id` column. */
   private[graft] def boundedBuckets(rows: DataFrame, bucketCols: Seq[String],
       agg: Column, maxBucket: Int): DataFrame = {
     val bounded =
@@ -83,28 +79,16 @@ object Dedup {
       .filter(size(col("items")) > 1)
   }
 
-  /** Distinct candidate id pairs from bucketed rows. ONE shuffle (window +
-    * groupBy on the bucket key); signature/bucket expressions upstream
-    * evaluate exactly once. The sorted member array is materialized in its
-    * own projection so `pairStructs` (which references it twice) doesn't
-    * re-sort per outer element in interpreted HOF eval. Long ids take the
-    * fused [[graft.functions.LongIdPairs]] kernel — one codegen loop per
-    * bucket instead of a Catalyst-lambda dispatch per PAIR (a hot bucket
-    * of c members costs C(c, 2) interpreted struct allocations in one
-    * task); pair set and order are identical (suite-pinned). */
+  /** Distinct candidate id pairs `(id_a, id_b)` from bucketed rows. ONE
+    * shuffle (window + groupBy on the bucket key); signature/bucket
+    * expressions upstream evaluate exactly once. Pairs stream out of each
+    * sorted bucket through the [[graft.functions.BucketPairs]] generator,
+    * whatever the id type. */
   private def candidatePairs(
-      rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
-    val sorted = boundedBuckets(rows, bucketCols, collect_set(col("id")), maxBucket)
-      .select(array_sort(col("items")).as("sorted_ids"))
-    val pairs =
-      if (rows.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType)
-        graft.functions.PairsFunctions.idPairs(col("sorted_ids"))
-      else pairStructs(col("sorted_ids"))
-    sorted.select(explode(pairs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+      rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame =
+    boundedBuckets(rows, bucketCols, collect_set(col("id")), maxBucket)
+      .select(graft.functions.PairsFunctions.idPairs(sort_array(col("items"))))
       .distinct()
-  }
 
   /** Count of buckets whose membership exceeds `maxBucket` — the
     * comparisons-dropped diagnostic for the skew cap (an eager action;
@@ -689,39 +673,18 @@ object Dedup {
         manku16BlockKeys(col("sh")).as(Seq("block", "key")))
     val buckets = boundedBuckets(blockRows, Seq("block", "key"),
       collect_set(struct(col("id"), col("sh"))), maxBucket)
-    sortedHammingPairs(sigs, idCol, hashCol, buckets, maxHamming)
+    sortedHammingPairs(buckets, maxHamming)
   }
 
   /** Shared pair emission of [[hash64Pairs]]/[[hash64PairsWide]]: sort
-    * the bucket membership, generate (i < j) pairs, verify exact Hamming,
-    * distinct. (long, long) signatures take the fused
-    * [[graft.functions.Hash64HammingPairs]] kernel — pair generation AND
-    * the Hamming verify in one codegen loop per bucket, so a hot bucket's
-    * C(c, 2) non-matching candidates never materialize as rows (the
-    * interpreted `pairStructs` lambda dispatch per pair was 4.1 s of
-    * d_simhash_pairs_poly's 5.2 s at sf0.1, single-task); other id types
-    * keep the HOF formulation. Pair set identical either way
-    * (suite-pinned + oracle-gated). */
-  private def sortedHammingPairs(sigs: DataFrame, idCol: String,
-      hashCol: String, buckets: DataFrame, maxHamming: Int): DataFrame = {
-    val sorted = buckets.select(array_sort(col("items")).as("sorted_items"))
-    val longTyped = {
-      val lt = org.apache.spark.sql.types.LongType
-      sigs.schema(idCol).dataType == lt && sigs.schema(hashCol).dataType == lt
-    }
-    if (longTyped)
-      sorted.select(explode(graft.functions.PairsFunctions
-          .hammingPairs(col("sorted_items"), maxHamming)).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-          col("p.hamming").as("hamming"))
-        .distinct()
-    else
-      sorted.select(explode(pairStructs(col("sorted_items"))).as("p"))
-        .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-          hamming64(col("p.a.sh"), col("p.b.sh")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
-  }
+    * the bucket membership, stream its (i < j) pairs with the exact
+    * Hamming verify inside the walk ([[graft.functions.BucketPairs]]), so
+    * a hot bucket's C(c, 2) non-matching candidates never become rows;
+    * distinct. */
+  private def sortedHammingPairs(buckets: DataFrame, maxHamming: Int): DataFrame =
+    buckets.select(graft.functions.PairsFunctions
+        .hammingPairs(sort_array(col("items")), maxHamming))
+      .distinct()
 
   /** [[simhashPairs]] under the PORTABLE hash family — the
     * oracle-checkable parameterization of the whole SimHash pipeline
@@ -822,7 +785,7 @@ object Dedup {
         col("ck.combo").as("combo"), col("ck.key").as("key"))
     val buckets = boundedBuckets(rows, Seq("combo", "key"),
       collect_set(struct(col("id"), col("sh"))), maxBucket)
-    sortedHammingPairs(sigs, idCol, hashCol, buckets, maxHamming)
+    sortedHammingPairs(buckets, maxHamming)
   }
 
   /** [[simhashPairs]] under the wide combination keys — for corpora past
@@ -1468,17 +1431,8 @@ object Dedup {
     val buckets = boundedBuckets(fpRows, Seq("fp"), collect_set(col("id")),
         maxBucket = maxDf + 1)
       .filter(size(col("items")) <= maxDf) // common fingerprint -> noise, drop
-    val sorted = buckets.select(array_sort(col("items")).as("sorted_ids"))
-    // long ids take the fused pair kernel (one codegen loop per bucket;
-    // the interpreted HOF paid a lambda dispatch per pair across every
-    // fingerprint bucket) — same dispatch as candidatePairs
-    val pairs =
-      if (base.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.functions.PairsFunctions.idPairs(col("sorted_ids"))
-      else pairStructs(col("sorted_ids"))
-    val candidates = sorted
-      .select(explode(pairs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+    val candidates = buckets
+      .select(graft.functions.PairsFunctions.idPairs(sort_array(col("items"))))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("__shared"))
       .filter(col("__shared") >= minShared).drop("__shared")
     candidates

@@ -139,6 +139,39 @@ class DeletionVectorSuite extends SparkSpec with DeltaFixtures {
     }
   }
 
+  test("a logical file is (path, deletion vector): restore undoes a vector " +
+      "change, and every remove carries the vector its add had") {
+    import graft.util.Jsons
+    import org.apache.spark.sql.functions.col
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      val w = writer
+      w.write(spark.range(0, 10).toDF("id").coalesce(1), t, DeltaWriteMode.Append)
+      assert(w.deleteWhere(t, col("id") < 2) === 2L)  // v1: the one file gains a vector
+      assert(w.deleteWhere(t, col("id") === 5) === 1L) // v2: the vector changes
+      w.restore(t, 0)                                  // v3
+      assert(w.read(t).orderBy("id").collect().map(_.getLong(0)).toSeq === (0L to 9L),
+        "restore kept the newer deletion vector")
+      // replay the raw log: a remove must name the vector of the add it ends
+      var active = Map.empty[String, Option[com.fasterxml.jackson.databind.JsonNode]]
+      var checked = 0
+      for (v <- 0L to w.latestVersion(t).get) {
+        val lines = Files.readAllLines(Paths.get(f"$t/_delta_log/$v%020d.json"))
+        val actions = (0 until lines.size).map(i => Jsons.parse(lines.get(i)))
+        for (r <- actions.flatMap(a => Option(a.get("remove")))) {
+          val path = r.get("path").asText()
+          val dv = active.getOrElse(path, fail(s"v$v removes $path, which is not active"))
+          assert(Option(r.get("deletionVector")) === dv, s"v$v remove of $path")
+          if (dv.isDefined) checked += 1
+          active -= path
+        }
+        for (a <- actions.flatMap(a => Option(a.get("add"))))
+          active += a.get("path").asText() -> Option(a.get("deletionVector"))
+      }
+      assert(checked === 2, "the v2 and v3 removes both end a file with a vector")
+    }
+  }
+
   test("deleteWhere deletes via bitmaps: no file rewrite, unions across deletes") {
     withTmpDir { tmp =>
       val t = s"$tmp/table"

@@ -1,28 +1,59 @@
 package graft
 
-import graft.functions.PairsFunctions
+import graft.functions.{BucketPairs, PairsFunctions}
 import graft.functions.TextFunctions.hamming64
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Parity laws for the fused in-bucket pair kernels
-  * ([[graft.functions.Hash64HammingPairs]] /
-  * [[graft.functions.LongIdPairs]]): pair set, pair ORDER within a
+/** Parity laws for the streaming in-bucket pair generator
+  * ([[graft.functions.BucketPairs]]): pair set, pair ORDER within a
   * bucket, emitted Hamming values, and the null semantics must all be
-  * identical to the interpreted `pairStructs` HOF formulation they
-  * replaced — rebuilt here verbatim — including the adversarial corners:
-  * null elements, null id fields, null signature fields, empty and
-  * single-member buckets, budget 0, and budget 64 (everything passes). */
+  * identical to the interpreted `pairStructs` HOF formulation it
+  * replaced — rebuilt here verbatim — for long, int and string ids,
+  * including the adversarial corners: null elements, null id fields,
+  * null signature fields, empty and single-member buckets, budget 0, and
+  * budget 64 (everything passes). Each law holds in both the whole-stage
+  * codegen and the interpreted eval path. */
 class PairsKernelSuite extends SparkSpec {
   import spark.implicits._
 
-  /** the pre-optimization HOF, verbatim from Dedup.pairStructs */
-  private def pairStructsHof(sorted: org.apache.spark.sql.Column) =
+  /** the pre-generator HOF, verbatim from Dedup.pairStructs */
+  private def pairStructsHof(sorted: Column) =
     flatten(transform(sorted, (x, i) =>
       transform(slice(sorted, i + lit(2), size(sorted)), y =>
         struct(x.as("a"), y.as("b")))))
 
   private val rng = new scala.util.Random(777)
+
+  private def fmt(r: org.apache.spark.sql.Row): String = r.mkString("|")
+
+  /** `f` under whole-stage codegen, then again on the interpreted path. */
+  private def bothPaths(f: String => Unit): Unit = {
+    f("codegen")
+    val ws = "spark.sql.codegen.wholeStage"
+    val fm = "spark.sql.codegen.factoryMode"
+    val (ws0, fm0) = (spark.conf.get(ws), spark.conf.get(fm, "FALLBACK"))
+    try {
+      spark.conf.set(ws, "false"); spark.conf.set(fm, "NO_CODEGEN")
+      f("interpreted")
+    } finally { spark.conf.set(ws, ws0); spark.conf.set(fm, fm0) }
+  }
+
+  /** Generator output per bucket, in emission order: `bucket` first,
+    * then the generator's fields. A bucket row's pairs leave the
+    * generator consecutively, so grouping the collected rows keeps it. */
+  private def perBucket(df: DataFrame): Map[Any, Seq[String]] =
+    df.collect().toSeq.groupBy(_.get(0)).map { case (b, rs) => b -> rs.map(fmt) }
+
+  /** The HOF reference in the same shape: `select` maps a pair struct
+    * `p` (and its `pos`) to the compared columns; sorted by emission. */
+  private def hofPerBucket(df: DataFrame, sorted: String)(
+      select: Column => Seq[Column], keep: Column = lit(true)): Map[Any, Seq[String]] =
+    perBucket(df.select(col("bucket"),
+        posexplode(pairStructsHof(col(sorted))).as(Seq("pos", "p")))
+      .select(Seq(col("bucket"), col("pos")) ++ select(col("p")): _*)
+      .filter(keep)
+      .orderBy("bucket", "pos").drop("pos"))
 
   private lazy val sigBuckets: DataFrame = {
     def j(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
@@ -42,66 +73,108 @@ class PairsKernelSuite extends SparkSpec {
         Seq((j(1L), j(7L)), (j(2L), null), (j(3L), j(7L))), // null sh
         Seq((j(5L), j(0L)), (j(6L), j(-1L))), // hamming 64
         Seq((j(5L), j(3L)), (j(5L), j(3L)), (j(9L), j(2L))))
-    buckets.zipWithIndex
+    val members = buckets.zipWithIndex
       .map { case (ms, i) => (i, ms.map { case (a, b) => (a, b) }) }
       .toDF("bucket", "members")
       .select(col("bucket"), col("members")
         .cast("array<struct<id: bigint, sh: bigint>>").as("members"))
+    // plus one bucket holding a null member
+    members.union(Seq(99).toDF("bucket").select(col("bucket"),
+        array(struct(lit(4L).as("id"), lit(7L).as("sh")),
+          lit(null).cast("struct<id: bigint, sh: bigint>"),
+          struct(lit(8L).as("id"), lit(6L).as("sh"))).as("members")))
       .select(col("bucket"), array_sort(col("members")).as("sorted_items"))
   }
 
-  private def fmt(r: org.apache.spark.sql.Row): String = r.mkString("|")
-
   test("hammingPairs == pairStructs + hamming filter, per budget") {
-    for (budget <- Seq(0, 3, 6, 16, 64)) {
-      // both sides ordered by (bucket, emission position): the kernel
-      // must reproduce the HOF's surviving pairs AND their relative
-      // order within every bucket
-      val nw = sigBuckets
-        .select(col("bucket"), posexplode(PairsFunctions
-          .hammingPairs(col("sorted_items"), budget)).as(Seq("pos", "p")))
-        .orderBy("bucket", "pos")
-        .select(col("bucket"), col("p.id_a"), col("p.id_b"), col("p.hamming"))
-        .collect().map(fmt)
-      val od = sigBuckets
-        .select(col("bucket"),
-          posexplode(pairStructsHof(col("sorted_items"))).as(Seq("pos", "p")))
-        .select(col("bucket"), col("pos"), col("p.a.id").as("id_a"),
-          col("p.b.id").as("id_b"),
-          hamming64(col("p.a.sh"), col("p.b.sh")).as("hamming"))
-        .filter(col("hamming") <= budget)
-        .orderBy("bucket", "pos")
-        .select(col("bucket"), col("id_a"), col("id_b"), col("hamming"))
-        .collect().map(fmt)
-      assert(nw.toSeq == od.toSeq,
-        s"budget=$budget: kernel pairs diverge from the HOF formulation")
+    val stringIds = sigBuckets.select(col("bucket"),
+      transform(col("sorted_items"), m =>
+        struct(lpad(m("id").cast("string"), 4, "0").as("id"), m("sh").as("sh")))
+        .as("sorted_items"))
+    for ((ids, idType) <- Seq(sigBuckets -> "long", stringIds -> "string");
+         budget <- Seq(0, 3, 6, 16, 64)) bothPaths { path =>
+      // both sides in emission order per bucket: the generator must
+      // reproduce the HOF's surviving pairs AND their relative order
+      val nw = perBucket(ids.select(col("bucket"),
+        PairsFunctions.hammingPairs(col("sorted_items"), budget)))
+      val od = hofPerBucket(ids, "sorted_items")(p => Seq(p("a")("id"), p("b")("id"),
+          hamming64(p("a")("sh"), p("b")("sh")).as("hamming")),
+        keep = col("hamming") <= budget)
+      assert(nw == od, s"$idType ids, budget=$budget, $path: generator pairs " +
+        "diverge from the HOF formulation")
       if (budget >= 16) assert(nw.nonEmpty, "law would be vacuous")
     }
   }
 
-  test("idPairs == pairStructs over plain long ids, order included") {
+  /** The plain-pairs law over `array<idType>` buckets with null members,
+    * empty, single-member and null buckets. */
+  private def plainParity(idType: String): Unit = {
     def j(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
     val buckets: Seq[Seq[java.lang.Long]] =
       Seq.fill(20)(Seq.fill(2 + rng.nextInt(10))(j(rng.nextInt(100).toLong))) ++
-        Seq(Seq.empty, Seq(j(3L)), Seq(j(1L), null, j(5L)))
-    val df = buckets.zipWithIndex.map { case (ms, i) => (i, ms) }
-      .toDF("bucket", "members")
+        Seq(Seq.empty, Seq(j(3L)), Seq(j(1L), null, j(5L)), null)
+    val df = buckets.zipWithIndex.map { case (ms, i) => (i, ms) }.toDF("bucket", "members")
       .select(col("bucket"),
-        array_sort(col("members").cast("array<bigint>")).as("sorted_ids"))
-    val nw = df.select(col("bucket"),
-        posexplode(PairsFunctions.idPairs(col("sorted_ids"))).as(Seq("pos", "p")))
-      .select(col("bucket"), col("pos"), col("p.a"), col("p.b"))
-      .orderBy("bucket", "pos").collect().map(fmt)
-    val od = df.select(col("bucket"),
-        posexplode(pairStructsHof(col("sorted_ids"))).as(Seq("pos", "p")))
-      .select(col("bucket"), col("pos"), col("p.a"), col("p.b"))
-      .orderBy("bucket", "pos").collect().map(fmt)
-    assert(nw.toSeq == od.toSeq)
+        array_sort(col("members").cast(s"array<$idType>")).as("sorted_ids"))
+    bothPaths { path =>
+      val nw = perBucket(df.select(col("bucket"), PairsFunctions.idPairs(col("sorted_ids"))))
+      val od = hofPerBucket(df, "sorted_ids")(p => Seq(p("a"), p("b")))
+      assert(nw == od, s"$idType ids, $path")
+      assert(nw.values.map(_.size).sum > 100, "law would be vacuous")
+    }
   }
 
-  test("operator-level law: hash64Pairs fused == HOF shape on real-ish sigs") {
-    // long ids take the kernel; STRING ids take the legacy HOF path —
-    // both must produce the same pair set modulo the id representation
+  test("idPairs == pairStructs over plain long ids, order included") {
+    plainParity("bigint")
+  }
+
+  test("idPairs == pairStructs over int and string ids, order included") {
+    plainParity("int")
+    plainParity("string")
+  }
+
+  test("output columns: names, types and nullability") {
+    val plain = Seq(Seq(1, 2)).toDF("m").select(PairsFunctions.idPairs(col("m")))
+    assert(plain.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
+      Seq(("id_a", "int", true), ("id_b", "int", true)))
+    val ham = Seq(Seq((1L, 2L))).toDF("m")
+      .select(PairsFunctions.hammingPairs(col("m").cast("array<struct<id: string, sh: bigint>>"), 3))
+    assert(ham.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
+      Seq(("id_a", "string", true), ("id_b", "string", true), ("hamming", "int", true)))
+    val bad = intercept[org.apache.spark.sql.AnalysisException](
+      Seq(Seq(1L)).toDF("m").select(PairsFunctions.hammingPairs(col("m"), 3)))
+    assert(bad.getMessage.contains("bucket_pairs"), bad.getMessage)
+  }
+
+  test("a 100,000-member bucket streams its pairs in (i, j) order, " +
+      "allocating nothing sized by C(n, 2)") {
+    val n = 100000
+    val items = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array.tabulate(n)(i => i.toLong * 3))
+    val gen = BucketPairs(org.apache.spark.sql.catalyst.expressions.Literal(null,
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)), None)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+      .asInstanceOf[com.sun.management.ThreadMXBean]
+    val tid = Thread.currentThread().getId
+    val before = mx.getThreadAllocatedBytes(tid)
+    val it = gen.pairs(items)
+    var (i, j, k) = (0, 1, 0)
+    while (k < 1000000) {
+      val r = it.next()
+      if (r.getLong(0) != i * 3L || r.getLong(1) != j * 3L)
+        fail(s"pair $k is (${r.getLong(0)}, ${r.getLong(1)}), expected ($i, $j) x 3")
+      k += 1; j += 1
+      if (j == n) { i += 1; j = i + 1 }
+    }
+    assert(it.hasNext && (i, j) == (10, 66))
+    val allocated = mx.getThreadAllocatedBytes(tid) - before
+    // the one boxed id per member is O(n); C(n, 2) is 4,999,950,000
+    assert(allocated < (64L << 20), s"allocated $allocated bytes for 10^6 pairs")
+  }
+
+  test("operator-level law: hash64Pairs over long ids == over string ids") {
+    // one generator for every id type: the same signatures keyed by long
+    // and by string ids must verify the same pairs
     val sigs = (0L until 300L).map { i =>
       val base = if (i % 3 == 0) 0x0123456789abcdefL else 0x0fedcba987654321L
       (i, base ^ (1L << (i % 7)).toLong)
@@ -120,16 +193,5 @@ class PairsKernelSuite extends SparkSpec {
       .orderBy("id_a", "id_b").collect().map(fmt)
     assert(viaLong.toSeq == viaString.toSeq)
     assert(viaLong.nonEmpty, "law would be vacuous with no pairs")
-  }
-
-  test("pairCount sizes C(n, 2) in Long and refuses buckets past array range") {
-    import graft.functions.PairsKernel.pairCount
-    assert(pairCount(0) === 0 && pairCount(1) === 0 && pairCount(2) === 1)
-    // n * (n - 1) overflows Int from here on; the count must not
-    assert(pairCount(46342) === 1073767311)
-    assert(pairCount(65536) === 2147450880)
-    val e = intercept[graft.core.GraftError](pairCount(65537))
-    assert(e.getMessage.contains("65537") && e.getMessage.contains("2147516416"),
-      e.getMessage)
   }
 }

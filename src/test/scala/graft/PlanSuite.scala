@@ -78,6 +78,25 @@ class PlanSuite extends SparkSpec {
     assert(hasCodegen(plan), "signature computation must stay inside codegen")
   }
 
+  test("pair stages stream one codegen'd bucket_pairs Generate: no pair-array explode, no lambda") {
+    assume(available)
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    // 64 distinct signatures: dense buckets, so AQE keeps the pair stage
+    val sigs = docs.select(col("doc_id"), (col("doc_id") % 64).as("sh"))
+    for ((name, df) <- Seq(
+        "minhashLshPairs" -> Dedup.minhashLshPairs(docs, "doc_id", "text"),
+        "hash64Pairs" -> Dedup.hash64Pairs(sigs, "doc_id", "sh"),
+        "winnowingPairs" -> Dedup.winnowingPairs(docs, "doc_id", "text"))) {
+      val plan = finalPlanOf(df)
+      val generates = "Generate bucket_pairs".r.findAllMatchIn(plan).size
+      val inCodegen = """\*\(\d+\) Generate bucket_pairs""".r.findAllMatchIn(plan).size
+      assert(generates == 1 && inCodegen == 1,
+        s"$name: want one bucket_pairs Generate inside whole-stage codegen:\n$plan")
+      for (gone <- Seq("flatten(", "lambdafunction", "long_id_pairs", "hash64_hamming_pairs"))
+        assert(!plan.contains(gone), s"$name: plan contains $gone:\n$plan")
+    }
+  }
+
   test("token chunking is map-only: zero exchanges, stays in codegen") {
     assume(available)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
