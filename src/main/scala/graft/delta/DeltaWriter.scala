@@ -1431,12 +1431,27 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
   /** OPTIMIZE ZORDER BY: rewrite the table along the Morton curve
     * ([[graft.operators.ZOrder]]) — interleaved bits of every given
     * column, range-partitioned into `numFiles` z-ranges — so min/max file
-    * skipping prunes on ANY of the z-ordered columns, not just the first. */
+    * skipping prunes on ANY of the z-ordered columns, not just the first.
+    * Like [[compact]] and [[purgeDeletionVectors]] it is a dataChange=false
+    * rewrite of one snapshot's files: tailing readers see no new data, an
+    * append-only table allows it, the partition layout stays, and an
+    * append landing meanwhile stays active. Returns the committed version
+    * (the snapshot's own for an empty table). */
   def optimizeZOrder(tablePath: String, cols: Seq[String], numFiles: Int = 8): Long = {
-    val df = graft.operators.ZOrder.cluster(read(tablePath), cols, numFiles)
-    // a partitioned table keeps its layout through the rewrite
-    write(df, tablePath, DeltaWriteMode.Overwrite,
-      partitionBy = partitionColumnsOf(tablePath))
+    val snap = snapshot(tablePath)
+      .getOrElse(throw new GraftError(s"not a delta table: $tablePath"))
+    if (snap.adds.isEmpty) return snap.version
+    // the rewrite reads and writes physical names on a mapped table
+    val toPhys = snap.schema.filter(ColumnMapping.isMapped)
+      .map(ColumnMapping.physicalNames).getOrElse(Map.empty[String, String])
+    val df = graft.operators.ZOrder.cluster(readPhysical(snap, snap.adds),
+      cols.map(c => toPhys.getOrElse(c, c)), numFiles)
+    val parts = writeDataParts(df, new Path(tablePath), partitionColumnsOf(snap),
+      prefix = "zorder")
+    commitWithRetry(tablePath, _ =>
+        DeltaWriter.optimizeBody("OPTIMIZE", snap.adds, parts),
+      DeltaWriter.conflictReason("OPTIMIZE", snap.adds.map(_.path), None, _),
+      readVersion = Some(snap.version))
   }
 }
 

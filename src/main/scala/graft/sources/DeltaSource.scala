@@ -3,7 +3,7 @@ package graft.sources
 import com.fasterxml.jackson.databind.JsonNode
 import graft.Cdc
 import graft.core._
-import graft.delta.{ColumnMapping, DeltaAction, DeltaLogReader, DvDescriptor, DvScan}
+import graft.delta.{ColumnMapping, DeletionVector, DeltaLogReader, DvDescriptor, DvScan}
 import graft.functions.BatchConst
 import graft.util.Jsons
 import org.apache.hadoop.conf.Configuration
@@ -41,21 +41,24 @@ case class DeltaSourceOptions(
     ignoreChanges: Boolean = false,
     readChangeFeed: Boolean = false)
 
-/** A planned CDF entry: file + how to interpret it. Kinds: `cdc` (a
-  * writer-emitted change file), `insert` (an add served as inserts),
-  * `dv_delete` (a deletion-vector update — the deltas are the rows in
-  * `newDv` minus `oldDv`), `dv_delete_full` (a file fully deleted via
-  * DVs — every row surviving `oldDv` is a delta). */
+/** A planned entry: file + how to interpret it. Kinds: `cdc` (a
+  * writer-emitted change file), `insert` (an add served as inserts — a
+  * plain tail's and a snapshot page's every entry; `newDv` is the add's
+  * deletion vector, applied at read), `dv_delete` (a deletion-vector
+  * update — the deltas are the rows in `newDv` minus `oldDv`),
+  * `dv_delete_full` (a file fully deleted via DVs — every row surviving
+  * `oldDv` is a delta). */
 private[sources] case class CdfEntry(path: String, size: Long, kind: String,
     version: Long, tsMs: Long,
     oldDv: Option[DvDescriptor] = None, newDv: Option[DvDescriptor] = None)
 
-/** Incremental Delta-table planner: initial-snapshot paging, log tailing
-  * with the `ignoreDeletes`/`ignoreChanges`/`dataChange=false` matrix, and
-  * Change-Data-Feed planning — a re-implementation of delta-spark's
-  * streaming `DeltaSource` offsets (`reservoirVersion`/`index`/
-  * `isStartingVersion`), following reference
-  * `checkpoints/delta.py:634-1040`.
+/** Incremental Delta-table planner: initial-snapshot paging, then one
+  * tail walk over the log, for plain tailing (the `ignoreDeletes`/
+  * `ignoreChanges`/`dataChange=false` matrix) and Change-Data-Feed alike
+  * — a re-implementation of delta-spark's streaming `DeltaSource` offsets
+  * (`reservoirVersion`/`index`/`isStartingVersion`), following reference
+  * `checkpoints/delta.py:634-1040`. Snapshot pages and tail batches take
+  * entries under the one [[Admission]] rule the file source uses.
   *
   * Offset model (stored per batch in the WAL): position AFTER the batch —
   * `(table_id, version, index, is_initial)`; `index = -1` means the version
@@ -73,7 +76,7 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
       Jsons.optBool(n, "is_initial").getOrElse(false))
 
   private def offsetJson(tableId: String, p: Position,
-      cdf: Seq[CdfEntry], dvs: Seq[(String, DvDescriptor)] = Seq.empty): JsonNode = {
+      cdf: Seq[CdfEntry], dvs: Seq[(String, DvDescriptor)]): JsonNode = {
     val o = Jsons.obj()
     o.put("source", "delta")
     o.put("table_id", tableId)
@@ -88,7 +91,8 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
         eo.put("version", e.version); eo.put("ts_ms", e.tsMs)
         e.oldDv.foreach(d =>
           eo.set[JsonNode]("old_dv", DeltaTableCheckpoint.dvToJson(d)))
-        e.newDv.foreach(d =>
+        // an insert's vector is read from `dv_files`
+        e.newDv.filter(_ => e.kind != "insert").foreach(d =>
           eo.set[JsonNode]("new_dv", DeltaTableCheckpoint.dvToJson(d)))
         arr.add(eo)
       }
@@ -173,26 +177,6 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
   private def lastCommittedPosition(): Option[Position] =
     wal.latestCommitId().map(id => positionFromJson(wal.readOffset(id).offset))
 
-  // ---- admission ---------------------------------------------------------
-
-  /** Cap (files, bytes); an oversized first file is always admitted
-    * (reference delta.py:663-667). Returns (admitted, truncated). */
-  private def admit[T](candidates: Seq[T], size: T => Long,
-      opts: DeltaSourceOptions, alreadyFiles: Int, alreadyBytes: Long): (Seq[T], Boolean) = {
-    var files = alreadyFiles
-    var bytes = alreadyBytes
-    val out = Seq.newBuilder[T]
-    var truncated = false
-    candidates.foreach { c =>
-      val overFiles = opts.maxFilesPerTrigger.exists(m => files + 1 > m)
-      val overBytes = opts.maxBytesPerTrigger.exists(m => bytes + size(c) > m) &&
-        (files > 0) // first file always admitted
-      if (truncated || overFiles || overBytes) truncated = true
-      else { out += c; files += 1; bytes += size(c) }
-    }
-    (out.result(), truncated)
-  }
-
   // ---- planning ----------------------------------------------------------
 
   def planBatch(tablePath: String, opts: DeltaSourceOptions): Option[BatchInfo] = {
@@ -204,206 +188,143 @@ class DeltaTableCheckpoint(val checkpointDir: String, val conf: Configuration) {
     }
     val planned =
       if (position.isInitial) planSnapshot(tablePath, tableId, position, opts)
-      else if (opts.readChangeFeed) planCdf(tablePath, tableId, position, opts)
-      else planLog(tablePath, tableId, position, opts)
+      else planTail(tablePath, tableId, position, opts)
     planned.map { b => wal.writeOffset(b); b }
   }
 
-  /** Initial snapshot paging (reference delta.py:634-695,992-1022).
-    * Under `readChangeFeed` the snapshot files are served as
-    * `change_type='insert'` entries at the snapshot version (reference
-    * delta.py:964,1003; delta-spark does the same), so the initial state
-    * flows through the CDF reader instead of being dropped. */
+  /** Initial snapshot paging (reference delta.py:634-695,992-1022): the
+    * snapshot's files, served as `insert` entries at the snapshot version
+    * — under `readChangeFeed` the initial state flows through the CDF
+    * reader as `change_type='insert'` rows (reference delta.py:964,1003;
+    * delta-spark does the same) instead of being dropped. */
   private def planSnapshot(tablePath: String, tableId: String, pos: Position,
       opts: DeltaSourceOptions): Option[BatchInfo] = {
     // every page reads the files and their deletion vectors from one
     // snapshot of the frozen version (a cache hit while no newer version
     // of the table has been read)
-    val files = log.snapshot(tablePath, pos.version).adds
-    if (pos.index >= files.size) {
-      // snapshot finished -> switch to tailing after the snapshot version
-      val after = Position(pos.version, -1, isInitial = false)
-      return if (opts.readChangeFeed) planCdf(tablePath, tableId, after, opts)
-      else planLog(tablePath, tableId, after, opts)
-    }
-    val remaining = files.drop(pos.index.toInt)
-    val (admitted, _) = admit[DeltaAction.AddFile](remaining, _.size, opts, 0, 0L)
-    val taken = if (admitted.isEmpty) remaining.take(1) else admitted
-    val newIndex = pos.index + taken.size
-    val entries = taken.map(a => FileEntry(log.resolvePath(tablePath, a.path), a.size, 0L))
-    val cdf =
-      if (!opts.readChangeFeed) Seq.empty[CdfEntry]
-      else {
-        val ts = if (log.commitExists(tablePath, pos.version))
-          log.readCommit(tablePath, pos.version).timestampMs.getOrElse(0L)
-        else 0L
-        taken.map(a => CdfEntry(a.path, a.size, "insert", pos.version, ts))
-      }
-    Some(BatchInfo(wal.nextBatchId(), entries,
-      offsetJson(tableId, Position(pos.version, newIndex, isInitial = true), cdf,
-        taken.flatMap(a => a.deletionVector.map(a.path -> _)))))
+    val snap = log.snapshot(tablePath, pos.version)
+    val remaining = snap.adds.drop(pos.index.toInt)
+    if (remaining.isEmpty) // snapshot finished -> tail after its version
+      return planTail(tablePath, tableId, Position(pos.version, -1, isInitial = false), opts)
+    // a snapshot based on a checkpoint AT this version has not read the commit
+    val ts = snap.commitTs.get(pos.version).orElse(
+      if (log.commitExists(tablePath, pos.version))
+        log.readCommit(tablePath, pos.version).timestampMs
+      else None).getOrElse(0L)
+    val page = Admission.admit[CdfEntry](remaining.map(a =>
+        CdfEntry(a.path, a.size, "insert", pos.version, ts, newDv = a.deletionVector)),
+      _.size, opts.maxFilesPerTrigger, opts.maxBytesPerTrigger)
+    Some(batchOf(tablePath, tableId,
+      Position(pos.version, pos.index + page.size, isInitial = true), page, opts))
   }
 
-  /** Log tailing (reference delta.py:697-787). */
-  private def planLog(tablePath: String, tableId: String, pos: Position,
+  /** The one tail walk, plain and change-feed alike (reference
+    * delta.py:697-896): lists `_delta_log` once, then takes the entries
+    * [[commitEntries]] gives for each listed version that follows `pos`
+    * without a gap, until the admission caps stop it — mid-version, the
+    * position records how many of that version's entries were taken. */
+  private def planTail(tablePath: String, tableId: String, pos: Position,
       opts: DeltaSourceOptions): Option[BatchInfo] = {
+    val listed = log.listVersions(tablePath).toSet
     var v = if (pos.index == -1) pos.version + 1 else pos.version
-    var skipInVersion = if (pos.index == -1) 0L else pos.index
-    val collected = Seq.newBuilder[DeltaAction.AddFile]
+    var skip = if (pos.index == -1) 0L else pos.index
+    val taken = Seq.newBuilder[CdfEntry]
     var nFiles = 0
     var bytes = 0L
-    var endPos = pos
+    var end = pos
     var stop = false
-    while (!stop && log.commitExists(tablePath, v)) {
-      val commit = log.readCommit(tablePath, v)
-      val adds = commit.adds.filter(_.dataChange)
-      val removes = commit.removes.filter(_.dataChange)
-      // a DELETE-with-DV commit is a remove + re-add of the same path: like
-      // any update it needs ignoreChanges, and the re-served file then
-      // streams its SURVIVING rows (vector applied at read) — delta-spark's
-      // contract: ignoreChanges re-emits updated files, never deleted rows
-      if (removes.nonEmpty && !opts.ignoreChanges) {
-        if (adds.isEmpty && opts.ignoreDeletes) {
-          // delete-only commit, explicitly ignored
-        } else {
-          throw new PlanningError(
-            s"detected ${if (adds.isEmpty) "deleted data" else "a data update"} " +
-            s"in commit version $v of $tablePath; set " +
-            s"${if (adds.isEmpty) "ignore_deletes" else "ignore_changes"} to proceed")
-        }
-      }
-      val fresh = adds.drop(skipInVersion.toInt)
-      val (admitted, truncated) = admit[DeltaAction.AddFile](fresh, _.size, opts, nFiles, bytes)
-      val taken =
-        if (admitted.isEmpty && fresh.nonEmpty && nFiles == 0) fresh.take(1)
-        else admitted
-      taken.foreach { a => collected += a; nFiles += 1; bytes += a.size }
-      if ((truncated || (taken.size < fresh.size)) && fresh.nonEmpty) {
-        endPos = Position(v, skipInVersion + taken.size, isInitial = false)
+    while (!stop && listed(v)) {
+      val fresh = commitEntries(tablePath, v, opts).drop(skip.toInt)
+      val admitted = Admission.admit[CdfEntry](fresh, _.size,
+        opts.maxFilesPerTrigger, opts.maxBytesPerTrigger, nFiles, bytes)
+      admitted.foreach { e => taken += e; nFiles += 1; bytes += e.size }
+      if (admitted.size < fresh.size) {
+        end = Position(v, skip + admitted.size, isInitial = false)
         stop = true
       } else {
-        endPos = Position(v, -1, isInitial = false)
+        end = Position(v, -1, isInitial = false)
         v += 1
-        skipInVersion = 0
-        if (opts.maxFilesPerTrigger.exists(nFiles >= _)) stop = true
+        skip = 0
+        stop = opts.maxFilesPerTrigger.exists(nFiles >= _)
       }
     }
-    val files = collected.result()
-    if (files.isEmpty) {
-      // Nothing read and the next version is missing: either we're caught
-      // up (no newer commits — normal idle) or the log was PRUNED past our
-      // position (commits newer than v survive but v itself is gone —
-      // e.g. `earliest` start on a checkpointed table, or a consumer that
-      // fell behind the table's log retention). Idling silently on the
-      // second case would skip data forever.
-      requireNotPruned(tablePath, v)
-      None
-    } else Some(BatchInfo(wal.nextBatchId(),
-      files.map(a => FileEntry(log.resolvePath(tablePath, a.path), a.size, 0L)),
-      offsetJson(tableId, endPos, Seq.empty,
-        files.flatMap(a => a.deletionVector.map(a.path -> _)))))
-  }
-
-  /** Throws when `nextVersion` is missing from the log while NEWER commits
-    * survive — the tail position was pruned away and tailing can't resume
-    * without losing data. */
-  private def requireNotPruned(tablePath: String, nextVersion: Long): Unit = {
-    val surviving = log.listVersions(tablePath)
-    if (surviving.exists(_ > nextVersion) && !surviving.contains(nextVersion)) {
-      val earliest = surviving.filter(_ > nextVersion).min
+    val entries = taken.result()
+    if (entries.nonEmpty) Some(batchOf(tablePath, tableId, end, entries, opts))
+    else if (!listed(v) && listed.exists(_ > v)) {
+      // Nothing taken and the next version is missing while NEWER commits
+      // survive: the log was PRUNED past our position (e.g. `earliest`
+      // start on a checkpointed table, or a consumer that fell behind the
+      // table's log retention). Idling silently would skip data forever.
       throw new PlanningError(
-        s"delta log at $tablePath no longer has version $nextVersion " +
-        s"(earliest surviving commit: $earliest); the consumer fell behind " +
-        "the table's log retention. Reset the checkpoint (or start from " +
-        "snapshot) to continue — resuming here would silently skip data")
+        s"delta log at $tablePath no longer has version $v " +
+        s"(earliest surviving commit: ${listed.filter(_ > v).min}); the consumer " +
+        "fell behind the table's log retention. Reset the checkpoint (or start " +
+        "from snapshot) to continue — resuming here would silently skip data")
+    } else None // caught up
+  }
+
+  /** What commit `v` contributes to a tail batch (reference
+    * delta.py:697-787,811-896,501-546). Plain tailing: its dataChange
+    * adds, behind the `ignoreDeletes`/`ignoreChanges` checks. Change feed:
+    * its `cdc` files when it has any; else a DELETE reconstructed from its
+    * deletion vectors and removes; else its adds as inserts; a commit that
+    * updates data any other way is an error. */
+  private def commitEntries(tablePath: String, v: Long,
+      opts: DeltaSourceOptions): Seq[CdfEntry] = {
+    val commit = log.readCommit(tablePath, v)
+    val ts = commit.timestampMs.getOrElse(0L)
+    val adds = commit.adds.filter(_.dataChange)
+    val removes = commit.removes.filter(_.dataChange)
+    // insert adds may carry DVs (a DELETE-with-DV re-add under
+    // ignoreChanges, RESTORE re-adding a DV'd file): they stream their
+    // SURVIVING rows — delta-spark's contract: ignoreChanges re-emits
+    // updated files, never deleted rows
+    def inserts = adds.map(a => CdfEntry(a.path, a.size, "insert", v, ts, newDv = a.deletionVector))
+    if (!opts.readChangeFeed) {
+      // a DELETE-with-DV commit is a remove + re-add of the same path: like
+      // any update it needs ignoreChanges
+      if (removes.nonEmpty && !opts.ignoreChanges && !(adds.isEmpty && opts.ignoreDeletes))
+        throw new PlanningError(
+          s"detected ${if (adds.isEmpty) "deleted data" else "a data update"} " +
+          s"in commit version $v of $tablePath; set " +
+          s"${if (adds.isEmpty) "ignore_deletes" else "ignore_changes"} to proceed")
+      inserts
+    }
+    else if (commit.cdcs.nonEmpty) commit.cdcs.map(c => CdfEntry(c.path, c.size, "cdc", v, ts))
+    else if (removes.isEmpty) inserts
+    else {
+      val removePaths = removes.map(_.path).toSet
+      if (!adds.forall(a => a.deletionVector.isDefined && removePaths(a.path)))
+        throw new ChangeDataFeedError(
+          s"commit version $v of $tablePath updates data but has no cdc files; " +
+          "cannot serve Change Data Feed")
+      // a DELETE commit, reconstructible WITHOUT cdc files per the delta
+      // protocol's CDF section: either the deletion-vector shape (every
+      // add re-adds a removed path with a widened vector — the deltas are
+      // new DV minus old DV) or a plain remove-only commit / fully-deleted
+      // file (all prior survivors of the removed file are the deltas).
+      // delta-spark serves CDF for DV deletes the same way. Rewrite-style
+      // updates (plain adds + removes) stay refusals above — rewritten
+      // files would double-emit carried rows as churn.
+      val prior = log.snapshot(tablePath, v - 1).files
+      val addPaths = adds.map(_.path).toSet
+      adds.map(a => CdfEntry(a.path, a.size, "dv_delete", v, ts,
+        oldDv = prior.get(a.path).flatMap(_.deletionVector), newDv = a.deletionVector)) ++
+      removes.filterNot(r => addPaths(r.path)).flatMap(r => prior.get(r.path)).map(pa =>
+        CdfEntry(pa.path, pa.size, "dv_delete_full", v, ts, oldDv = pa.deletionVector))
     }
   }
 
-  /** CDF planning: prefer `cdc` actions; fall back to treating `add`s as
-    * inserts; a commit with removes but no cdc files is an error
-    * (reference delta.py:811-896,501-546). */
-  private def planCdf(tablePath: String, tableId: String, pos: Position,
-      opts: DeltaSourceOptions): Option[BatchInfo] = {
-    var v = if (pos.index == -1) pos.version + 1 else pos.version
-    var skipInVersion = if (pos.index == -1) 0L else pos.index
-    val collected = Seq.newBuilder[CdfEntry]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, DvDescriptor]
-    var nFiles = 0
-    var bytes = 0L
-    var endPos = pos
-    var stop = false
-    while (!stop && log.commitExists(tablePath, v)) {
-      val commit = log.readCommit(tablePath, v)
-      val ts = commit.timestampMs.getOrElse(0L)
-      val entries: Seq[CdfEntry] =
-        if (commit.cdcs.nonEmpty)
-          commit.cdcs.map(c => CdfEntry(c.path, c.size, "cdc", v, ts))
-        else {
-          val adds = commit.adds.filter(_.dataChange)
-          val removes = commit.removes.filter(_.dataChange)
-          val removePaths = removes.map(_.path).toSet
-          if (removes.nonEmpty &&
-              adds.forall(a => a.deletionVector.isDefined && removePaths(a.path))) {
-            // a DELETE commit, reconstructible WITHOUT cdc files per the
-            // delta protocol's CDF section: either the deletion-vector
-            // shape (every add re-adds a removed path with a widened
-            // vector — the deltas are new DV minus old DV) or a plain
-            // remove-only commit / fully-deleted file (all prior
-            // survivors of the removed file are the deltas). delta-spark
-            // serves CDF for DV deletes the same way. Rewrite-style
-            // updates (plain adds + removes) stay refusals below —
-            // rewritten files would double-emit carried rows as churn.
-            val prior = graft.delta.DeltaStats
-              .activeAdds(log, tablePath, v - 1).map(a => a.path -> a).toMap
-            val addPaths = adds.map(_.path).toSet
-            adds.map(a => CdfEntry(a.path, a.size, "dv_delete", v, ts,
-              oldDv = prior.get(a.path).flatMap(_.deletionVector),
-              newDv = a.deletionVector)) ++
-            removes.filterNot(r => addPaths(r.path))
-              .flatMap(r => prior.get(r.path)).map(pa =>
-                CdfEntry(pa.path, pa.size, "dv_delete_full", v, ts,
-                  oldDv = pa.deletionVector))
-          }
-          else if (removes.nonEmpty)
-            throw new ChangeDataFeedError(
-              s"commit version $v of $tablePath updates data but has no cdc files; " +
-              "cannot serve Change Data Feed")
-          else {
-            // insert-fallback adds may carry DVs (e.g. RESTORE re-adding a
-            // DV'd file): serve the surviving rows. Keyed by path, newest
-            // version wins — our own commits never reuse a data-file path
-            adds.foreach(a => a.deletionVector.foreach(d => dvs.put(a.path, d)))
-            adds.map(a => CdfEntry(a.path, a.size, "insert", v, ts))
-          }
-        }
-      val fresh = entries.drop(skipInVersion.toInt)
-      val (admitted, truncated) = admit[CdfEntry](fresh, _.size, opts, nFiles, bytes)
-      val taken =
-        if (admitted.isEmpty && fresh.nonEmpty && nFiles == 0) fresh.take(1)
-        else admitted
-      taken.foreach { e => collected += e; nFiles += 1; bytes += e.size }
-      if ((truncated || taken.size < fresh.size) && fresh.nonEmpty) {
-        endPos = Position(v, skipInVersion + taken.size, isInitial = false)
-        stop = true
-      } else {
-        endPos = Position(v, -1, isInitial = false)
-        v += 1
-        skipInVersion = 0
-        if (opts.maxFilesPerTrigger.exists(nFiles >= _)) stop = true
-      }
-    }
-    val entries = collected.result()
-    if (entries.isEmpty) {
-      requireNotPruned(tablePath, v) // same silent-skip hazard as planLog
-      None
-    } else {
-      val takenPaths = entries.map(_.path).toSet
-      Some(BatchInfo(wal.nextBatchId(),
-        entries.map(e => FileEntry(log.resolvePath(tablePath, e.path), e.size, e.tsMs)),
-        offsetJson(tableId, endPos, entries,
-          dvs.toSeq.filter { case (p, _) => takenPaths(p) })))
-    }
-  }
+  /** The batch that takes `entries` and ends at `end`, for snapshot pages
+    * and tail batches alike: each file carries its commit timestamp; the
+    * offset holds the CDF entries (change feed only) and, as `dv_files`,
+    * the deletion vectors of the taken insert entries. */
+  private def batchOf(tablePath: String, tableId: String, end: Position,
+      entries: Seq[CdfEntry], opts: DeltaSourceOptions): BatchInfo =
+    BatchInfo(wal.nextBatchId(),
+      entries.map(e => FileEntry(log.resolvePath(tablePath, e.path), e.size, e.tsMs)),
+      offsetJson(tableId, end, if (opts.readChangeFeed) entries else Seq.empty,
+        entries.filter(_.kind == "insert").flatMap(e => e.newDv.map(e.path -> _))))
 
   def commitBatch(batch: BatchInfo, metadata: Map[String, String]): Unit =
     wal.commit(batch.batchId, metadata)
@@ -458,80 +379,65 @@ class DeltaSource(
 
   def planBatch(): Option[BatchInfo] = checkpoint.planBatch(tablePath, options)
 
-  def readBatch(spark: SparkSession, batch: BatchInfo): DataFrame = {
-    if (options.readChangeFeed) return readCdfBatch(spark, batch)
-    if (batch.files.isEmpty) spark.emptyDataFrame
-    else {
-      val hasDvs = checkpoint.dvFilesOf(batch.offset).nonEmpty
-      applyDvs(spark, batch, ColumnMapping.readFiles(spark, checkpoint.log, tablePath,
-        batch.paths, keepMeta = hasDvs))
-    }
+  def readBatch(spark: SparkSession, batch: BatchInfo): DataFrame =
+    if (options.readChangeFeed) readCdfBatch(spark, batch)
+    else if (batch.files.isEmpty) spark.emptyDataFrame
+    else scanSurviving(spark, batch.paths, dvsOf(batch))
+
+  /** A table file's key in a deletion-vector map: its normalized
+    * absolute path, as [[graft.delta.DvScan]] addresses files. */
+  private def dvKey(path: String): String =
+    DeletionVector.normUri(checkpoint.log.resolvePath(tablePath, path))
+
+  /** The batch's planned deletion vectors (offset `dv_files`). */
+  private def dvsOf(batch: BatchInfo): Map[String, DvDescriptor] =
+    checkpoint.dvFilesOf(batch.offset).map { case (p, d) => dvKey(p) -> d }.toMap
+
+  /** Read `paths` so a DV-bearing file streams only its SURVIVING rows —
+    * descriptors broadcast, bitmaps lazy-load on executors
+    * ([[graft.delta.DvScan]]); delta-spark streams DV tables the same way.
+    * The filter sits directly on the scan (hidden `_metadata` columns do
+    * not resolve through a union); mapped tables keep `_metadata` through
+    * their projection (`readFiles` keepMeta) and drop it afterwards. */
+  private def scanSurviving(spark: SparkSession, paths: Seq[String],
+      dvs: Map[String, DvDescriptor]): DataFrame = {
+    val mine = paths.map(dvKey).flatMap(k => dvs.get(k).map(k -> _)).toMap
+    val scan = ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths,
+      keepMeta = mine.nonEmpty)
+    if (mine.isEmpty) scan
+    else DvScan.filterDeleted(spark, tablePath, mine, scan, conf).drop("_metadata")
   }
 
-  /** Apply the batch's planned deletion vectors (offset `dv_files`) so a
-    * DV-bearing add streams its SURVIVING rows — descriptors broadcast,
-    * bitmaps lazy-load on executors ([[graft.delta.DvScan]]). delta-spark
-    * streams DV tables the same way. Mapped tables keep `_metadata`
-    * through their projection (`readFiles` keepMeta) so the filter can
-    * resolve provenance; the helper column is dropped afterwards. */
-  private def applyDvs(spark: SparkSession, batch: BatchInfo,
-      df: DataFrame): DataFrame = {
-    val dvs = checkpoint.dvFilesOf(batch.offset)
-    if (dvs.isEmpty) return df
-    val byPath = dvs.map { case (p, d) =>
-      graft.delta.DeletionVector.normUri(
-        checkpoint.log.resolvePath(tablePath, p)) -> d }.toMap
-    graft.delta.DvScan.filterDeleted(spark, tablePath, byPath, df, conf)
-      .drop("_metadata")
-  }
-
-  /** CDF read: cdc files already carry `_change_type`; insert-fallback adds
-    * get it injected; both get commit version/timestamp columns. */
+  /** CDF read: cdc files already carry `_change_type`; insert and delete
+    * entries get it injected; all get commit version/timestamp columns. */
   private def readCdfBatch(spark: SparkSession, batch: BatchInfo): DataFrame = {
     val entries = checkpoint.cdfEntriesOf(batch.offset)
     if (entries.isEmpty) return spark.emptyDataFrame
-    // DV filtering must sit directly on each group's scan: hidden
-    // _metadata columns do not resolve through the union below
-    val dvByPath = checkpoint.dvFilesOf(batch.offset).map { case (p, d) =>
-      graft.delta.DeletionVector.normUri(
-        checkpoint.log.resolvePath(tablePath, p)) -> d }.toMap
+    val dvs = dvsOf(batch)
     val groups = entries.groupBy(e => (e.kind, e.version, e.tsMs)).toSeq
       .sortBy { case ((_, v, _), _) => v }
     val frames = groups.map { case ((kind, version, ts), es) =>
-      def norm(p: String) = graft.delta.DeletionVector.normUri(
-        checkpoint.log.resolvePath(tablePath, p))
       val paths = es.map(e => checkpoint.log.resolvePath(tablePath, e.path))
-      // cdc files store `_change_type` under its literal (unmapped) name —
-      // on a column-mapped table the logical projection must pass it
-      // through or every change row loses its type; DV-filtered kinds keep
-      // `_metadata` through the mapped projection for row provenance
-      val scan =
-        if (kind == "cdc") ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths,
+      val rows = kind match {
+        // cdc files never carry DVs, and store `_change_type` under its
+        // literal (unmapped) name — on a column-mapped table the logical
+        // projection must pass it through or every change row loses its type
+        case "cdc" => ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths,
           passthrough = Seq(org.apache.spark.sql.types.StructField(Cdc.ChangeTypeCol,
             org.apache.spark.sql.types.StringType)))
-        else ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths, keepMeta = true)
-      val base = (kind match {
-        case "cdc" => scan // cdc files never carry DVs
         case "dv_delete" | "dv_delete_full" =>
           // the DELETED rows of a DV commit: new vector minus old vector
           // (no new vector = whole file removed, all survivors deleted)
-          graft.delta.DvScan.filterToDeltas(spark, tablePath,
-            es.flatMap(e => e.newDv.map(d => norm(e.path) -> d)).toMap,
-            es.flatMap(e => e.oldDv.map(d => norm(e.path) -> d)).toMap,
-            scan, conf)
-        case _ => graft.delta.DvScan.filterDeleted(spark, tablePath,
-          dvByPath.view.filterKeys(paths.map(
-            graft.delta.DeletionVector.normUri).toSet).toMap, scan, conf)
-      }).drop("_metadata")
-      val withType = kind match {
-        case "cdc" => base
-        case "dv_delete" | "dv_delete_full" =>
-          base.withColumn(Cdc.ChangeTypeCol, lit("delete"))
-        case _ => base.withColumn(Cdc.ChangeTypeCol, lit("insert"))
+          def byKey(dv: CdfEntry => Option[DvDescriptor]) =
+            es.flatMap(e => dv(e).map(dvKey(e.path) -> _)).toMap
+          DvScan.filterToDeltas(spark, tablePath, byKey(_.newDv), byKey(_.oldDv),
+            ColumnMapping.readFiles(spark, checkpoint.log, tablePath, paths, keepMeta = true),
+            conf).drop("_metadata").withColumn(Cdc.ChangeTypeCol, lit("delete"))
+        case _ => scanSurviving(spark, paths, dvs).withColumn(Cdc.ChangeTypeCol, lit("insert"))
       }
       // bound by reference, not as literals: a literal's value lands in
       // the generated source, so every batch would recompile its stages
-      withType
+      rows
         .withColumn(Cdc.CommitVersionCol, BatchConst.long(version))
         .withColumn(Cdc.CommitTimestampCol, BatchConst.timestampMs(ts))
     }

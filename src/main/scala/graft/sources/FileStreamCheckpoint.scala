@@ -242,25 +242,6 @@ class FileStreamCheckpoint(val checkpointDir: String, val conf: Configuration) {
 
   // ---- planning ----------------------------------------------------------
 
-  /** Cap candidates by maxFiles / maxBytes; a single oversized file is still
-    * admitted so progress is guaranteed (reference `file.py:414-430`). */
-  private def admit(candidates: Seq[FileEntry], opts: FileSourceOptions): Seq[FileEntry] = {
-    val byFiles = opts.maxFilesPerTrigger.map(candidates.take).getOrElse(candidates)
-    opts.maxBytesPerTrigger match {
-      case None => byFiles
-      case Some(maxBytes) =>
-        var total = 0L
-        val out = Seq.newBuilder[FileEntry]
-        var done = false
-        byFiles.foreach { f =>
-          if (!done && (total == 0L || total + f.size <= maxBytes)) {
-            out += f; total += f.size
-          } else done = true
-        }
-        out.result()
-    }
-  }
-
   /** Plan the next batch; None = idle. Recovery first: an offset without a
     * commit is replayed with the same id and file set. */
   def planBatch(inputDir: String, opts: FileSourceOptions): Option[BatchInfo] = {
@@ -292,7 +273,8 @@ class FileStreamCheckpoint(val checkpointDir: String, val conf: Configuration) {
       }
     }
     if (candidates.isEmpty) return None
-    val admitted = admit(candidates, opts)
+    val admitted = Admission.admit[FileEntry](candidates, _.size,
+      opts.maxFilesPerTrigger, opts.maxBytesPerTrigger)
     val offset = Jsons.obj()
     offset.put("source", "files")
     offset.put("input_dir", inputDir)

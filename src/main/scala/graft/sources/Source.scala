@@ -15,3 +15,23 @@ trait Source {
   def checkpointDir: String
   def conf: Configuration
 }
+
+/** The one admission rule for every source batch — file, Delta and CDF
+  * (reference `checkpoints/file.py:414-430`, `delta.py:649-667`): the
+  * longest prefix of `candidates` that keeps the batch within `maxFiles`
+  * entries and `maxBytes` bytes, counting the `files` and `bytes` the
+  * batch already holds. A batch's first entry is always admitted, however
+  * large, so an oversized entry still makes progress. */
+object Admission {
+  def admit[T](candidates: Seq[T], size: T => Long, maxFiles: Option[Int],
+      maxBytes: Option[Long], files: Int = 0, bytes: Long = 0L): Seq[T] = {
+    var n = files
+    var total = bytes
+    candidates.takeWhile { c =>
+      val fits = n == 0 ||
+        (maxFiles.forall(n < _) && maxBytes.forall(total + size(c) <= _))
+      if (fits) { n += 1; total += size(c) }
+      fits
+    }
+  }
+}

@@ -119,6 +119,10 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
       w.compact(t, smallFileBytes = 1024L * 1024)
       assert(w.read(t).orderBy("id").as[(Long, String)].collect().toSeq ===
         Seq((1L, "a"), (2L, "b"), (3L, "c")))
+      // so does a z-order rewrite
+      w.optimizeZOrder(t, Seq("id"), numFiles = 2)
+      assert(w.read(t).orderBy("id").as[(Long, String)].collect().toSeq ===
+        Seq((1L, "a"), (2L, "b"), (3L, "c")))
     }
   }
 

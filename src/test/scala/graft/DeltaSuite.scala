@@ -2639,6 +2639,29 @@ class DeltaWriterSuite extends SparkSpec with DeltaFixtures {
     }
   }
 
+  test("z-order rewrites invisibly to plain and change-feed tailing readers") {
+    withTmpDir { tmp =>
+      val t = s"$tmp/table"
+      val w = writer
+      w.write(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), t, DeltaWriteMode.Append)
+      val plain = new DeltaSource(t, new DeltaTableCheckpoint(s"$tmp/cp-plain", conf),
+        DeltaSourceOptions(startOffset = DeltaStartOffset.Latest))
+      val cdf = new DeltaSource(t, new DeltaTableCheckpoint(s"$tmp/cp-cdf", conf),
+        DeltaSourceOptions(startOffset = DeltaStartOffset.Latest, readChangeFeed = true))
+      Seq(plain, cdf).foreach(s => assert(s.planBatch().isEmpty))
+      w.write(Seq((3L, 30L)).toDF("id", "v"), t, DeltaWriteMode.Append)
+      w.optimizeZOrder(t, Seq("id", "v"), numFiles = 2)
+      assert(w.read(t).count() === 3)
+      // the tails plan the append and no batch for the rewrite
+      Seq(plain, cdf).foreach { s =>
+        val b = s.planBatch().get
+        assert(s.readBatch(spark, b).select("id").as[Long].collect().toSeq === Seq(3L))
+        s.commitBatch(b, Map.empty)
+        assert(s.planBatch().isEmpty)
+      }
+    }
+  }
+
   test("optimistic retry: two concurrent appenders both land every commit") {
     withTmpDir { tmp =>
       val t = s"$tmp/table"

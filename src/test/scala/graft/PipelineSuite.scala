@@ -6,6 +6,7 @@ import graft.sources._
 import graft.util.{Fs, Jsons}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 
 import java.io.File
 import java.nio.file.{Files, Paths, StandardOpenOption}
@@ -75,16 +76,22 @@ class FileStreamCheckpointSuite extends SparkSpec {
   test("max_bytes caps but an oversized single file is still admitted") {
     withTmpDir { tmp =>
       val in = s"$tmp/in"; val cp = s"$tmp/cp"
+      touch(in, "a_empty.txt", "")
       touch(in, "big.txt", "x" * 1000)
       touch(in, "small.txt", "x" * 10)
       val ckpt = new FileStreamCheckpoint(cp, new Configuration())
       val opts = FileSourceOptions(maxBytesPerTrigger = Some(100))
-      val b1 = ckpt.planBatch(in, opts).get
-      // big.txt sorts first and exceeds the cap alone -> still admitted
-      assert(b1.paths.map(p => new File(p).getName) === Seq("big.txt"))
-      ckpt.commitBatch(b1, Map.empty, opts)
-      val b2 = ckpt.planBatch(in, opts).get
-      assert(b2.paths.map(p => new File(p).getName) === Seq("small.txt"))
+      def next(): Seq[String] = {
+        val b = ckpt.planBatch(in, opts).get
+        ckpt.commitBatch(b, Map.empty, opts)
+        b.paths.map(p => new File(p).getName)
+      }
+      // the first ENTRY is always admitted, not the first bytes: a
+      // zero-byte file opens a batch that big.txt would overflow
+      assert(next() === Seq("a_empty.txt"))
+      // big.txt opens the next batch and exceeds the cap alone -> still admitted
+      assert(next() === Seq("big.txt"))
+      assert(next() === Seq("small.txt"))
     }
   }
 
@@ -256,43 +263,63 @@ class PipelineSuite extends SparkSpec {
   }
 
   test("exactly-once Delta sink: crash between sink write and WAL commit, no duplicates") {
-    withTmpDir { tmp =>
-      val in = s"$tmp/in"; val cp = s"$tmp/cp"; val table = s"$tmp/table"
-      writeBatchFile(in, "b0.parquet", Seq(1L, 2L, 3L))
-      // crash AFTER the Delta append succeeds but BEFORE the pipeline's
-      // WAL commit — the at-least-once window where a plain sink would
-      // double-write on replay
-      val crashAfterWrite = new java.util.concurrent.atomic.AtomicBoolean(true)
-      def mk(): Pipeline = {
-        val ckpt = new FileStreamCheckpoint(cp, conf)
-        val source = new FileSource(in, ckpt, "parquet",
-          FileSourceOptions(pattern = "*.parquet", maxFilesPerTrigger = Some(1)))
-        new Pipeline(
-          source = source,
-          reader = ctx => source.readBatch(ctx.spark, BatchInfo(ctx.batchId,
-            ctx.files.map(p => FileEntry(p, 0, 0)), Jsons.obj())),
-          transform = None,
-          writer = (df, ctx) => {
-            val meta = graft.sinks.DeltaSink.writeBatch(df, table, "pipe1", ctx.batchId)
-            if (crashAfterWrite.getAndSet(false)) sys.error("crash post-sink")
-            meta
-          },
-          spark = spark)
+    val w = new graft.delta.DeltaWriter(spark, conf)
+    // two idempotent writers keyed by one SetTransaction appId: the
+    // sink's guarded append, and a CDC merge stamping its txn onto the
+    // merge commit itself
+    def append(table: String)(df: DataFrame, ctx: BatchContext): Map[String, String] =
+      graft.sinks.DeltaSink.writeBatch(df, table, "pipe1", ctx.batchId)
+    def merge(table: String)(df: DataFrame, ctx: BatchContext): Map[String, String] =
+      if (w.lastTxnVersion(table, "pipe1").exists(_ >= ctx.batchId)) Map("skipped" -> "replay")
+      else {
+        import org.apache.spark.sql.functions.lit
+        val changes = df.withColumn(Cdc.ChangeTypeCol, lit("insert"))
+          .withColumn(Cdc.CommitVersionCol, lit(ctx.batchId))
+        val r = DeltaCdc.applyCdcDelta(spark, changes, table, Seq("id"),
+          txn = Some(("pipe1", ctx.batchId)))
+        Map("rows_out" -> r.rowsOut.toString)
       }
-      intercept[WriterError](mk().runOnce())
-      // the data landed but the batch is uncommitted in the WAL
-      val w = new graft.delta.DeltaWriter(spark, conf)
-      assert(w.read(table).count() === 3)
-      assert(!new File(s"$cp/commits/0.json").exists())
-      // replay: same batch id, sink skips via its txn watermark
-      val id = mk().runOnce()
-      assert(id === Some(0L))
-      assert(w.read(table).count() === 3, "replayed batch must not append twice")
-      assert(w.lastTxnVersion(table, "pipe1") === Some(0L))
-      // a new file still flows through as a NEW batch
-      writeBatchFile(in, "b1.parquet", Seq(9L))
-      assert(mk().runOnce() === Some(1L))
-      assert(w.read(table).count() === 4)
+    Seq[String => (DataFrame, BatchContext) => Map[String, String]](
+        append(_), merge(_)).foreach { writeTo =>
+      withTmpDir { tmp =>
+        val in = s"$tmp/in"; val cp = s"$tmp/cp"; val table = s"$tmp/table"
+        writeBatchFile(in, "b0.parquet", Seq(1L, 2L, 3L))
+        // crash AFTER the Delta write succeeds but BEFORE the pipeline's
+        // WAL commit — the at-least-once window where a plain sink would
+        // double-write on replay
+        val crashAfterWrite = new java.util.concurrent.atomic.AtomicBoolean(true)
+        def mk(): Pipeline = {
+          val ckpt = new FileStreamCheckpoint(cp, conf)
+          val source = new FileSource(in, ckpt, "parquet",
+            FileSourceOptions(pattern = "*.parquet", maxFilesPerTrigger = Some(1)))
+          new Pipeline(
+            source = source,
+            reader = ctx => source.readBatch(ctx.spark, BatchInfo(ctx.batchId,
+              ctx.files.map(p => FileEntry(p, 0, 0)), Jsons.obj())),
+            transform = None,
+            writer = (df, ctx) => {
+              val meta = writeTo(table)(df, ctx)
+              if (crashAfterWrite.getAndSet(false)) sys.error("crash post-sink")
+              meta
+            },
+            spark = spark)
+        }
+        intercept[WriterError](mk().runOnce())
+        // the data landed but the batch is uncommitted in the WAL
+        assert(w.read(table).count() === 3)
+        assert(!new File(s"$cp/commits/0.json").exists())
+        // replay: same batch id, the writer skips via its txn watermark
+        val version = w.snapshot(table).map(_.version)
+        val id = mk().runOnce()
+        assert(id === Some(0L))
+        assert(w.read(table).count() === 3, "replayed batch must not write twice")
+        assert(w.snapshot(table).map(_.version) === version, "replay commits nothing")
+        assert(w.lastTxnVersion(table, "pipe1") === Some(0L))
+        // a new file still flows through as a NEW batch
+        writeBatchFile(in, "b1.parquet", Seq(9L))
+        assert(mk().runOnce() === Some(1L))
+        assert(w.read(table).count() === 4)
+      }
     }
   }
 

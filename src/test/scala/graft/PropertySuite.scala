@@ -88,33 +88,65 @@ class PropertySuite extends SparkSpec {
   }
 
   test("delta tailing covers every dataChange add exactly once across batches") {
+    import graft.core.BatchInfo
     import graft.sources.{DeltaSourceOptions, DeltaStartOffset, DeltaTableCheckpoint}
-    forAllSampled(Gen.zip(Gen.choose(1, 6), Gen.choose(1, 3), Gen.choose(1, 3)), 6) {
-      case (nVersions, addsPerVersion, maxPer) =>
-        withTmpDir { tmp =>
-          val table = s"$tmp/table"
-          val logDir = Paths.get(table, "_delta_log")
-          Files.createDirectories(logDir)
-          val allFiles = (0 until nVersions).flatMap { v =>
-            val adds = (0 until addsPerVersion).map(i => s"f$v-$i.parquet")
-            val lines = Seq(s"""{"commitInfo": {"timestamp": ${v * 10}}}""") ++
-              (if (v == 0) Seq("""{"metaData": {"id": "t"}}""") else Nil) ++
-              adds.map(p => s"""{"add": {"path": "$p", "size": 1, "dataChange": true}}""")
-            Files.write(logDir.resolve(f"$v%020d.json"),
-              lines.mkString("\n").getBytes, StandardOpenOption.CREATE)
-            adds
-          }
-          val ckpt = new DeltaTableCheckpoint(s"$tmp/cp", new Configuration())
-          val opts = DeltaSourceOptions(startOffset = DeltaStartOffset.Earliest,
-            maxFilesPerTrigger = Some(maxPer))
-          val planned = Iterator.continually(ckpt.planBatch(table, opts))
-            .takeWhile(_.isDefined).map(_.get)
-            .map { b => ckpt.commitBatch(b, Map.empty); b.paths }
-            .toSeq
-          val names = planned.flatten.map(p => Paths.get(p).getFileName.toString)
-          assert(names.sorted === allFiles.sorted, "every add exactly once")
-          assert(planned.forall(_.size <= maxPer))
+    import graft.util.Jsons
+    // one commit: the sizes of its adds and of its cdc files — both empty
+    // is a metadata-only commit
+    val sizes = (n: Int) => Gen.listOfN(n, Gen.choose(0L, 4L))
+    val commitGen = Gen.zip(Gen.choose(0, 3).flatMap(sizes),
+      Gen.frequency(2 -> Gen.const(Nil), 1 -> Gen.choose(1, 2).flatMap(sizes)))
+    val capsGen = Gen.zip(Gen.option(Gen.choose(1, 3)), Gen.option(Gen.choose(1L, 6L)))
+    forAllSampled(Gen.zip(Gen.choose(1, 6).flatMap(Gen.listOfN(_, commitGen)), capsGen,
+        Gen.oneOf(false, true)), 16) { case (commits, (maxFiles, maxBytes), cdf) =>
+      withTmpDir { tmp =>
+        val table = s"$tmp/table"
+        val logDir = Paths.get(table, "_delta_log")
+        Files.createDirectories(logDir)
+        commits.zipWithIndex.foreach { case ((adds, cdcs), v) =>
+          val lines = Seq(s"""{"commitInfo": {"timestamp": ${v * 10}}}""") ++
+            (if (v == 0) Seq("""{"metaData": {"id": "t"}}""") else Nil) ++
+            adds.zipWithIndex.map { case (n, i) =>
+              s"""{"add": {"path": "f$v-$i.parquet", "size": $n, "dataChange": true}}""" } ++
+            cdcs.zipWithIndex.map { case (n, i) =>
+              s"""{"cdc": {"path": "c$v-$i.parquet", "size": $n, "dataChange": false}}""" }
+          Files.write(logDir.resolve(f"$v%020d.json"),
+            lines.mkString("\n").getBytes, StandardOpenOption.CREATE)
         }
+        def name(p: String) = Paths.get(p).getFileName.toString
+        // (path, kind, version); a plain batch's entries are all adds, each
+        // file stamped with its commit's timestamp (10 x version here)
+        def entries(b: BatchInfo): Seq[(String, String, Long)] =
+          Jsons.optField(b.offset, "cdf_entries").map(arr => Jsons.elems(arr).map(e =>
+            (name(e.get("path").asText()), e.get("kind").asText(), e.get("version").asLong()))
+            .toSeq).getOrElse(b.files.map(f => (name(f.path), "insert", f.mtimeMs / 10)))
+        def plan(cp: String, opts: DeltaSourceOptions): Seq[BatchInfo] = {
+          val ckpt = new DeltaTableCheckpoint(s"$tmp/$cp", new Configuration())
+          Iterator.continually(ckpt.planBatch(table, opts))
+            .takeWhile(_.isDefined).map(_.get)
+            .map { b => ckpt.commitBatch(b, Map.empty); b }
+            .toSeq
+        }
+        val opts = DeltaSourceOptions(startOffset = DeltaStartOffset.Earliest,
+          readChangeFeed = cdf)
+        val whole = plan("whole", opts)
+        val capped = plan("capped",
+          opts.copy(maxFilesPerTrigger = maxFiles, maxBytesPerTrigger = maxBytes))
+        // uncapped: one batch of every dataChange add — under the change
+        // feed a commit's cdc files stand in for its adds
+        val expected = commits.zipWithIndex.flatMap { case ((adds, cdcs), v) =>
+          if (cdf && cdcs.nonEmpty) cdcs.indices.map(i => (s"c$v-$i.parquet", "cdc", v.toLong))
+          else adds.indices.map(i => (s"f$v-$i.parquet", "insert", v.toLong))
+        }
+        assert(whole.flatMap(entries) === expected)
+        assert(whole.size <= 1)
+        assert(capped.flatMap(entries) === expected, "capped batches concatenate to the plan")
+        // the caps hold except for a batch's first entry, always admitted
+        capped.foreach { b =>
+          assert(maxFiles.forall(b.files.size <= _))
+          assert(b.files.size == 1 || maxBytes.forall(b.totalBytes <= _))
+        }
+      }
     }
   }
 
